@@ -212,6 +212,9 @@ HASH_FORCED = {
     # changes cardinality and a bare count() would join-eliminate the
     # whole fold — hash-force it like the semdedup family above.
     "pipe_semantic_decon_hotbench",
+    # same packed-bench left join, not a headliner: forced this way by
+    # tools/sf1_bench.py, which shares this set.
+    "pipe_semantic_decontamination",
 }
 
 

@@ -39,16 +39,48 @@ def pytest_addoption(parser):
     )
 
 
-def pytest_collection_modifyitems(config, items):
-    if config.getoption("--runslow") or os.environ.get(
-        "SPARK_GRAFT_RUN_SLOW"
-    ):
+def _run_slow(config) -> bool:
+    """``--runslow``, or SPARK_GRAFT_RUN_SLOW set to anything but
+    empty, ``0`` or ``false``."""
+    env = os.environ.get("SPARK_GRAFT_RUN_SLOW", "").strip().lower()
+    return config.getoption("--runslow") or env not in ("", "0", "false")
+
+
+def _collects_whole_suite(config) -> bool:
+    """True when every path argument is this directory or an ancestor."""
+    here = Path(__file__).resolve().parent
+    for arg in config.args:
+        p = (config.invocation_params.dir / arg.split("::")[0]).resolve()
+        if p != here and p not in here.parents:
+            return False
+    return True
+
+
+@pytest.hookimpl(tryfirst=True)
+def pytest_collection_modifyitems(session, config, items):
+    # Repo-relative ids, whatever directory pytest was started from.
+    ids = {
+        item: f"{item.path.relative_to(REPO).as_posix()}::"
+        f"{item.nodeid.split('::', 1)[1]}"
+        for item in items
+    }
+    # Before any deselection (tryfirst), and only when collection itself
+    # succeeded: a SLOW_TESTS id that names no test means the test was
+    # renamed and would silently run in the default tier.
+    if not session.testsfailed and _collects_whole_suite(config):
+        missing = sorted(SLOW_TESTS - set(ids.values()))
+        if missing:
+            raise pytest.UsageError(
+                f"tests/slow_tier.py names {len(missing)} uncollected "
+                f"test(s), e.g. {missing[:3]}"
+            )
+    if _run_slow(config):
         return
     skip = pytest.mark.skip(
         reason="slow tier — run with --runslow or SPARK_GRAFT_RUN_SLOW=1"
     )
     for item in items:
-        if item.nodeid in SLOW_TESTS:
+        if ids[item] in SLOW_TESTS:
             item.add_marker(skip)
 
 

@@ -6409,51 +6409,84 @@ def test_minhash_band_table_matches_expression_form(spark):
         assert e == a and len(a) > 0
 
 
-def test_shingle_pairs_table_matches_expression_form(spark):
-    """Optimization round 17: `char_shingles(impl="kernel")` (the Arrow
-    shingle-pair kernel, `minhash_kernel.shingle_pairs_table`) emits the
-    exact same distinct (doc_id, shingle) STRING rows as the expression
-    explode — on the sf0.001 corpus (ASCII fast path) and a fixture
-    covering non-ASCII (codepoint-slicing fallback), short/empty/NULL
-    text, exactly-k text and repeat-heavy text — under every df-cap
-    strategy (uncapped, absolute, fractional)."""
-    from tests.conftest import SF_SMALL
+def _shingle_forms_agree(df, caps=((None, None), (3, None), (None, 0.04))):
+    """`char_shingles(impl="kernel")` (the Arrow shingle-pair kernel,
+    `minhash_kernel.shingle_pairs_table`) emits the exact same distinct
+    (doc_id, shingle) STRING rows as the expression explode under each
+    df-cap strategy (uncapped, absolute, fractional)."""
     from usgs_lidar_spark.operators.dedup import char_shingles
 
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    fixture = spark.createDataFrame(
-        [
-            (1, "héllo wörld — ein ziemlich ünïcode Dokument hier"),
-            (2, "plain ascii body that is long enough to shingle"),
-            (3, "abababababababab"),
-            (4, "short"),
-            (5, ""),
-            (6, None),
-            (7, "exactly8"),
-        ],
-        ["doc_id", "text"],
-    )
-    for df in (docs, fixture):
-        for cap, frac in ((None, None), (3, None), (None, 0.04)):
-            e = sorted(
-                map(
-                    tuple,
-                    char_shingles(
-                        df, "text", "doc_id", 8, max_df=cap, max_df_frac=frac
-                    ).collect(),
-                )
-            )
-            a = sorted(
+    for cap, frac in caps:
+        e, a = (
+            sorted(
                 map(
                     tuple,
                     char_shingles(
                         df, "text", "doc_id", 8, max_df=cap,
-                        max_df_frac=frac, impl="kernel",
+                        max_df_frac=frac, impl=impl,
                     ).collect(),
                 )
             )
-            assert e == a, (cap, frac)
+            for impl in ("expr", "kernel")
+        )
+        assert e == a, (cap, frac)
         assert len(a) > 0
+
+
+#: Non-ASCII (codepoint-slicing fallback), short, empty, NULL, exactly-k
+#: and repeat-heavy text beside the ASCII fast path.
+_SHINGLE_EDGE_TEXTS = [
+    "héllo wörld — ein ziemlich ünïcode Dokument hier",
+    "plain ascii body that is long enough to shingle",
+    "abababababababab",
+    "short",
+    "",
+    None,
+    "exactly8",
+]
+
+
+def test_shingle_pairs_table_matches_expression_form(spark):
+    """The shingle kernel equals the expression form on the sf0.001
+    corpus (ASCII fast path at corpus scale); the edge-case fixture
+    runs in the default tier below."""
+    from tests.conftest import SF_SMALL
+
+    _shingle_forms_agree(spark.read.parquet(f"{SF_SMALL}/documents.parquet"))
+
+
+def test_shingle_pairs_table_edge_cases(spark):
+    """Default-tier smoke of the shingle kernel's exactness on the
+    edge-case fixture."""
+    _shingle_forms_agree(
+        spark.createDataFrame(
+            list(enumerate(_SHINGLE_EDGE_TEXTS, 1)), ["doc_id", "text"]
+        )
+    )
+
+
+def test_shingle_pairs_table_flushes_before_the_cap(spark, monkeypatch):
+    """With the flush cap below one document's shingle bytes, the kernel
+    flushes before every append that would cross it, so each document
+    of a multi-document input batch leaves in its own output batch; the
+    rows still equal the expression form. A document past the (patched)
+    int32 offset limit raises instead of wrapping."""
+    from usgs_lidar_spark.operators import minhash_kernel
+
+    rows = [
+        (i, t if t is None else f"{t} #{i}")
+        for i, t in enumerate(_SHINGLE_EDGE_TEXTS * 10)
+    ]
+    monkeypatch.setattr(minhash_kernel, "SHINGLE_FLUSH_BYTES", 16)
+    _shingle_forms_agree(
+        spark.createDataFrame(rows, ["doc_id", "text"]), caps=((None, None),)
+    )
+    # A document whose shingles alone overflow the offsets raises.
+    monkeypatch.setattr(minhash_kernel, "_INT32_MAX", 16)
+    with pytest.raises(Exception, match="int32 string offsets"):
+        minhash_kernel.shingle_pairs_table(
+            spark.createDataFrame(rows, ["doc_id", "text"]), "text", "doc_id"
+        ).collect()
 
 
 def test_minhash_lsh_arrow_expr_parity(spark):

@@ -1,37 +1,36 @@
-"""Capture `.explain("formatted")` for bench headliners into plans/r16/.
+"""Capture `.explain("formatted")` for bench headliners into plans/<round>/.
 
 Usage:
-    python tools/explain_r16.py before                 # all headliners
-    python tools/explain_r16.py after q1 q2 ...        # a subset
+    python tools/explain.py r17 before                 # all headliners
+    python tools/explain.py r17 after q1 q2 ...        # a subset
 
-Writes plans/r16/<query>_<tag>.txt — the optimization-round evidence
-files (OPTIMIZATION_r16.md cites them). Runs at the driver's bench
-configuration (SF_DIR=sf0.1, local[32], shuffle=32) so the captured
-plans are the ones the bench times.
+Writes plans/<round>/<query>_<tag>.txt — the optimization-round evidence
+files the OPTIMIZATION_r<N>.md logs cite. Runs at the bench
+configuration (bench.SF_DIR, the engine session) so the captured plans
+are the ones the bench times.
 """
 
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    from bench import HEADLINE
+    if len(sys.argv) < 3:
+        raise SystemExit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
+    from bench import HEADLINE, SF_DIR
     from usgs_lidar_spark.plans.queries import QUERIES
     from usgs_lidar_spark.session import get_spark
 
-    names = sys.argv[2:] or HEADLINE
-    out_dir = REPO / "plans" / "r16"
+    names = sys.argv[3:] or HEADLINE
+    out_dir = REPO / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark("explain-r16")
+    spark = get_spark(f"explain-{rnd}")
     for name in names:
         try:
             df = QUERIES[name](spark, SF_DIR)

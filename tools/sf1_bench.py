@@ -1,15 +1,15 @@
-"""sf1 bench point (SCALE.md): the five most expensive headliners one
-order of magnitude above the driver's bench scale.
+"""The scale harness (SCALE.md): the most expensive queries one order of
+magnitude above the bench scale (sf0.1).
 
-Builds an sf1-equivalent dataset under /tmp (driver testdata is
-read-only) by 10x-replicating ONLY the tables the five queries read —
+Builds an sf1-equivalent dataset under the temp dir (the test data is
+read-only) by 10x-replicating ONLY the tables the queries read —
 lineitem (~6 M rows), documents, embeddings — and symlinking the rest
 from sf0.1, then runs each query at sf0.1 (1x) and sf1 (10x) in its own
 SparkSession with an event log, reporting wall seconds and total shuffle
 bytes per scenario.
 
-Replication semantics (same contract as tools/scale_experiment.py —
-reported as measured, not as an independent-replica approximation):
+Replication semantics (reported as measured, not as an
+independent-replica approximation):
   * lineitem: replica k offsets l_orderkey by k*(max+1); part/supplier
     keys unchanged, so per-part/supplier fan-out grows 10x — a
     harder-than-linear input for the grouping queries;
@@ -18,7 +18,14 @@ reported as measured, not as an independent-replica approximation):
   * embeddings: replica k rescales components by (1 + 1e-4 k) — cell
     geometry preserved, population x10.
 
-Usage: python tools/sf1_bench.py           # prints one JSON line per scenario
+Sessions come from ``usgs_lidar_spark.session.get_spark`` plus an event
+log, so SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM size them
+(``SPARK_GRAFT_CPUS=32 SPARK_GRAFT_DRIVER_MEM=16g`` is the local[32] / 16g
+setup of the SCALE.md rows); every JSON line records the master,
+default parallelism and Spark version the scenario actually ran with.
+Work files (the sf1 build, event logs) go under ``$TMPDIR/sf1_bench``.
+
+Usage: python tools/sf1_bench.py [query ...]   # one JSON line per scenario
 """
 
 from __future__ import annotations
@@ -26,6 +33,7 @@ from __future__ import annotations
 import json
 import shutil
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -35,10 +43,11 @@ if str(REPO) not in sys.path:
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from tools.scale_experiment import make_session, shuffle_bytes  # noqa: E402
+from bench import _force  # noqa: E402
+from usgs_lidar_spark.session import get_spark  # noqa: E402
 
 SF01 = Path("/root/testdata/sf0.1")
-WORK = Path("/tmp/sf1_bench")
+WORK = Path(tempfile.gettempdir()) / "sf1_bench"
 SF1 = WORK / "sf1"
 FACTOR = 10
 
@@ -113,13 +122,46 @@ QUERIES_UNDER_TEST = [
 #: Queries whose CLAIM is steady-state serving from a persisted
 #: artifact (the bucketed edge table): warm at the TARGET sf_dir so the
 #: timed run measures serving, not the iteration-invariant build the
-#: from_edges split exists to amortize (tools/scale_round8.py measured
+#: from_edges split exists to amortize (SCALE.md's round-8 rows measured
 #: the build separately). Everything else keeps the sf0.001 warmup
 #: (plan compile only) so existing rows stay comparable.
 WARM_AT_TARGET = {
     "graph_pagerank_from_edges",
     "graph_triangles_from_edges",
 }
+
+
+def make_session(name: str, log_dir: Path):
+    """The engine session with an uncompressed, unrolled event log in
+    ``log_dir`` — the file `shuffle_bytes` reads back."""
+    log_dir.mkdir(parents=True, exist_ok=True)
+    return get_spark(
+        name,
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": log_dir.as_uri(),
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
+    )
+
+
+def shuffle_bytes(log_dir: Path) -> tuple[int, int]:
+    """(read_bytes, write_bytes) summed over every task in the app log."""
+    rd = wr = 0
+    for f in log_dir.rglob("*"):
+        if f.is_dir() or f.name.startswith(".") or f.suffix == ".crc":
+            continue
+        for line in f.read_text(errors="ignore").splitlines():
+            if '"SparkListenerTaskEnd"' not in line:
+                continue
+            ev = json.loads(line)
+            tm = ev.get("Task Metrics") or {}
+            srm = tm.get("Shuffle Read Metrics") or {}
+            swm = tm.get("Shuffle Write Metrics") or {}
+            rd += srm.get("Remote Bytes Read", 0) + srm.get("Local Bytes Read", 0)
+            wr += swm.get("Shuffle Bytes Written", 0)
+    return rd, wr
 
 
 def build_sf1() -> None:
@@ -177,38 +219,12 @@ def build_sf1() -> None:
     (SF1 / "_BUILT").touch()
 
 
-#: Queries whose expensive work lives in output expressions a bare
-#: count() lets Catalyst prune (bench.py's HASH_FORCED rationale):
-#: pipe_semantic_decontamination's packed bench side is unique per join
-#: key, so count() join-eliminates the whole per-cell cosine fold and
-#: times only scan + assignment — exactly the work the row exists to
-#: measure. Same forcing expression as bench.py's _force.
-HASH_FORCED = {
-    "pipe_semantic_decontamination",
-    # round 16: count() would prune mm_shard_bytes' entire blob
-    # assembly (its only consumers are output columns) — same forcing
-    # rationale as bench.py's entry.
-    "mm_shard_bytes",
-}
-
-
-def _force(df) -> int:
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.pmod(F.xxhash64(*df.columns), F.lit(1_000_000_007))
-        ).alias("h"),
-    ).collect()[0]
-    return int(row["n"])
-
-
 def run_query(name: str, sf_dir: str, tag: str) -> dict:
     from usgs_lidar_spark.plans.queries import QUERIES
 
     log_dir = WORK / f"log_{name}_{tag}"
     shutil.rmtree(log_dir, ignore_errors=True)
     spark = make_session(f"{name}-{tag}", log_dir)
-    force = _force if name in HASH_FORCED else (lambda df: df.count())
     # One untimed warmup at the smallest SF compiles the plan shape, so
     # the timed run measures steady-state execution (bench.py convention).
     # Persisted-artifact serving queries (WARM_AT_TARGET) additionally
@@ -221,13 +237,19 @@ def run_query(name: str, sf_dir: str, tag: str) -> dict:
         warm_log = WORK / f"log_{name}_{tag}_warm"
         shutil.rmtree(warm_log, ignore_errors=True)
         wspark = make_session(f"{name}-{tag}-warm", warm_log)
-        force(QUERIES[name](wspark, sf_dir))
+        _force(QUERIES[name](wspark, sf_dir), name)
         wspark.stop()
         spark = make_session(f"{name}-{tag}", log_dir)
-    force(QUERIES[name](spark, "/root/testdata/sf0.001"))
+    _force(QUERIES[name](spark, str(SF01.parent / "sf0.001")), name)
     t0 = time.perf_counter()
-    n_rows = force(QUERIES[name](spark, sf_dir))
+    n_rows = _force(QUERIES[name](spark, sf_dir), name)
     dt = time.perf_counter() - t0
+    sc = spark.sparkContext
+    session = {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "spark_version": spark.version,
+    }
     spark.stop()
     rd, wr = shuffle_bytes(log_dir)
     return {
@@ -236,6 +258,7 @@ def run_query(name: str, sf_dir: str, tag: str) -> dict:
         "sec": round(dt, 2),
         "shuffle_read_mb": round(rd / 1e6, 1),
         "shuffle_write_mb": round(wr / 1e6, 1),
+        **session,
     }
 
 

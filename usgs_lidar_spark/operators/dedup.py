@@ -96,7 +96,6 @@ def char_shingles(
     id_col: str,
     k: int = 8,
     max_df: int | None = 20,
-    fused_small_corpus: bool = False,
     max_df_frac: float | None = None,
     impl: str = "expr",
 ) -> DataFrame:
@@ -128,12 +127,6 @@ def char_shingles(
          BEFORE the cap filter can reject it. One computation of the
          explode+distinct subtree (a count+semi-join formulation would
          recompute it for each side of the join).
-
-    ``fused_small_corpus=True`` restores the single-shuffle
-    collect_set-then-filter form. It is ONLY safe when the hottest
-    shingle's document set fits in one aggregation buffer (small corpora /
-    unit tests): the set materializes BEFORE the cap filter rejects it, so
-    a hot shingle at crawl scale would OOM the executor. Off by default.
 
     ``max_df_frac``: the SCALE-STABLE fractional cap — "drop shingles
     present in more than this FRACTION of shingle-bearing documents".
@@ -175,8 +168,7 @@ def char_shingles(
 
         exploded = shingle_pairs_table(df, text_col, id_col, k)
         return _df_capped_pairs(
-            exploded, max_df, max_df_frac, fused_small_corpus,
-            predistinct=True,
+            exploded, max_df, max_df_frac, predistinct=True
         )
     if impl != "expr":
         raise ValueError(f"impl must be 'expr' or 'kernel', got {impl!r}")
@@ -196,22 +188,19 @@ def char_shingles(
     exploded = df.select(
         F.col(id_col).alias("doc_id"), F.explode(shingle_arr).alias("shingle")
     )
-    return _df_capped_pairs(
-        exploded, max_df, max_df_frac, fused_small_corpus, predistinct=True
-    )
+    return _df_capped_pairs(exploded, max_df, max_df_frac, predistinct=True)
 
 
 def _df_capped_pairs(
     exploded: DataFrame,
     max_df: int | None,
     max_df_frac: float | None,
-    fused_small_corpus: bool,
     predistinct: bool = False,
 ) -> DataFrame:
     """The shared document-frequency cap over an exploded (doc_id,
-    shingle) frame — char_shingles' three cap strategies (fractional /
-    absolute-window / fused collect_set; see its docstring for the
-    memory and scale contracts of each), factored out so token-gram
+    shingle) frame — char_shingles' cap strategies (fractional /
+    absolute-window / uncapped; see its docstring for the memory and
+    scale contracts of each), factored out so token-gram
     shingling reuses them verbatim.
 
     ``predistinct=True`` declares the builder already deduplicated each
@@ -241,13 +230,6 @@ def _df_capped_pairs(
         )
     if max_df is None:
         return _distinct(exploded)
-    if fused_small_corpus:
-        return (
-            exploded.groupBy("shingle")
-            .agg(F.collect_set("doc_id").alias("__ids"))
-            .filter(F.size("__ids") <= max_df)
-            .select(F.explode("__ids").alias("doc_id"), "shingle")
-        )
     pairs = _distinct(exploded)
     w = Window.partitionBy("shingle")
     return (
@@ -265,7 +247,6 @@ def token_shingles(
     lowercase: bool = True,
     max_df: int | None = None,
     max_df_frac: float | None = None,
-    fused_small_corpus: bool = False,
 ) -> DataFrame:
     """Distinct TOKEN n-grams per document: (doc_id, shingle), shingle =
     n consecutive whitespace tokens re-joined with single spaces.
@@ -308,9 +289,7 @@ def token_shingles(
     exploded = df.select(
         F.col(id_col).alias("doc_id"), F.explode(grams).alias("shingle")
     )
-    return _df_capped_pairs(
-        exploded, max_df, max_df_frac, fused_small_corpus, predistinct=True
-    )
+    return _df_capped_pairs(exploded, max_df, max_df_frac, predistinct=True)
 
 
 def source_overlap_matrix(

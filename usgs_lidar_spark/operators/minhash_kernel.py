@@ -57,6 +57,12 @@ _P4 = 0x85EBCA77C2B2AE63
 _P5 = 0x27D4EB2F165667C5
 _SEED = 42  # Spark's fixed xxhash64 seed
 
+#: `shingle_pairs_table` emits a batch once its pending shingle bytes
+#: would pass this, well under the 2**31 - 1 bytes an Arrow string
+#: column's int32 offsets can address.
+SHINGLE_FLUSH_BYTES = 256 * 1024 * 1024
+_INT32_MAX = 2**31 - 1
+
 
 def _np():
     import numpy as np
@@ -285,6 +291,8 @@ def shingle_pairs_table(
             StructField("shingle", StringType()),
         ]
     )
+    # Read at construction: the kernel is pickled by value with it.
+    flush_bytes = SHINGLE_FLUSH_BYTES
 
     def kernel(batches):
         import numpy as np
@@ -292,9 +300,6 @@ def shingle_pairs_table(
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_out = to_arrow_schema(out_schema)
-        # Flush segments well under Arrow's 2 GiB string-buffer cap so
-        # one huge input batch can never overflow the int32 offsets.
-        flush_bytes = 256 * 1024 * 1024
 
         for batch in batches:
             if batch.num_rows == 0:
@@ -342,26 +347,32 @@ def shingle_pairs_table(
                         np.ascontiguousarray(win).view(np.uint64).ravel()
                     )
                     n = codes.size
-                    data_parts.append(codes.tobytes())
-                    len_parts.append(np.full(n, k, dtype=np.int64))
-                    pending += n * k
+                    blob = codes.tobytes()
+                    lens = np.full(n, k, dtype=np.int64)
                 else:
                     # generic fallback: exact codepoint slicing
                     uniq = sorted({t[i : i + k] for i in range(len(t) - k + 1)})
                     enc = [s.encode("utf-8") for s in uniq]
                     n = len(enc)
                     blob = b"".join(enc)
-                    data_parts.append(blob)
-                    len_parts.append(
-                        np.fromiter((len(e) for e in enc), dtype=np.int64, count=n)
+                    lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=n)
+                # Flush BEFORE a document that would carry the batch past
+                # the cap, so offsets stay int32; a document that alone
+                # overflows them is an error, never a silent wrap.
+                if len(blob) > _INT32_MAX:
+                    raise ValueError(
+                        f"document {ids[row].as_py()} has {len(blob)} bytes of "
+                        "distinct shingles, past Arrow's int32 string offsets"
                     )
-                    pending += len(blob)
-                row_idx.append(row)
-                counts.append(n)
-                if pending >= flush_bytes:
+                if counts and pending + len(blob) > flush_bytes:
                     yield flush()
                     row_idx, counts, data_parts, len_parts = [], [], [], []
                     pending = 0
+                data_parts.append(blob)
+                len_parts.append(lens)
+                pending += len(blob)
+                row_idx.append(row)
+                counts.append(n)
             if counts:
                 yield flush()
 

@@ -249,8 +249,9 @@ def j4_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     case the operator exists for: too big to broadcast as exact keys
     at 100 TB, but its key SET fits a 128 KiB bitmap — the probe
     side's exchange then carries |matching| + ~1% false positives
-    instead of every lineitem (tools/scale_round16.py bloom_reduction
-    measures the cut with the broadcast fallback disabled). The bloom
+    instead of every lineitem (SCALE.md, "Round 16 (cont. 5): bloom
+    semi-join reduction", measures the cut with the broadcast fallback
+    disabled). The bloom
     is semantically transparent (no false negatives; the exact join
     drops the false positives), so the oracle is the PLAIN SQL join —
     hash equality proves the reduction changes nothing."""

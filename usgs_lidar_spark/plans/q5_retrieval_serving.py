@@ -1330,9 +1330,9 @@ def graph_triangles_from_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unique (src < dst) pairs triangle_count wants fall out of a
     bucketed-scan filter with no extra shuffle. Degree re-orientation
     inside triangle_count shuffles either way, so the serving win here
-    is exactly the build cost — measured in tools/scale_round8.py
-    (build median 13.8 s vs serve 8.2 s at the sf1 point, interleaved
-    n=3). The localCheckpoint matters: triangle_count references its
+    is exactly the build cost — measured in SCALE.md, "Round 8:
+    persisted edge table & index serving" (build median 13.8 s vs serve
+    8.2 s at the sf1 point, interleaved n=3). The localCheckpoint matters: triangle_count references its
     edge input ~6x (degree agg, two orientation joins, two wedge sides,
     closing semi-join) and bucketing buys those joins nothing after the
     degree re-orientation reshuffles anyway — without it the table
