@@ -7,7 +7,8 @@ the round driver's verification window (~12 min here vs ~31 min full;
 the round-16 driver run was cut off mid-suite and reported
 tests_ok=false with zero failures). Run everything with ``--runslow``
 or ``SPARK_GRAFT_RUN_SLOW=1`` — the builder's end-of-round protocol
-always does."""
+always does. A slow test named by its node id on the command line runs
+in either tier."""
 
 from __future__ import annotations
 
@@ -56,6 +57,17 @@ def _collects_whole_suite(config) -> bool:
     return True
 
 
+def _named_on_command_line(config) -> set[str]:
+    """Repo-relative ids of the tests named by node id in the arguments."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        p = (config.invocation_params.dir / path).resolve()
+        if sep and p.is_relative_to(REPO):
+            named.add(f"{p.relative_to(REPO).as_posix()}::{rest}")
+    return named
+
+
 @pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(session, config, items):
     # Repo-relative ids, whatever directory pytest was started from.
@@ -79,8 +91,9 @@ def pytest_collection_modifyitems(session, config, items):
     skip = pytest.mark.skip(
         reason="slow tier — run with --runslow or SPARK_GRAFT_RUN_SLOW=1"
     )
+    named = _named_on_command_line(config)
     for item in items:
-        if ids[item] in SLOW_TESTS:
+        if ids[item] in SLOW_TESTS and ids[item] not in named:
             item.add_marker(skip)
 
 

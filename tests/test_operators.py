@@ -6365,20 +6365,44 @@ def test_minhash_decon_pairs_flags_edited_copy(spark):
     assert abs(got[(2, 100)] - 33.0 / 39.0) < 1e-12
 
 
-def test_minhash_band_table_matches_expression_form(spark):
-    """Optimization round 16: the Arrow band kernel
-    (`minhash_kernel.minhash_band_table`) reproduces Spark's xxhash64
-    BIT FOR BIT, so its (doc_id, band, h) table must equal the
-    expression form `_minhash_band_long(char_shingles(max_df=None))`
+def test_minhash_band_keys_match_expression_form(spark):
+    """The band keys `minhash_decon_inline` computes — `_band_keys` over
+    each document's `_doc_shingle_arrays` — reproduce Spark's xxhash64
+    BIT FOR BIT, so (doc_id, band, h) built on the driver must equal
+    the expression form `_minhash_band_long(char_shingles(max_df=None))`
     row for row — on the sf0.001 corpus (ASCII fast path) AND on a
     synthetic non-ASCII fixture (scalar xxh64 fallback), including
     short-doc and NULL-text edge rows."""
+    import numpy as np
+
     from tests.conftest import SF_SMALL
     from usgs_lidar_spark.operators.dedup import (
         _minhash_band_long,
         char_shingles,
     )
-    from usgs_lidar_spark.operators.minhash_kernel import minhash_band_table
+    from usgs_lidar_spark.operators.minhash_kernel import (
+        _band_keys,
+        _doc_shingle_arrays,
+    )
+
+    def kernel_rows(df):
+        ids, chunks, starts, n = [], [], [], 0
+        for doc_id, text in df.select("doc_id", "text").collect():
+            if text is None:
+                continue
+            _codes, bases = _doc_shingle_arrays(text, 8)
+            if bases.size == 0:
+                continue
+            ids.append(doc_id)
+            chunks.append(bases)
+            starts.append(n)
+            n += bases.size
+        bk = _band_keys(
+            np.concatenate(chunks), np.array(starts, dtype=np.int64), 64, 32
+        )
+        return sorted(
+            (d, b, int(bk[j, b])) for j, d in enumerate(ids) for b in range(32)
+        )
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     fixtures = [
@@ -6403,9 +6427,7 @@ def test_minhash_band_table_matches_expression_form(spark):
                 ).collect(),
             )
         )
-        a = sorted(
-            map(tuple, minhash_band_table(df, "text", "doc_id", 8, 64, 32).collect())
-        )
+        a = kernel_rows(df)
         assert e == a and len(a) > 0
 
 
@@ -6487,29 +6509,6 @@ def test_shingle_pairs_table_flushes_before_the_cap(spark, monkeypatch):
         minhash_kernel.shingle_pairs_table(
             spark.createDataFrame(rows, ["doc_id", "text"]), "text", "doc_id"
         ).collect()
-
-
-def test_minhash_lsh_arrow_expr_parity(spark):
-    """Optimization round 16: `minhash_lsh_pairs` impl="arrow" (kernel
-    banding + hot-code df cap + kernel verify, default) and impl="expr"
-    (the exploded-shingle form) must agree bit for bit — same pairs,
-    same IEEE jaccard — with the cap on (the bench shape) and off, on
-    the sf0.001 corpus (27 verified pairs at max_df=20)."""
-    from tests.conftest import SF_SMALL
-    from usgs_lidar_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    key = lambda df: sorted(  # noqa: E731
-        (r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()
-    )
-    for max_df in (20, None):
-        a = key(
-            minhash_lsh_pairs(docs, "text", "doc_id", max_df=max_df, impl="arrow")
-        )
-        e = key(
-            minhash_lsh_pairs(docs, "text", "doc_id", max_df=max_df, impl="expr")
-        )
-        assert a == e and len(a) > 0
 
 
 def test_minhash_decon_arrow_expr_parity(spark):
@@ -6630,12 +6629,14 @@ def test_knn_label_vote_arrow_expr_parity(spark):
 def test_kernel_collect_budget_falls_back_to_expr(spark, monkeypatch):
     """Optimization round 17 (VERDICT-r16 item 7): the kernels' driver-
     side collects are row-budgeted. At a cap smaller than the seed/bench
-    frame, `knn_label_vote(impl="arrow")` and
-    `semantic_contamination(impl="auto")` must WARN and fall back to the
-    expression plan — identical rows (parity is already pinned
+    frame, `semantic_contamination(impl="auto")` must WARN and fall back
+    to the expression plan — identical rows (parity is already pinned
     elsewhere; this pins the fallback actually engaging), no MapInArrow
     node, and the collect itself is LIMIT-bounded so the over-budget
-    frame never materializes on the driver."""
+    frame never materializes on the driver. `knn_label_vote(impl=
+    "arrow")` has no bounded fallback (its expression plan broadcasts
+    every seed in one row), so it raises, naming the bounded
+    alternatives."""
     import warnings
 
     from usgs_lidar_spark.operators.similarity import (
@@ -6653,9 +6654,6 @@ def test_kernel_collect_budget_falls_back_to_expr(spark, monkeypatch):
         for r in emb.filter(F.col("vec_id") < 8).collect()
     ]
 
-    expected_knn = sorted(
-        map(tuple, knn_label_vote(corpus, seeds, k=5, impl="expr").collect())
-    )
     expected_sc = sorted(
         map(
             tuple,
@@ -6667,19 +6665,21 @@ def test_kernel_collect_budget_falls_back_to_expr(spark, monkeypatch):
     )
 
     monkeypatch.setenv("SPARK_GRAFT_KERNEL_COLLECT_ROWS", "3")
+    with pytest.raises(ValueError, match="budget") as exc:
+        knn_label_vote(corpus, seeds, k=5, impl="arrow")
+    assert "knn_label_vote_ivf" in str(exc.value)
+    assert 'impl="expr"' in str(exc.value)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        knn_df = knn_label_vote(corpus, seeds, k=5, impl="arrow")
         sc_df = semantic_contamination(
             corpus.select("vec_id", "embedding"), bench, cents,
             threshold=0.9, impl="auto",
         )
-        assert sum("budget" in str(x.message) for x in w) == 2
-    for df, expected in ((knn_df, expected_knn), (sc_df, expected_sc)):
-        assert "MapInArrow" not in df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "simple"
-        )
-        assert sorted(map(tuple, df.collect())) == expected
+        assert sum("budget" in str(x.message) for x in w) == 1
+    assert "MapInArrow" not in sc_df._sc._jvm.PythonSQLUtils.explainString(
+        sc_df._jdf.queryExecution(), "simple"
+    )
+    assert sorted(map(tuple, sc_df.collect())) == expected_sc
     monkeypatch.setenv("SPARK_GRAFT_KERNEL_COLLECT_ROWS", "1000000")
     assert "MapInArrow" in (
         lambda d: d._sc._jvm.PythonSQLUtils.explainString(
@@ -6688,81 +6688,96 @@ def test_kernel_collect_budget_falls_back_to_expr(spark, monkeypatch):
     )(knn_label_vote(corpus, seeds, k=5, impl="arrow"))
 
 
-def test_ivf_assign_arrow_parity(spark):
-    """Optimization round 16: `ivf_assign`'s Arrow kernel (the `auto`
-    strategy past the expression budget) must agree BIT FOR BIT with
-    both expression strategies — same `__cid` argmax (max rounded sim,
-    min cid on ties) and same `__csim` — including zero-norm rows, a
-    zero-norm centroid, exact-duplicate vectors (sim-1.0 ties) and
-    scaled copies."""
+def _ivf_assign_forms_agree(corpus, cents):
+    """`ivf_assign`'s Arrow kernel, with `keep_sim` off and on, equals
+    `method="broadcast"` on every quantizer and `method="expr"` on one
+    of at most 8 centroids — same `__cid` argmax (max rounded sim, min
+    cid on ties) and same `__csim`. Returns the kernel's
+    (vec_id, __cid, __csim) rows."""
     from usgs_lidar_spark.operators.similarity import (
         _ivf_assign_arrow,
         ivf_assign,
     )
-    from tests.conftest import SF_SMALL
 
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    dim = len(emb.first()["embedding"])
-    extra = spark.createDataFrame(
-        [(900001, [0.0] * dim)], "vec_id long, embedding array<float>"
-    )
-    dups = emb.filter(F.col("vec_id") < 12).select(
-        (F.col("vec_id") + 910000).alias("vec_id"), "embedding"
-    )
-    scaled = emb.filter(F.col("vec_id") < 12).select(
-        (F.col("vec_id") + 920000).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: (x * F.lit(0.5)).cast("float")
-        ).alias("embedding"),
-    )
-    corpus = emb.unionByName(extra).unionByName(dups).unionByName(scaled)
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < 90).collect()
-    ]
-    cents.append((990, [0.0] * dim))  # zero-norm centroid
-    for ks in (False, True):
-        cols = ["vec_id", "__cid"] + (["__csim"] if ks else [])
-        k = sorted(
+    cols = ["vec_id", "__cid", "__csim"]
+    got = {
+        ks: sorted(
             map(
                 tuple,
                 _ivf_assign_arrow(corpus, cents, "embedding", 4, ks)
-                .select(*cols)
+                .select(*cols[: 2 + ks])
                 .collect(),
             )
         )
-        b = sorted(
+        for ks in (False, True)
+    }
+    for method in ("broadcast", "expr") if len(cents) <= 8 else ("broadcast",):
+        e = sorted(
             map(
                 tuple,
                 ivf_assign(
-                    corpus, cents, "embedding", 4,
-                    method="broadcast", keep_sim=ks,
+                    corpus, cents, "embedding", 4, method=method, keep_sim=True
                 )
                 .select(*cols)
                 .collect(),
             )
         )
-        assert k == b
-    # expression strategy on a small quantizer
-    k8 = sorted(
-        map(
-            tuple,
-            _ivf_assign_arrow(corpus, cents[:8], "embedding", 4, False)
-            .select("vec_id", "__cid")
-            .collect(),
-        )
+        # keep_sim only attaches `__csim`; the ids are unique, so the
+        # sorted order is the same without it.
+        assert got[True] == e, method
+        assert got[False] == [r[:2] for r in e], method
+    return got[True]
+
+
+def test_ivf_assign_arrow_edge_cases(spark):
+    """Default-tier smoke of the IVF argmax kernel's exactness on a small
+    in-memory fixture: a zero-norm row, a zero-norm centroid, exact
+    duplicates and half-scaled copies of centroid vectors (sim-1.0
+    rows), and a centroid that is a scaled copy of another, so every
+    row ties between the two and the lower cid must win."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(7)
+    f32 = lambda x: float(np.float32(x))  # noqa: E731
+    base = [[f32(rng.uniform(-1, 1)) for _ in range(4)] for _ in range(12)]
+    rows = [(i, v) for i, v in enumerate(base)]
+    rows.append((100, [0.0] * 4))  # zero-norm row
+    rows += [(200 + i, base[i]) for i in range(4)]  # duplicates
+    rows += [(300 + i, [x * 0.5 for x in base[i]]) for i in range(4)]
+    # cached: each re-scan of a Python-list frame re-ships the list
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).cache()
+    cents = [(10 + i, base[i]) for i in range(5)]
+    cents.append((99, [0.0] * 4))  # zero-norm centroid
+    cents.append((7, [x * 2.0 for x in base[1]]))  # ties with cid 11
+    cents.append((15, base[5]))
+    got = {r[0]: r[1:] for r in _ivf_assign_forms_agree(corpus, cents)}
+    assert len(got) == len(rows)
+    # the tie on base[1]'s direction resolves to the lower cid
+    assert got[1] == got[201] == got[301] == (7, 1.0)
+    assert got[100][1] == 0.0
+    corpus.unpersist()
+
+
+def test_ivf_assign_arrow_parity(spark):
+    """Optimization round 16: `ivf_assign`'s Arrow kernel (the `auto`
+    strategy past the expression budget) must agree BIT FOR BIT with
+    both expression strategies on the sf0.001 embeddings; the edge-case
+    fixture runs in the default tier above."""
+    from tests.conftest import SF_SMALL
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
+        "vec_id", "embedding"
     )
-    e8 = sorted(
-        map(
-            tuple,
-            ivf_assign(corpus, cents[:8], "embedding", 4, method="expr")
-            .select("vec_id", "__cid")
-            .collect(),
-        )
-    )
-    assert k8 == e8
+    cents = [
+        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
+        for r in emb.filter(F.col("vec_id") < 90).collect()
+    ]
+    _ivf_assign_forms_agree(emb, cents)
+    _ivf_assign_forms_agree(emb, cents[:8])
 
 
 def test_semantic_contamination_arrow_parity(spark):

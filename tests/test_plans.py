@@ -133,11 +133,10 @@ HEADLINE_DIGESTS = {
     "r1_session_window": {"shuffle_exchange": 1},
     "asof_purchase_before_click": {"shuffle_exchange": 1},
     # dedup_minhash_lsh is the banded LSH pipeline (shingle agg + 4
-    # band self-join legs + verify); re-audited in optimization round
-    # 16 twice: the Arrow kernel twin (impl="arrow", 1 shuffle)
-    # measured SLOWER steady-state because only this pure-Catalyst form
-    # is plan-equal across constructions and reuses its cached
-    # shingle/band frames (see minhash_lsh_pairs docstring); then
+    # band self-join legs + verify). An Arrow kernel twin (1 shuffle)
+    # measured SLOWER steady-state and was deleted: only this
+    # pure-Catalyst form is plan-equal across constructions and reuses
+    # its cached shingle/band frames (see minhash_lsh_pairs docstring).
     # array_distinct-before-explode deleted the exploded-pair
     # `.distinct()` exchange from every shingle leg (17 -> 11
     # shuffles; same legs, same joins).

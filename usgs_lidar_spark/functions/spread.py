@@ -1,5 +1,5 @@
 """Round-robin spread for map-only Arrow kernels — the shared helper
-behind every mapInArrow kernel's input partitioning (8 call sites in
+behind every mapInArrow kernel's input partitioning (7 call sites in
 operators/similarity.py and operators/minhash_kernel.py).
 
 Rule (unchanged from optimization round 16): when the pruned input scan

@@ -512,7 +512,6 @@ def minhash_lsh_pairs(
     bands: int = 32,
     threshold: float = 0.6,
     max_df: int | None = 20,
-    impl: str = "expr",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash banding, verified with
     exact Jaccard. rows-per-band = num_perm // bands; two docs collide if
@@ -520,73 +519,10 @@ def minhash_lsh_pairs(
     hash — never an all-pairs comparison). Candidates are then verified
     with exact shingle Jaccard so the output has no false positives.
 
-    ``impl`` (optimization round 16, guide §1/§4.2/§8): ``"arrow"``
-    computes signatures+bands map-side in one Arrow kernel pass with a
-    BIT-EXACT NumPy reproduction of the xxhash64 construction
-    (`minhash_kernel`): the df cap becomes one 8-byte-code aggregate +
-    a broadcast hot-code set, banding rides the scan (no shingle
-    explode, no distinct shuffle, no 64-column aggregate), and
-    verification re-shingles only the candidate pairs' raw texts inside
-    a second kernel instead of the k-times-inflated (id, shingle) join.
-    Output is row-for-row identical to the expression form (parity
-    pinned by `test_minhash_lsh_arrow_expr_parity`).
-
-    The DEFAULT stays ``"expr"`` after measuring both (guide §1.1
-    "measure, don't guess"): the expression form is pure Catalyst, so
-    its cached shingle/band frames are plan-equal across repeated
-    constructions and every re-run (and every same-session consumer —
-    cluster collapse, keep-best, v7) reuses them, giving a 2.9 s
-    steady-state at sf0.1 vs 6.6 s for the kernel path, whose eager
-    hot-code job and Python-function plans can never hit the JVM plan
-    cache (measured: arrow cold 7.5 s / steady 6.6 s; expr cold 10.4 s /
-    steady 2.9 s; `pipe_end_to_end_v7` 9.6 s expr vs 15.7+ s arrow).
-    The kernel form remains the right shape where there is no reusable
-    self-join state — the cross-set decon (`minhash_decon_pairs`,
-    default arrow, 10.8 s -> 1.9 s) — and is kept selectable here for
-    single-pass callers."""
-    if impl == "arrow":
-        from usgs_lidar_spark.operators import minhash_kernel as mk
-
-        hot_b = None
-        if max_df is not None:
-            hot_b = mk.collect_hot_codes(df, text_col, id_col, k, max_df)
-        # the candidate self-join consumes the band table twice — pin it
-        # once (the expression form caches its long-form twin for the
-        # same reason)
-        band = mk.minhash_band_table(
-            df, text_col, id_col, k, num_perm, bands, exclude=hot_b
-        ).cache()
-        l, r = band.alias("l"), band.alias("r")
-        candidates = (
-            l.join(
-                r,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.h") == F.col("r.h"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(
-                F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
-            )
-            .distinct()
-        )
-        t = df.select(F.col(id_col), F.col(text_col))
-        pairs = candidates.join(
-            t.select(
-                F.col(id_col).alias("id_a"), F.col(text_col).alias("text_a")
-            ),
-            "id_a",
-        ).join(
-            t.select(
-                F.col(id_col).alias("id_b"), F.col(text_col).alias("text_b")
-            ),
-            "id_b",
-        )
-        return mk.jaccard_verify_pairs(
-            pairs, "id_a", "id_b", "text_a", "text_b", k,
-            threshold=threshold, exclude=hot_b,
-        )
-    if impl != "expr":
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
+    Only the expression form exists: its cached shingle and band frames
+    are plan-equal across constructions, so every re-run and same-session
+    consumer (cluster collapse, keep-best, v7) reuses them — an Arrow
+    kernel twin measured slower (sf0.1 steady state 6.6 s vs 2.9 s)."""
     rows_per_band = num_perm // bands
     # One shingle pass for the whole pipeline: signatures, per-doc sizes,
     # and candidate verification all reuse the cached (doc_id, shingle)
@@ -690,7 +626,6 @@ def minhash_decon_pairs(
     num_perm: int = 64,
     bands: int = 32,
     threshold: float = 0.6,
-    broadcast_bench: bool = True,
     impl: str = "arrow",
 ) -> DataFrame:
     """FUZZY benchmark decontamination: (corpus_id, bench_id, jaccard)
@@ -721,11 +656,10 @@ def minhash_decon_pairs(
     restricted to candidates, linear in corpus size.
 
     Scale: the benchmark side of a real run is a few thousand eval
-    documents — `broadcast_bench` (default) hints its band table
-    (n_bench x bands rows of (id, band, h)) broadcast so the candidate
-    join is map-side and the corpus never shuffles for it; past ~1e6
-    eval docs drop the hint and let AQE decide. The verify joins move
-    (candidate id, shingle) rows only.
+    documents, so its band table (n_bench x bands rows of (id, band, h))
+    is broadcast and the candidate join is map-side — the corpus never
+    shuffles for it. The verify joins move (candidate id, shingle) rows
+    only.
 
     ``impl`` (optimization round 16, guide §4.2/§8): ``"arrow"``
     (default) fuses the whole operator into ONE corpus scan —
@@ -738,7 +672,7 @@ def minhash_decon_pairs(
     row-for-row identical to the expression form (parity pinned by
     `test_minhash_decon_arrow_expr_parity`); measured 10.8 s → ~1 s on
     the sf0.1 fuzzy-decon bench. ``"expr"`` keeps the pure-JVM
-    banded-join form (`broadcast_bench` applies to it only)."""
+    banded-join form."""
     if impl == "arrow":
         from usgs_lidar_spark.operators.minhash_kernel import minhash_decon_inline
 
@@ -750,11 +684,11 @@ def minhash_decon_pairs(
     c_sh = char_shingles(corpus, text_col, id_col, k, max_df=None).cache()
     b_sh = char_shingles(benchmark, text_col, id_col, k, max_df=None).cache()
     c_long = _minhash_band_long(c_sh, num_perm, bands)
-    b_long = _minhash_band_long(b_sh, num_perm, bands).select(
-        F.col("doc_id").alias("bench_id"), "band", "h"
+    b_long = F.broadcast(
+        _minhash_band_long(b_sh, num_perm, bands).select(
+            F.col("doc_id").alias("bench_id"), "band", "h"
+        )
     )
-    if broadcast_bench:
-        b_long = F.broadcast(b_long)
     candidates = (
         c_long.join(b_long, ["band", "h"])
         .select("doc_id", "bench_id")

@@ -1,24 +1,29 @@
-"""Arrow-vectorized MinHash banding + inline exact-Jaccard decon kernel
-(optimization round 16, guide §4.2 / §8).
+"""Arrow-vectorized char-shingle and inline exact-Jaccard decon kernels
+(optimization rounds 16-17, guide §4.2 / §8).
 
 The expression-form MinHash pipeline (`dedup.char_shingles` →
 `_minhash_band_long`) pays, per run: an explode to one row per
 (doc, shingle) STRING, a distinct shuffle of those strings, a 64-column
 xxhash64 aggregate, a band explode, and — for verification — a
 pairs x shingles equi-join that inflates every document to ~k times its
-byte size (a 300-byte doc becomes ~290 (id, 8-char shingle) rows
-≈ 4.6 KB each). These kernels compute the same stages map-side, inside
-the scan, with NO shuffle of shingles at all.
+byte size. Two kernels here compute stages of it map-side, inside the
+scan:
+
+  * `shingle_pairs_table` — the distinct (doc_id, shingle) rows of
+    `char_shingles`, built from slices of the batch's text buffer.
+  * `minhash_decon_inline` — the whole cross-set decon
+    (`dedup.minhash_decon_pairs`) in ONE corpus scan.
 
 Exactness contract — this module is NOT a different algorithm, it is
 the same one evaluated in NumPy:
 
   * The per-shingle hash is Spark's `xxhash64` REPRODUCED BIT FOR BIT
-    (`_XXH64` vectorized below; parity pinned by
-    `test_minhash_band_table_matches_expression_form`): signature i is
+    (`_xxh64_long` / `_xxh64_bytes` below; parity pinned by
+    `test_minhash_band_keys_match_expression_form`): signature i is
     ``min over shingles of xxhash64(shingle, i)`` with the same signed
     64-bit min, and the band key is ``xxhash64(mh_{rb}, .., mh_{rb+r-1})``
-    with the same seed-chaining — so the (id, band, h) band table equals
+    with the same seed-chaining — so `_band_keys` over
+    `_doc_shingle_arrays` equals
     `_minhash_band_long(char_shingles(df, max_df=None))` EXACTLY, row
     for row, and every candidate set downstream is unchanged.
   * Verification counts are EXACT distinct-shingle set operations: for
@@ -29,16 +34,15 @@ the same one evaluated in NumPy:
   * jaccard = n_inter / (n_a + n_b - n_inter) is the same single IEEE
     double division the expression form and the DuckDB oracles perform.
 
-Scale posture: `minhash_band_table` is map-only (band hashes ride the
-scan; nothing shuffles until the caller's candidate join), and
-`minhash_decon_inline` is the guide-§8 end state for cross-set decon —
-the benchmark side (a few thousand eval docs by contract) is collected
-once, banded in the driver, and broadcast; the corpus is scanned ONCE,
-each task probing the broadcast band dict and exact-verifying its own
-candidates, so the corpus never shuffles and the only exchange in the
-whole query is the scale-adaptive round-robin spread that engages when
-the scan has fewer splits than the cluster has slots (tiny inputs
-only — at real scale the guard is false and the plan is pure map).
+Scale posture: `minhash_decon_inline` is the guide-§8 end state for
+cross-set decon — the benchmark side (a few thousand eval docs by
+contract) is collected once, banded in the driver, and broadcast; the
+corpus is scanned ONCE, each task probing the broadcast band dict and
+exact-verifying its own candidates, so the corpus never shuffles and
+the only exchange in the whole query is the scale-adaptive round-robin
+spread that engages when the scan has fewer splits than the cluster
+has slots (tiny inputs only — at real scale the guard is false and the
+plan is pure map).
 """
 
 from __future__ import annotations
@@ -94,16 +98,6 @@ def _xxh64_long(v, seed):
     h = seed + np.uint64(_P5) + np.uint64(8)
     h = h ^ (_rotl(v * np.uint64(_P2), 31) * np.uint64(_P1))
     h = _rotl(h, 27) * np.uint64(_P1) + np.uint64(_P4)
-    return _fmix(h)
-
-
-def _xxh64_int(i, seed):
-    """Spark `XXH64.hashInt` — the seed-chained tail a literal INT arg
-    of `xxhash64(shingle, lit(i))` contributes."""
-    np = _np()
-    h = seed + np.uint64(_P5) + np.uint64(4)
-    h = h ^ (np.uint64(i & 0xFFFFFFFF) * np.uint64(_P1))
-    h = _rotl(h, 23) * np.uint64(_P2) + np.uint64(_P3)
     return _fmix(h)
 
 
@@ -198,58 +192,6 @@ def _band_keys(bases_concat, starts, num_perm: int, bands: int):
             h = _xxh64_long(sig[:, b * rows_per_band + r].view(np.uint64), h)
         out[:, b] = h.view(np.int64)
     return out
-
-
-def _drop_hot(codes, bases, hot):
-    """Filter a doc's aligned (codes, bases) arrays to codes NOT in the
-    sorted hot-shingle array — the df-cap exclusion (`char_shingles`
-    max_df) applied kernel-side."""
-    np = _np()
-    if hot is None or hot.size == 0 or codes.size == 0:
-        return codes, bases
-    keep = ~np.isin(codes, hot, assume_unique=False)
-    return codes[keep], bases[keep]
-
-
-def shingle_codes_table(
-    df: DataFrame, text_col: str, id_col: str, k: int = 8
-) -> DataFrame:
-    """One `code` (long) row per DISTINCT (document, shingle) — the
-    map-only input to the document-frequency aggregate that computes
-    the df cap's hot-shingle set: groupBy(code).count() == each
-    shingle's df, because codes are emitted once per containing doc.
-    Shuffles 8-byte codes with map-side partial aggregation instead of
-    the expression form's (doc_id, 8-char string) exploded rows."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType([StructField("code", LongType())])
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_out = to_arrow_schema(out_schema)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            chunks = []
-            for t in batch.column(0).to_pylist():
-                if t is None:
-                    continue
-                codes, _bases = _doc_shingle_arrays(t, k)
-                if codes.size:
-                    chunks.append(codes)
-            if not chunks:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(chunks).view(np.int64), type=pa.int64())],
-                schema=arrow_out,
-            )
-
-    c = df.select(F.col(text_col))
-    c = spread_for_kernel(c)
-    return c.mapInArrow(kernel, out_schema)
 
 
 def shingle_pairs_table(
@@ -375,105 +317,6 @@ def shingle_pairs_table(
                 counts.append(n)
             if counts:
                 yield flush()
-
-    c = df.select(F.col(id_col), F.col(text_col))
-    c = spread_for_kernel(c)
-    return c.mapInArrow(kernel, out_schema)
-
-
-def collect_hot_codes(df: DataFrame, text_col: str, id_col: str, k: int, max_df: int):
-    """The df-cap's hot-shingle set as a broadcast sorted uint64 array:
-    codes whose document frequency exceeds ``max_df``. One eager job
-    (kernel scan + 8-byte-code aggregate + bounded collect — the hot
-    set is a vanishing fraction of distinct shingles by construction:
-    it IS the stop-shingle tail the cap exists to drop)."""
-    np = _np()
-    rows = (
-        shingle_codes_table(df, text_col, id_col, k)
-        .groupBy("code")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("code")
-        .collect()
-    )
-    hot = np.sort(np.array([r[0] for r in rows], dtype=np.int64).view(np.uint64))
-    return df.sparkSession.sparkContext.broadcast(hot)
-
-
-def minhash_band_table(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 8,
-    num_perm: int = 64,
-    bands: int = 32,
-    exclude=None,
-) -> DataFrame:
-    """(id, band, h) long-form MinHash band hashes, computed map-only in
-    one Arrow kernel pass over the (id, text) scan — row-for-row equal
-    to ``_minhash_band_long(char_shingles(df, text, id, k,
-    max_df=None), num_perm, bands)`` (pinned by plan/parity tests), but
-    with no shingle explode, no distinct shuffle and no 64-column
-    aggregate. Documents shorter than ``k`` produce no rows (no
-    shingles → no signature), same as the expression form.
-
-    ``exclude``: optional broadcast sorted-uint64 hot-code array
-    (`collect_hot_codes`) — signatures are computed over the df-CAPPED
-    shingle set, matching `char_shingles(max_df=...)`; a doc whose
-    capped set is empty produces no rows (same as the expression
-    form: no surviving shingles → no signature)."""
-    if num_perm % bands:
-        raise ValueError(f"num_perm={num_perm} not divisible by bands={bands}")
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    id_type = df.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("doc_id", id_type),
-            StructField("band", IntegerType()),
-            StructField("h", LongType()),
-        ]
-    )
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_out = to_arrow_schema(out_schema)
-        band_ids = np.arange(bands, dtype=np.int32)
-        hot = exclude.value if exclude is not None else None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            chunks, offs, keep_rows = [], [0], []
-            for r, t in enumerate(texts):
-                if t is None:
-                    continue
-                codes, bases = _doc_shingle_arrays(t, k)
-                codes, bases = _drop_hot(codes, bases, hot)
-                if bases.size == 0:
-                    continue
-                chunks.append(bases)
-                offs.append(offs[-1] + bases.size)
-                keep_rows.append(r)
-            if not chunks:
-                continue
-            starts = np.array(offs[:-1], dtype=np.int64)
-            bk = _band_keys(np.concatenate(chunks), starts, num_perm, bands)
-            n_docs = len(keep_rows)
-            out_ids = pc.take(ids, pa.array(np.repeat(keep_rows, bands), type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    out_ids,
-                    pa.array(np.tile(band_ids, n_docs), type=pa.int32()),
-                    pa.array(bk.reshape(-1), type=pa.int64()),
-                ],
-                schema=arrow_out,
-            )
 
     c = df.select(F.col(id_col), F.col(text_col))
     c = spread_for_kernel(c)
@@ -609,89 +452,3 @@ def minhash_decon_inline(
     c = corpus.select(F.col(id_col), F.col(text_col))
     c = spread_for_kernel(c)
     return c.mapInArrow(kernel, out_schema)
-
-
-def jaccard_verify_pairs(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    text_a: str = "text_a",
-    text_b: str = "text_b",
-    k: int = 8,
-    threshold: float | None = None,
-    exclude=None,
-) -> DataFrame:
-    """Exact (optionally df-capped) shingle-set Jaccard per candidate
-    pair, from the two raw texts: (id_a, id_b, jaccard), filtered to
-    jaccard >= threshold inside the kernel. Counts are the same exact
-    distinct-shingle set operations the expression form's verify joins
-    compute (injective ASCII codes; `exclude` applies the hot-code df
-    cap to both sides), and the division is the same IEEE double op —
-    but the candidate texts move ONCE into the kernel instead of being
-    re-exploded into ~k-times-their-size (id, shingle) join rows
-    (guide §8: the raw text IS smaller than its exploded proxy).
-    Per-batch memoization re-shingles each distinct doc once however
-    many pairs it appears in."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    a_type = pairs.schema[id_a].dataType
-    b_type = pairs.schema[id_b].dataType
-    out_schema = StructType(
-        [
-            StructField(id_a, a_type),
-            StructField(id_b, b_type),
-            StructField("jaccard", DoubleType()),
-        ]
-    )
-    thr = None if threshold is None else float(threshold)
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_out = to_arrow_schema(out_schema)
-        hot = exclude.value if exclude is not None else None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ia, ib = batch.column(0), batch.column(1)
-            ta = batch.column(2).to_pylist()
-            tb = batch.column(3).to_pylist()
-            ia_py, ib_py = ia.to_pylist(), ib.to_pylist()
-            memo: dict = {}
-
-            def capped_codes(doc_key, txt):
-                got = memo.get(doc_key)
-                if got is None:
-                    codes, bases = _doc_shingle_arrays(txt, k)
-                    got, _ = _drop_hot(codes, bases, hot)
-                    memo[doc_key] = got
-                return got
-
-            keep, jac = [], []
-            for r in range(batch.num_rows):
-                sa = capped_codes(("a", ia_py[r]), ta[r])
-                sb = capped_codes(("b", ib_py[r]), tb[r])
-                inter = int(np.intersect1d(sa, sb, assume_unique=True).size)
-                union = int(sa.size) + int(sb.size) - inter
-                j = float(inter) / float(union) if union else 0.0
-                if thr is not None and not j >= thr:
-                    continue
-                keep.append(r)
-                jac.append(j)
-            if not keep:
-                continue
-            take = pa.array(keep, type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pc.take(ia, take),
-                    pc.take(ib, take),
-                    pa.array(jac, type=pa.float64()),
-                ],
-                schema=arrow_out,
-            )
-
-    cols = pairs.select(F.col(id_a), F.col(id_b), F.col(text_a), F.col(text_b))
-    return cols.mapInArrow(kernel, out_schema)

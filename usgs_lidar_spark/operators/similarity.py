@@ -214,8 +214,9 @@ _EXPR_PATH_MAX_NODES = 1024
 
 class _KernelBudgetExceeded(Exception):
     """A kernel's driver-side collect (seed frame / benchmark vectors)
-    exceeded the configured row budget — the dispatcher catches this and
-    falls back to the distributed expression plan."""
+    exceeded the configured row budget. `semantic_contamination` falls
+    back to its distributed expression plan; `knn_label_vote` raises,
+    because its expression plan is no bound."""
 
 
 def _kernel_collect_max_rows() -> int:
@@ -242,8 +243,7 @@ def _collect_capped(df: DataFrame, what: str) -> list:
     if len(rows) > cap:
         raise _KernelBudgetExceeded(
             f"{what} exceeds the kernel driver-collect budget "
-            f"({cap} rows, SPARK_GRAFT_KERNEL_COLLECT_ROWS) — "
-            "falling back to the distributed expression plan"
+            f"({cap} rows, SPARK_GRAFT_KERNEL_COLLECT_ROWS)"
         )
     return rows
 
@@ -1573,7 +1573,10 @@ def semantic_contamination(
             # the bench as a distributed/broadcast frame.
             import warnings
 
-            warnings.warn(str(e), stacklevel=2)
+            warnings.warn(
+                f"{e} — falling back to the distributed expression plan",
+                stacklevel=2,
+            )
 
     ca_cols = [
         F.col(id_col).alias("__id"),
@@ -1687,7 +1690,6 @@ def ivf_append(
     centroids: list[tuple[int, list[float]]] | DataFrame,
     vec_col: str = "embedding",
     round_digits: int = 4,
-    method: str = "auto",
 ) -> DataFrame:
     """Incremental IVF index append: assign ONLY the new vectors with the
     EXISTING coarse quantizer and union them into the already-assigned
@@ -1712,7 +1714,6 @@ def ivf_append(
         centroids,
         vec_col,
         round_digits,
-        method,
         keep_sim="__csim" in base_assigned.columns,
     )
     return base_assigned.unionByName(newly.select(*base_assigned.columns))
@@ -1724,7 +1725,6 @@ def ivf_drift_metrics(
     centroids_new: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
     round_digits: int = 4,
-    method: str = "auto",
 ) -> DataFrame:
     """Per-cell staleness report for an incrementally-maintained IVF
     index: under the CURRENT quantizer (`centroids_old`), each cell's
@@ -1744,15 +1744,12 @@ def ivf_drift_metrics(
     integer columns."""
     scale = 10**round_digits
     both = ivf_assign(
-        ivf_assign(
-            corpus, centroids_old, vec_col, round_digits, method, keep_sim=True
-        )
+        ivf_assign(corpus, centroids_old, vec_col, round_digits, keep_sim=True)
         .withColumnRenamed("__cid", "__cid_old")
         .withColumnRenamed("__csim", "__csim_old"),
         centroids_new,
         vec_col,
         round_digits,
-        method,
     )
     return (
         both.groupBy(F.col("__cid_old").alias("cid"))
@@ -2098,7 +2095,6 @@ def write_ivf_index(
     path: str,
     vec_col: str = "embedding",
     round_digits: int = 4,
-    method: str = "auto",
 ) -> None:
     """Materialize the IVF index as a CELL-PARTITIONED parquet dataset:
     one hive partition per coarse cell (`cid=<n>/`), plus the quantizer
@@ -2113,7 +2109,7 @@ def write_ivf_index(
     from usgs_lidar_spark.operators.retrieval import _write_schema_sidecar
 
     spark = corpus.sparkSession
-    assigned = ivf_assign(corpus, centroids, vec_col, round_digits, method)
+    assigned = ivf_assign(corpus, centroids, vec_col, round_digits)
     cells = assigned.withColumnRenamed("__cid", "cid")
     cells.write.mode("overwrite").partitionBy("cid").parquet(path)
     # schema sidecar: an EMPTY corpus writes no cell files; readers
@@ -2130,7 +2126,6 @@ def append_to_ivf_index(
     path: str,
     vec_col: str = "embedding",
     round_digits: int = 4,
-    method: str = "auto",
 ) -> None:
     """Incrementally grow a `write_ivf_index` dataset: assign ONLY the
     new batch with the STORED quantizer (sidecar) and append its rows
@@ -2143,7 +2138,7 @@ def append_to_ivf_index(
     batch's cells' directories."""
     spark = new_vectors.sparkSession
     centroids = read_ivf_centroids(spark, path)
-    assigned = ivf_assign(new_vectors, centroids, vec_col, round_digits, method)
+    assigned = ivf_assign(new_vectors, centroids, vec_col, round_digits)
     assigned.withColumnRenamed("__cid", "cid").write.mode(
         "append"
     ).partitionBy("cid").parquet(path)
@@ -2168,7 +2163,6 @@ def ivf_topk_from_index(
     k: int = 5,
     n_probe: int = 2,
     round_digits: int = 4,
-    method: str = "auto",
 ) -> DataFrame:
     """`ivf_topk` against a `write_ivf_index` dataset: identical ranking
     contract (parity test-pinned), but the corpus side is the stored
@@ -2181,9 +2175,7 @@ def ivf_topk_from_index(
     from usgs_lidar_spark.functions.vectors import dot, norm
 
     centroids = read_ivf_centroids(spark, path)
-    qdf, sims, _qtmp = _with_centroid_sims(
-        queries, centroids, vec_col, round_digits, method
-    )
+    qdf, sims, _qtmp = _with_centroid_sims(queries, centroids, vec_col, round_digits)
     probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
     qb = qdf.select(
         F.col(query_id_col),
@@ -2232,7 +2224,6 @@ def kmeans_refine(
     dim: int | None = None,
     n_iter: int = 2,
     round_digits: int = 4,
-    method: str = "auto",
 ) -> list[tuple[int, list[float]]]:
     """Lloyd refinement of the coarse quantizer: assign (expression-only,
     see ivf_assign) then recompute each centroid as the per-dimension mean
@@ -2243,7 +2234,7 @@ def kmeans_refine(
     if dim is None:
         dim = len(centroids[0][1])
     for _ in range(n_iter):
-        assigned = ivf_assign(corpus, centroids, vec_col, round_digits, method)
+        assigned = ivf_assign(corpus, centroids, vec_col, round_digits)
         means = assigned.groupBy("__cid").agg(
             *[
                 F.avg(F.element_at(F.col(vec_col), i + 1).cast("double")).alias(
@@ -2487,7 +2478,6 @@ def ivf_pq_topk(
     k: int = 5,
     n_probe: int = 2,
     round_digits: int = 4,
-    method: str = "auto",
 ) -> DataFrame:
     """IVF-PQ: the canonical billion-scale ANN composition — the coarse
     quantizer restricts each query to ~n_probe/n_cells of the corpus, and
@@ -2501,7 +2491,7 @@ def ivf_pq_topk(
     n_cells this degrades gracefully to exhaustive pq_adc_topk (pinned by
     test)."""
     enc = pq_encode(
-        ivf_assign(corpus, centroids, vec_col, round_digits, method),
+        ivf_assign(corpus, centroids, vec_col, round_digits),
         codebooks,
         vec_col=vec_col,
     )
@@ -2510,9 +2500,7 @@ def ivf_pq_topk(
         "__cid",
         F.posexplode("pq_codes").alias("j", "code"),
     )
-    qdf, sims, _qtmp = _with_centroid_sims(
-        queries, centroids, vec_col, round_digits, method
-    )
+    qdf, sims, _qtmp = _with_centroid_sims(queries, centroids, vec_col, round_digits)
     probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
     qcells = qdf.select(
         F.col(query_id_col), F.explode(probes).alias("__p")
@@ -3068,7 +3056,6 @@ def ivf_sq8_topk(
     k: int = 5,
     n_probe: int = 2,
     round_digits: int = 4,
-    method: str = "auto",
     rerank: int = 0,
 ) -> DataFrame:
     """IVF-SQ8: coarse-cell restriction (each query probes its n_probe
@@ -3085,15 +3072,13 @@ def ivf_sq8_topk(
     contracts as both parents)."""
     from usgs_lidar_spark.functions.vectors import dot, norm
 
-    cb = ivf_assign(corpus, centroids, vec_col, round_digits, method)
+    cb = ivf_assign(corpus, centroids, vec_col, round_digits)
     cb = (
         sq8_encode(cb, mins, scales, vec_col)
         .withColumn("__recon", _sq8_recon_expr("sq8_codes", mins, scales))
         .withColumn("__cnorm", norm("__recon"))
     )
-    qdf, sims, _qtmp = _with_centroid_sims(
-        queries, centroids, vec_col, round_digits, method
-    )
+    qdf, sims, _qtmp = _with_centroid_sims(queries, centroids, vec_col, round_digits)
     probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
     qb = qdf.select(
         F.col(query_id_col),
@@ -3230,7 +3215,6 @@ def write_ivf_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 4,
-    method: str = "auto",
 ) -> None:
     """Materialize the IVF-PQ index: cell-partitioned like
     `write_ivf_index`, but AT REST each vector is its PQ code array
@@ -3246,7 +3230,7 @@ def write_ivf_pq_index(
 
     spark = corpus.sparkSession
     enc = pq_encode(
-        ivf_assign(corpus, centroids, vec_col, round_digits, method),
+        ivf_assign(corpus, centroids, vec_col, round_digits),
         codebooks,
         vec_col=vec_col,
     )
@@ -3292,7 +3276,6 @@ def ivf_pq_topk_from_index(
     k: int = 5,
     n_probe: int = 2,
     round_digits: int = 4,
-    method: str = "auto",
 ) -> DataFrame:
     """`ivf_pq_topk` served from a `write_ivf_pq_index` dataset: the
     probe prunes to its cells' partition directories AND the pruned
@@ -3308,9 +3291,7 @@ def ivf_pq_topk_from_index(
 
     centroids = read_ivf_centroids(spark, path)
     codebooks = read_pq_codebooks(spark, path)
-    qdf, sims, _qtmp = _with_centroid_sims(
-        queries, centroids, vec_col, round_digits, method
-    )
+    qdf, sims, _qtmp = _with_centroid_sims(queries, centroids, vec_col, round_digits)
     probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
     qcells = qdf.select(
         F.col(query_id_col), F.explode(probes).alias("__p")
@@ -3345,7 +3326,6 @@ def append_to_ivf_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 4,
-    method: str = "auto",
 ) -> None:
     """Incrementally grow a `write_ivf_pq_index` dataset: assign AND
     encode only the new batch with the STORED quantizers (both
@@ -3360,7 +3340,7 @@ def append_to_ivf_pq_index(
     centroids = read_ivf_centroids(spark, path)
     codebooks = read_pq_codebooks(spark, path)
     enc = pq_encode(
-        ivf_assign(new_vectors, centroids, vec_col, round_digits, method),
+        ivf_assign(new_vectors, centroids, vec_col, round_digits),
         codebooks,
         vec_col=vec_col,
     )
@@ -3931,11 +3911,13 @@ def knn_label_vote(
     corpus shuffle, but the O(n_seeds x dim) per-row work runs
     vectorized instead of through interpreted Catalyst lambda
     evaluation (measured 4.5 s → <0.5 s on the sf0.1 gate). The seed
-    set is collected at plan construction (bounded — the same budget
-    the one-row broadcast array already imposed) and shipped in the
-    task closure; similarities use the bit-exact sequential-fold +
-    shortest-decimal-HALF_UP helpers in `functions.arrow_exact`, so
-    the two implementations agree bit for bit (pinned by
+    set is collected at plan construction and shipped in the task
+    closure; past ``SPARK_GRAFT_KERNEL_COLLECT_ROWS`` seeds it raises
+    ``ValueError`` rather than fall back to the expression form's
+    equally unbounded one-row broadcast. Similarities use the bit-exact
+    sequential-fold + shortest-decimal-HALF_UP helpers in
+    `functions.arrow_exact`, so the two implementations agree bit for
+    bit (pinned by
     `test_knn_label_vote_arrow_expr_parity`). ``"expr"`` keeps the
     pure-JVM expression form."""
     from usgs_lidar_spark.functions.vectors import norm
@@ -3948,16 +3930,14 @@ def knn_label_vote(
                 min_frac,
             )
         except _KernelBudgetExceeded as e:
-            # Row budget on the kernel's driver-side seed collect
-            # (round 17, VERDICT-r16 item 7): over the cap, the
-            # expression plan below computes the identical result via a
-            # one-row collect_list broadcast. That is NOT a memory
-            # bound: the broadcast still gathers every seed through the
-            # driver into one row and ships it whole to every executor;
-            # it only moves the seed set off the Python side.
-            import warnings
-
-            warnings.warn(str(e), stacklevel=2)
+            # No bounded fallback exists here: the expression plan
+            # gathers every seed through the driver into one
+            # collect_list row, so an over-budget seed set fails loudly.
+            raise ValueError(
+                f"knn_label_vote: {e}; for a seed set this large vote per "
+                "IVF cell with knn_label_vote_ivf, or pass impl=\"expr\" "
+                "to accept the unbounded collect_list broadcast"
+            ) from e
     elif impl != "expr":
         raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     seed_arr = s.agg(
