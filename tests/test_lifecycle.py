@@ -11,6 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from usgs_lidar_spark.operators.spatial import convex_halfplane_sql, polygon_bbox
 from usgs_lidar_spark.plans.lifecycle import fetch_data, fetch_regions, subsample
 from usgs_lidar_spark.sources.writers import read_points, write_points_partitioned
 
@@ -70,12 +71,24 @@ def test_fetch_data_threads_regions_and_filters(spark, world):
     assert regions == {"REG_A", "REG_N"}
     labels = {r["year_label"] for r in rows}
     assert labels == {"2012", "not_specified"}
-    # Noise class 7 removed.
-    noisy = points.filter(F.col("classification") == 7).count()
-    assert noisy > 0  # fixture has noise
-    # And every returned point is inside the polygon's bbox.
-    for r in rows[:50]:
-        assert 10.0 <= r["x"] <= 45.0 and 10.0 <= r["y"] <= 40.0
+    # Exactly the fixture rows of the qualifying regions, minus noise
+    # class 7, inside POLY by the independent half-plane rule.
+    minx, miny, maxx, maxy = polygon_bbox(POLY)
+    qualifying = {
+        c["region"] for c in catalog.collect()
+        if c["xmin"] <= minx and c["xmax"] >= maxx
+        and c["ymin"] <= miny and c["ymax"] >= maxy
+    }
+    fixture = points.select(
+        "region", "x", "y", "classification",
+        F.expr(convex_halfplane_sql(POLY, "x", "y")).alias("inside"),
+    ).collect()
+    assert any(r["classification"] == 7 and r["inside"] for r in fixture)
+    want = sorted(
+        (r["region"], r["x"], r["y"]) for r in fixture
+        if r["region"] in qualifying and r["classification"] != 7 and r["inside"]
+    )
+    assert sorted((r["region"], r["x"], r["y"]) for r in rows) == want
 
 
 def test_subsample_decimates(spark, world):

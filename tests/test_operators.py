@@ -46,9 +46,22 @@ def test_bbox_containment_not_intersection(spark):
     assert got == ["covers"]
 
 
+def _even_odd(poly, x, y):
+    """Pure-Python even-odd rule, edge by edge as `point_in_polygon`."""
+    crossings = 0
+    for (x1, y1), (x2, y2) in zip(poly, poly[1:] + poly[:1]):
+        x1, y1, x2, y2 = float(x1), float(y1), float(x2), float(y2)
+        if ((y1 <= y) != (y2 <= y)) and x < x1 + (y - y1) * (x2 - x1) / (y2 - y1):
+            crossings += 1
+    return crossings % 2 == 1
+
+
 def test_point_in_polygon_concave(spark):
-    """The ray-casting UDF handles concave polygons (beyond the convex
-    oracle): a C-shape whose notch must be excluded."""
+    """The even-odd crop handles concave polygons (beyond the convex
+    oracle): a C-shape whose notch must be excluded. A half-unit grid
+    over its bbox (every vertex, points on vertical, horizontal and notch
+    edges, and a ring just outside) pins the boundary decisions against
+    a pure-Python even-odd reference."""
     poly = [(0, 0), (10, 0), (10, 10), (0, 10), (0, 7), (8, 7), (8, 3), (0, 3)]
     pts = spark.createDataFrame(
         [(1.0, 1.0, "in_lower"), (1.0, 5.0, "in_notch"), (9.0, 5.0, "in_right"),
@@ -57,6 +70,16 @@ def test_point_in_polygon_concave(spark):
     )
     got = {r["tag"] for r in filter_within_polygon(pts, poly).collect()}
     assert got == {"in_lower", "in_right", "in_upper"}
+
+    steps = [0.5 * k for k in range(-1, 22)]  # -0.5 .. 10.5
+    grid = spark.createDataFrame([(x, y) for x in steps for y in steps], ["x", "y"])
+    got = {(r["x"], r["y"]) for r in filter_within_polygon(grid, poly).collect()}
+    want = {(x, y) for x in steps for y in steps if _even_odd(poly, x, y)}
+    assert got == want
+    # Half-open convention: left/bottom boundaries in, right/top out.
+    edge_pts = {(0.0, 0.0), (5.0, 0.0), (0.0, 8.0), (8.0, 5.0), (4.0, 7.0),
+                (10.0, 5.0), (5.0, 10.0), (4.0, 3.0), (0.0, 5.0)}
+    assert edge_pts & got == {(0.0, 0.0), (5.0, 0.0), (0.0, 8.0), (8.0, 5.0), (4.0, 7.0)}
 
 
 def test_asof_left_join_no_match(spark):

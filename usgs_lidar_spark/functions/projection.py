@@ -12,8 +12,8 @@ actually touches (/root/reference/scripts/usgs_lidar.py:441-463 —
 ``reproject_cols`` dispatches among those pairs and returns plain
 Columns, so the common reprojections whole-stage-codegen like any other
 arithmetic. Only CRSs outside these families fall back to the
-import-gated pyproj pandas UDF (`reproject_udf`) — the one other place
-(besides exact point-in-polygon) the engine permits a UDF.
+import-gated pyproj pandas UDF (`reproject_udf`) — the only Python UDF
+left on the lidar path (the exact polygon crop is an expression too).
 `reproject_any` is the one-call surface over both tiers: expressions
 when the pair allows, the UDF's struct fields otherwise.
 """

@@ -71,7 +71,7 @@ from usgs_lidar_spark.operators.skew import salted_count_distinct, salted_sum  #
 from usgs_lidar_spark.operators.spatial import (  # noqa: F401
     bbox_contains,
     filter_within_polygon,
-    point_in_polygon_udf,
+    point_in_polygon,
     polygon_bbox,
 )
 from usgs_lidar_spark.operators.terrain import idw_regrid, neighbor_pivot, twi_grid  # noqa: F401

@@ -8,26 +8,26 @@ Reference behaviors:
     (/root/reference/pipeline.json:4, scripts/usgs_lidar.py:122).
 
 Engine design (SURVEY.md §4 "custom work"): `within(polygon)` is planned
-as `bbox-prefilter AND exact-test`:
-  * the bbox test is a pure column predicate — pushed into the parquet
-    scan (row-group min/max skipping on x/y does the octree's job);
-  * the exact point-in-polygon test is an Arrow-batched pandas UDF
-    (vectorized NumPy ray casting) that only sees bbox survivors — the
-    Python boundary is off the hot path by construction.
+as `bbox-prefilter AND exact-test`, both plain column predicates:
+  * the bbox test is pushed into the parquet scan (row-group min/max
+    skipping on x/y does the octree's job);
+  * the exact point-in-polygon test is the even-odd ray-casting rule
+    rendered as ONE JVM-parsed SQL expression (one CASE term per
+    non-horizontal edge), so the crop whole-stage-codegens in the scan's
+    map stage — no Python worker, no shuffle.
 At 100 TB the bbox filter typically eliminates >99% of points at scan
-time; the UDF cost is proportional to the polygon's area, not the table.
+time; the exact test's cost is proportional to the polygon's area times
+its vertex count, not the table.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from usgs_lidar_spark.functions.sqlbuild import dlit, qident
 
 
 def bbox_contains(
@@ -52,31 +52,34 @@ def polygon_bbox(polygon: Sequence[tuple[float, float]]) -> tuple[float, float, 
     return min(xs), min(ys), max(xs), max(ys)
 
 
-def point_in_polygon_udf(polygon: Sequence[tuple[float, float]]):
-    """Arrow-batched even-odd ray-casting test for an arbitrary polygon.
+def point_in_polygon(
+    polygon: Sequence[tuple[float, float]], x_col: str, y_col: str
+) -> Column:
+    """Even-odd ray-casting test for an arbitrary polygon, as one SQL
+    expression parsed JVM-side (one py4j call to construct).
 
-    Vectorized NumPy over whole Arrow batches — never per-row Python. The
-    polygon is captured as two small ndarrays in the closure (broadcast
-    with the serialized UDF)."""
-    px = np.array([p[0] for p in polygon], dtype=np.float64)
-    py = np.array([p[1] for p in polygon], dtype=np.float64)
-    px_next = np.roll(px, -1)
-    py_next = np.roll(py, -1)
-
-    @pandas_udf("boolean")
-    def inside(x: pd.Series, y: pd.Series) -> pd.Series:
-        xv = x.to_numpy(dtype=np.float64)[:, None]
-        yv = y.to_numpy(dtype=np.float64)[:, None]
-        # Edge straddles the horizontal ray at yv?
-        cond = (py <= yv) != (py_next <= yv)
-        # X coordinate where the edge crosses the ray.
-        x_cross = px + (yv - py) * (px_next - px) / np.where(
-            py_next == py, np.inf, py_next - py
+    Edge (x1,y1)->(x2,y2) counts a crossing when it straddles the ray,
+    ``(y1 <= y) != (y2 <= y)``, and the point lies left of the crossing,
+    ``x < x1 + (y - y1) * (x2 - x1) / (y2 - y1)``; the point is inside
+    when the count is odd. ``x2 - x1`` and ``y2 - y1`` are computed here
+    as Python doubles and every other operation keeps the textbook
+    order, so each edge decision is bit-identical to the vectorized
+    NumPy form of the rule. Horizontal edges never straddle the ray and
+    are skipped (which also keeps the divisor non-zero)."""
+    x, y = qident(x_col), qident(y_col)
+    n = len(polygon)
+    terms = []
+    for i in range(n):
+        x1, y1 = (float(v) for v in polygon[i])
+        x2, y2 = (float(v) for v in polygon[(i + 1) % n])
+        if y1 == y2:
+            continue
+        terms.append(
+            f"CASE WHEN (({dlit(y1)} <= {y}) != ({dlit(y2)} <= {y})) "
+            f"AND {x} < {dlit(x1)} + ({y} - {dlit(y1)}) * {dlit(x2 - x1)}"
+            f" / {dlit(y2 - y1)} THEN 1 ELSE 0 END"
         )
-        crossings = np.sum(cond & (xv < x_cross), axis=1)
-        return pd.Series(crossings % 2 == 1)
-
-    return inside
+    return F.expr(f"({' + '.join(terms)}) % 2 = 1")
 
 
 def filter_within_polygon(
@@ -84,26 +87,14 @@ def filter_within_polygon(
     polygon: Sequence[tuple[float, float]],
     x_col: str = "x",
     y_col: str = "y",
-    repartition: bool = True,
 ) -> DataFrame:
-    """The planner helper: rewrite within(polygon) into
-    bbox-prefilter (pushed to the scan) AND exact pandas-UDF test.
-
-    `repartition`: spread bbox survivors across all cores before the UDF —
-    a single parquet file often splits into few input partitions, which
-    would serialize the (already off-hot-path) Python stage onto a handful
-    of workers. One narrow-input shuffle buys full-width UDF parallelism."""
+    """The planner helper: rewrite within(polygon) into bbox-prefilter
+    (pushed to the scan) AND the exact `point_in_polygon` expression."""
     minx, miny, maxx, maxy = polygon_bbox(polygon)
     bbox = (
         F.col(x_col).between(minx, maxx) & F.col(y_col).between(miny, maxy)
     )
-    survivors = df.filter(bbox)
-    if repartition:
-        survivors = survivors.repartition(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
-    exact = point_in_polygon_udf(polygon)
-    return survivors.filter(exact(F.col(x_col), F.col(y_col)))
+    return df.filter(bbox & point_in_polygon(polygon, x_col, y_col))
 
 
 def convex_halfplane_sql(
@@ -111,7 +102,8 @@ def convex_halfplane_sql(
 ) -> str:
     """For a CONVEX CCW polygon, point-in-polygon == all edge cross
     products >= 0 — pure arithmetic, usable as the ANSI-SQL oracle for the
-    ray-casting UDF (boundary-free test points make > vs >= immaterial)."""
+    even-odd `point_in_polygon` test (boundary-free test points make > vs
+    >= immaterial)."""
     terms = []
     n = len(polygon)
     for i in range(n):

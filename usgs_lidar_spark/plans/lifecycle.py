@@ -37,6 +37,10 @@ from usgs_lidar_spark.operators.spatial import (
 )
 from usgs_lidar_spark.operators.voxel import voxel_downsample
 
+#: LAS class 7 (low noise), dropped by the reference's noise filter
+#: (pipeline.json:10-14).
+NOISE_CLASS = 7
+
 
 def fetch_regions(catalog: DataFrame, polygon: Sequence[tuple[float, float]]) -> DataFrame:
     """Qualifying regions for a polygon: catalog bbox CONTAINS the
@@ -56,13 +60,13 @@ def fetch_data(
     points: DataFrame,
     catalog: DataFrame,
     polygon: Sequence[tuple[float, float]],
-    noise_class: int = 7,
 ) -> DataFrame:
     """All years of point data for a polygon: partition-pruned scan of the
     qualifying regions, noise filter + bbox pushed to the scan, exact
-    polygon crop via the Arrow UDF, year attached from the catalog
-    (broadcast). Returns one DataFrame with a `year` column — the
-    distributed form of the reference's dict[year -> GeoDataFrame]."""
+    polygon crop as a column expression in the same map stage, year
+    attached from the catalog (broadcast). Returns one DataFrame with a
+    `year` column — the distributed form of the reference's
+    dict[year -> GeoDataFrame]."""
     regions = (
         fetch_regions(catalog, polygon)
         .select("region", F.col("year").alias("catalog_year"))
@@ -72,7 +76,7 @@ def fetch_data(
     # scripts/usgs_lidar.py:328); the points table's own year column is
     # dropped to keep the join unambiguous.
     scoped = points.drop("year").join(F.broadcast(regions), "region")
-    clean = scoped.filter(F.col("classification") != noise_class)
+    clean = scoped.filter(F.col("classification") != NOISE_CLASS)
     cropped = filter_within_polygon(clean, polygon, x_col="x", y_col="y")
     return cropped.select(
         "region",

@@ -1806,8 +1806,8 @@ def _pip_oracle() -> str:
 @query("f3_point_in_polygon", oracle=None)
 def f3_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: exact polygon crop — bbox prefilter (pushed to the scan) AND
-    Arrow-batched ray-casting pandas UDF, the engine's plan for the
-    reference's scan-time WKT crop (/root/reference/pipeline.json:4).
+    the even-odd ray-casting test as one column expression, the engine's
+    plan for the reference's scan-time WKT crop (pipeline.json:4).
     The oracle is the convex-polygon half-plane test (pure arithmetic);
     the engine runs the general even-odd algorithm — agreeing on every
     non-boundary point."""
