@@ -5,6 +5,7 @@ SURVEY.md §7)."""
 from __future__ import annotations
 
 import shutil
+from pathlib import Path
 
 import pytest
 
@@ -16,6 +17,12 @@ from usgs_lidar_spark.streaming.events import (
 )
 from tests.conftest import SF_SMALL
 from tests.parity import canonical_rows
+
+#: Versioned-store tests run on a plain path and on a ``file://`` URI —
+#: the URI takes the same driver-IO path as any hdfs:// or s3a:// root.
+STORE_ROOTS = pytest.mark.parametrize(
+    "as_root", [str, Path.as_uri], ids=["path", "uri"]
+)
 
 
 def test_streaming_tumbling_equals_batch(spark, tmp_path):
@@ -401,7 +408,8 @@ def test_sink_exactly_once_across_crash_restart(spark, tmp_path):
     assert len(set(batch_ids)) == 3  # batch 1 replayed into ITS dir, not a new one
 
 
-def test_sink_compaction_end_to_end(spark, tmp_path):
+@STORE_ROOTS
+def test_sink_compaction_end_to_end(spark, tmp_path, as_root):
     """Compaction job over a multi-batch sink: rewrites sealed batch dirs
     into one well-sized dataset behind an atomic manifest, preserves every
     row and its batch_id provenance, leaves live batches alone, and
@@ -412,7 +420,7 @@ def test_sink_compaction_end_to_end(spark, tmp_path):
     )
     from usgs_lidar_spark.streaming.sink import idempotent_parquet_writer
 
-    out = str(tmp_path / "comp_sink")
+    out = as_root(tmp_path / "comp_sink")
     write = idempotent_parquet_writer(out)
     for b in range(4):
         write(
@@ -673,7 +681,8 @@ def test_stream_static_enrichment_join(spark, tmp_path):
     assert got == want and set(got) == {"core", "longtail"}
 
 
-def test_vacuum_sink_removes_only_unreachable_state(spark, tmp_path):
+@STORE_ROOTS
+def test_vacuum_sink_removes_only_unreachable_state(spark, tmp_path, as_root):
     """Simulated crash leftovers: a batch dir the manifest already covers,
     an orphan compacted version, and a stale manifest tmp. Vacuum removes
     exactly those; the live tail batch and active version survive, and
@@ -689,11 +698,12 @@ def test_vacuum_sink_removes_only_unreachable_state(spark, tmp_path):
     )
 
     sink = tmp_path / "sink"
+    root = as_root(sink)
     for b in range(3):
         spark.range(b * 10, b * 10 + 10).withColumn(
             "v", F.col("id") * 2
         ).write.parquet(str(sink / f"batch_id={b}"))
-    m = compact_sink(spark, str(sink), up_to_batch=1)
+    m = compact_sink(spark, root, up_to_batch=1)
     assert m["max_batch_id"] == 1
 
     # crash leftovers: covered batch dir re-appears (crash between
@@ -705,16 +715,18 @@ def test_vacuum_sink_removes_only_unreachable_state(spark, tmp_path):
     )
     (sink / "_compacted" / "v0").mkdir()
     (sink / "_compacted" / "v99").mkdir()
-    (sink / "_compacted" / ".MANIFEST.json.tmp").write_text("{}")
+    (sink / "_compacted" / ".MANIFEST-2.json.tmp").write_text("{}")
 
-    before = sorted(tuple(r) for r in read_sink(spark, str(sink)).collect())
-    removed = vacuum_sink(str(sink))
-    assert removed == {"batch_dirs": 1, "version_dirs": 1, "tmp_files": 1}
-    after = sorted(tuple(r) for r in read_sink(spark, str(sink)).collect())
+    before = sorted(tuple(r) for r in read_sink(spark, root).collect())
+    removed = vacuum_sink(spark, root)
+    assert removed == {
+        "batch_dirs": 1, "version_dirs": 1, "manifests": 0, "tmp": 1
+    }
+    after = sorted(tuple(r) for r in read_sink(spark, root).collect())
     assert before == after and len(after) == 30
     # live tail untouched, active level untouched, in-flight build SPARED
     assert (sink / "batch_id=2").is_dir()
-    active = _json.loads((sink / "_compacted" / "MANIFEST.json").read_text())
+    active = _json.loads((sink / "_compacted" / "MANIFEST-1.json").read_text())
     for lv in active["levels"]:
         assert (sink / "_compacted" / lv["dir"]).is_dir()
     assert not (sink / "batch_id=0").exists()
@@ -722,7 +734,10 @@ def test_vacuum_sink_removes_only_unreachable_state(spark, tmp_path):
     assert (sink / "_compacted" / "v99").is_dir()  # in-flight: spared
 
 
-def test_streaming_rollup_matches_batch_and_survives_crash(spark, tmp_path):
+@STORE_ROOTS
+def test_streaming_rollup_matches_batch_and_survives_crash(
+    spark, tmp_path, as_root
+):
     """Streaming materialized view: per-type (sum, count, min, max) rollup
     maintained across micro-batches must equal the batch aggregate over
     all input — including when the query crashes AFTER a version publish
@@ -760,7 +775,7 @@ def test_streaming_rollup_matches_batch_and_survives_crash(spark, tmp_path):
         ).to_parquet(events_dir / name, index=False)
         os.utime(events_dir / name, (1700000000 + i, 1700000000 + i))
 
-    out = str(tmp_path / "ru_out")
+    out = as_root(tmp_path / "ru_out")
     ckpt = str(tmp_path / "ru_ckpt")
     keys, measures = ["event_type"], [("value", "sum"), ("value", "count")]
     inner = rollup_writer(out, keys, measures)
@@ -804,15 +819,17 @@ def test_streaming_rollup_matches_batch_and_survives_crash(spark, tmp_path):
         ).collect()
     }
     assert got == batch
-    # version retention: only the active version and its replay base remain
+    # the manifest lives under the store, and version retention keeps
+    # only the active version (a replay of it is a no-op)
     import json as _json2
 
-    m = _json2.loads((tmp_path / "ru_out" / "MANIFEST.json").read_text())
-    vdirs = sorted(
-        p.name for p in (tmp_path / "ru_out").iterdir()
-        if p.is_dir() and p.name.startswith("v")
-    )
-    assert set(vdirs) <= {m["version_dir"], m["prev_version_dir"]}
+    comp = tmp_path / "ru_out" / "_compacted"
+    manifests = list(comp.glob("MANIFEST-*.json"))
+    assert len(manifests) == 1
+    m = _json2.loads(manifests[0].read_text())
+    assert m["max_batch_id"] == 2
+    vdirs = {p.name for p in comp.iterdir() if p.is_dir()}
+    assert vdirs == {lv["dir"] for lv in m["levels"]}
 
 
 def test_tws_moments_matches_batch(spark, tmp_path):
@@ -882,7 +899,8 @@ def test_tws_moments_matches_batch(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_compaction_with_stats_skipping(spark, tmp_path):
+@STORE_ROOTS
+def test_compaction_with_stats_skipping(spark, tmp_path, as_root):
     """Compaction with cluster_by + stats_columns produces a compacted
     dataset whose per-file stats prune reads: read_sink_with_skipping
     equals the filtered read_sink exactly while opening fewer compacted
@@ -894,7 +912,7 @@ def test_compaction_with_stats_skipping(spark, tmp_path):
         read_sink_with_skipping,
     )
 
-    sink = str(tmp_path / "sink")
+    sink = as_root(tmp_path / "sink")
     # three sealed batches + one tail batch, value ranges overlapping
     for b in range(4):
         spark.range(b * 1000, (b + 1) * 1000).select(
@@ -1479,7 +1497,8 @@ def test_ingest_probe_keeps_dp_less_legacy_history(spark, tmp_path):
         read_store_before(spark, store, 2, ["dd"]).collect()
 
 
-def test_ingest_store_compaction_preserves_probe(spark, tmp_path):
+@STORE_ROOTS
+def test_ingest_store_compaction_preserves_probe(spark, tmp_path, as_root):
     """Round 11: compacting the digest store's sealed batches
     (compact_sink, partition_by=['dp']) is INVISIBLE to the probe —
     read_store_before returns the identical digest set before and after
@@ -1497,7 +1516,7 @@ def test_ingest_store_compaction_preserves_probe(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "text"
     )
-    store = str(tmp_path / "digest_store")
+    store = as_root(tmp_path / "digest_store")
     out = str(tmp_path / "deduped_out")
     ingest = chunk_dedup_ingest_writer(store, out, chunk_tokens=4)
     ingest(docs.filter("doc_id < 17"), 0)
@@ -2183,9 +2202,9 @@ def test_media_compaction_auto_major(spark, tmp_path):
     that bounds both the probe's file listing and the amortized write
     volume. Three minors at max_levels=2: the third merges everything
     into one level; the probe view is identical throughout."""
+    from usgs_lidar_spark.streaming.compact import list_sealed_batches
     from usgs_lidar_spark.streaming.media_ingest import (
         compact_media_store,
-        list_sealed_batches,
         media_neardup_ingest_writer,
         read_hash_store_before,
     )
@@ -2295,9 +2314,9 @@ def test_media_store_compaction_and_vacuum(spark, tmp_path):
         to_media_table,
     )
     from usgs_lidar_spark.operators.graph import collapse_clusters
+    from usgs_lidar_spark.streaming.compact import list_sealed_batches
     from usgs_lidar_spark.streaming.media_ingest import (
         compact_media_store,
-        list_sealed_batches,
         media_neardup_ingest_writer,
         read_hash_store_before,
         vacuum_media_labels,
@@ -2377,6 +2396,7 @@ def test_media_store_compaction_and_vacuum(spark, tmp_path):
         "version": 1,
         "levels": [{"dir": "v1", "max_batch_id": 3}],
         "max_batch_id": 3,
+        "n_source_batches": 4,
     }
     assert list_sealed_batches(spark, store) == []  # all merged
     assert probe_rows() == pre  # row-identical view through the manifest
@@ -2815,9 +2835,11 @@ def test_media_ingest_inline_compaction(spark, tmp_path):
         to_media_table,
     )
     from usgs_lidar_spark.operators.graph import collapse_clusters
-    from usgs_lidar_spark.streaming.media_ingest import (
+    from usgs_lidar_spark.streaming.compact import (
         _read_store_manifest,
         list_sealed_batches,
+    )
+    from usgs_lidar_spark.streaming.media_ingest import (
         media_neardup_ingest_writer,
     )
 

@@ -30,7 +30,6 @@ non-overlapping ranges.
 
 from __future__ import annotations
 
-import os
 from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,19 +43,10 @@ _MANIFEST_SCHEMA = (
 )
 
 
-def _list_parquet_files(path: str) -> list[str]:
-    out: list[str] = []
-    for root, _dirs, files in os.walk(path):
-        # segment match, not substring: a parent directory whose NAME
-        # merely contains "_stats_manifest" (e.g. a pytest tmp dir named
-        # after a test) must not hide the whole table.
-        segs = set(root.split(os.sep))
-        if MANIFEST_DIR in segs or "_bloom_manifest" in segs:
-            continue
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith("_"):
-                out.append(os.path.join(root, f))
-    return sorted(out)
+def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
+    """The table's data files as Spark lists them, through the path's
+    own filesystem (Spark skips the underscore-prefixed sidecars)."""
+    return sorted(spark.read.parquet(path).inputFiles())
 
 
 def build_stats_manifest(
@@ -67,7 +57,7 @@ def build_stats_manifest(
     read; pyarrow never materializes row data), so a 100k-file table
     builds its manifest in one short distributed pass."""
     cols = list(columns)
-    files = _list_parquet_files(path)
+    files = _list_parquet_files(spark, path)
     files_df = spark.createDataFrame(
         [(f,) for f in files], "file string"
     ).repartition(max(1, min(len(files), 64)))
@@ -135,7 +125,7 @@ def write_stats_manifest(
     coalesced file — the manifest is rows-per-file x columns, tiny
     relative to the table, and a single object keeps the planner's
     manifest read to one request."""
-    out = os.path.join(path, MANIFEST_DIR)
+    out = f"{path}/{MANIFEST_DIR}"
     build_stats_manifest(spark, path, columns).coalesce(1).write.mode(
         "overwrite"
     ).parquet(out)
@@ -143,7 +133,7 @@ def write_stats_manifest(
 
 
 def read_stats_manifest(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, MANIFEST_DIR))
+    return spark.read.parquet(f"{path}/{MANIFEST_DIR}")
 
 
 def prune_files(
@@ -244,7 +234,7 @@ def write_key_bloom_manifest(
     sets bits locally; only (file, params, bitmap) rows move). Values
     are hashed by their string form, so any key type works as long as
     lookups use the same rendering."""
-    files = _list_parquet_files(path)
+    files = _list_parquet_files(spark, path)
     files_df = spark.createDataFrame(
         [(f,) for f in files], "file string"
     ).repartition(max(1, min(len(files), 64)))
@@ -277,7 +267,7 @@ def write_key_bloom_manifest(
                 rows, columns=["file", "column", "m", "k", "n_keys", "bitmap"]
             )
 
-    out = os.path.join(path, BLOOM_DIR)
+    out = f"{path}/{BLOOM_DIR}"
     files_df.mapInPandas(
         build, "file string, column string, m long, k long, n_keys long, bitmap binary"
     ).coalesce(1).write.mode("overwrite").parquet(out)
@@ -289,7 +279,7 @@ def prune_files_by_key(spark: SparkSession, path: str, key_col: str, value) -> l
     bitmaps (false positives possible — the reader re-applies the
     predicate; false negatives impossible). The manifest is tiny and
     membership checks run on the driver — no data file is touched."""
-    m_df = spark.read.parquet(os.path.join(path, BLOOM_DIR)).filter(
+    m_df = spark.read.parquet(f"{path}/{BLOOM_DIR}").filter(
         F.col("column") == key_col
     )
     keep = []

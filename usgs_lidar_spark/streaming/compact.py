@@ -1,105 +1,323 @@
-"""Compaction for the idempotent streaming sink's one-dir-per-batch output.
+"""The versioned-store protocol of the streaming tier, stated once.
 
-A long-running stream through ``sink.idempotent_parquet_writer`` leaves
-``batch_id=N`` directories, each holding one micro-batch's (often tiny)
-files — the classic small-file problem: at 100 TB a reader would open
-millions of files and the NameNode/listing cost dominates the scan.
+Every versioned store — the idempotent sink (`sink.py`), the chunk-digest
+store (`ingest.py`), the media band index (`media_ingest.py`) and the
+streaming rollup (`rollup_sink.py`) — keeps this layout under its root
+(a local path or any URI Spark reads: ``file://``, ``hdfs://``,
+``s3a://``):
 
-``compact_sink`` is the batch job that fixes this WITHOUT stopping the
-stream:
+  * ``batch_id=<n>/`` — one directory per micro-batch, written with
+    overwrite, so a replayed batch rewrites its own directory;
+  * ``_compacted/v<K>/`` — a LEVEL: the rows of many batches, with
+    ``batch_id`` kept as a normal column so nothing loses provenance;
+  * ``_compacted/MANIFEST-<K>.json`` — version K of the live level list,
+    ``{"version", "levels": [{"dir", "max_batch_id"}], "max_batch_id",
+    "n_source_batches"}``. Readers take the highest K. It is published
+    by writing a hidden tmp file and renaming it to its fresh name:
+    rename is atomic on HDFS and POSIX, and HDFS rename never
+    overwrites, so every version gets its own file.
 
-  1. read every sealed batch directory (``batch_id <= up_to_batch``;
-     batches newer than that may still be replayed by a recovering
-     stream, so they are never touched);
-  2. rewrite them as one well-sized parquet dataset under
-     ``_compacted/v<K>/`` (coalesced to ``target_partitions`` or
-     partitioned by a user column — batch_id is preserved as a normal
-     column so nothing is lost);
-  3. atomically swap a JSON manifest (`_compacted/MANIFEST.json`, tmp
-     file + ``os.replace``) recording the active LEVEL SET and the
-     highest batch id it covers;
-  4. only then delete the superseded batch directories (and, after a
-     major compaction, the merged level dirs).
+The consistent view (`live_view`) is the live levels plus the batch
+directories newer than the manifest's ``max_batch_id`` (the tail). Tail
+directories are chosen by directory NAME, so a crashed newer batch's
+partial files are never opened.
 
-LEVELED, LSM-style (round 16 — same fix as `media_ingest`'s store: the
-single-level form rewrote the ENTIRE compacted dataset every run,
-O(store) write amplification and quadratic lifetime write volume under
-periodic maintenance): the manifest lists MULTIPLE level dirs. A MINOR
-compaction (the default) folds only the sealed tail into one NEW small
-level — O(tail) bytes written, existing levels untouched. A MAJOR
-compaction (``major=True``, or automatic when the level count would
-pass ``max_levels``) merges all levels + tail into one dir. The
-pre-leveling single-dir manifest format still reads (one-level set).
+`compact` folds sealed batches without stopping the stream. LEVELED,
+LSM-style: a MINOR compaction (the default) writes only the tail into
+one new level — O(tail) bytes, existing levels untouched. A MAJOR one
+(``major=True``, or automatic when a minor would push the level count
+past ``max_levels``) merges all levels and the tail into one dir, which
+bounds both the reader's listing and the amortized write volume. Steps:
 
-Crash-safety comes from the ordering: a crash before the manifest swap
-leaves an orphan ``v<K>`` directory that readers ignore (the manifest
-still points at the old state) and the NEXT compaction overwrites (it
-reuses version K = active+1, mode overwrite); a crash after the swap
-but before the deletes leaves garbage batch dirs that readers skip
-(their ids are <= the manifest's ``max_batch_id``) and retired level
-dirs no longer in the live set — `vacuum_sink` removes both, and
-deliberately SPARES version dirs NEWER than the active manifest (a
-concurrent compaction's in-progress build). Maintenance is
-single-maintainer per sink, like the media store.
+  1. read the tail batches ``covered < n <= up_to_batch`` (newer batches
+     may still be replayed by a recovering stream and are never
+     touched) and, for a major, the live levels;
+  2. hand the union to the caller's ``write(df, vdir)``, which chooses
+     only the physical layout, for ``vdir = _compacted/v<active+1>``;
+  3. publish the new manifest;
+  4. only then delete the folded batch dirs and merged level dirs.
 
-``read_sink`` is the matching reader: the live level set plus any batch
-directories newer than the manifest — a consistent view at every point
-of the protocol above.
+Crash safety comes from that order. A crash before the publish leaves
+an orphan ``v<K>`` that readers ignore and the next compaction
+overwrites (it reuses K = active+1). A crash after it leaves covered
+batch dirs that readers skip and retired levels outside the live set;
+`vacuum` removes both, and SPARES version dirs newer than the active
+manifest (a concurrent compaction's in-progress build). Maintenance is
+single-maintainer per store; vacuum is safe at any time only because it
+spares those newer builds.
 
-Driver-side file operations use the local filesystem API; on HDFS/object
-stores the same protocol holds with the corresponding rename primitive
-(HDFS rename is atomic; object stores need a conditional put), which is
-an environment binding, not a design change.
+All driver-side IO goes through the Hadoop FileSystem of the root's own
+scheme. A local-only probe would read an HDFS/S3 store as empty and the
+caller would rebuild state from one batch; listing failures other than
+a missing root re-raise.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import re
-import shutil
-from pathlib import Path
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-_BATCH_RE = re.compile(r"^batch_id=(\d+)$")
-MANIFEST = "MANIFEST.json"
+from usgs_lidar_spark.sources.stats_manifest import (
+    MANIFEST_DIR,
+    prune_files,
+    write_stats_manifest,
+)
 
-
-def _batch_dirs(sink_path: str) -> dict[int, Path]:
-    root = Path(sink_path)
-    out: dict[int, Path] = {}
-    if root.is_dir():
-        for child in root.iterdir():
-            m = _BATCH_RE.match(child.name)
-            if m and child.is_dir():
-                out[int(m.group(1))] = child
-    return out
+COMPACTED = "_compacted"
+_MANIFEST = "MANIFEST-"
 
 
-def _read_manifest(sink_path: str) -> dict | None:
-    f = Path(sink_path) / "_compacted" / MANIFEST
-    if not f.exists():
+def _jfs(spark, path: str):
+    """(Hadoop FileSystem, Path, jvm) for ``path`` — the path's OWN
+    filesystem (file://, hdfs://, s3a://...), not the local one."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    jfs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return jfs, jpath, jvm
+
+
+def _exists(spark, path: str) -> bool:
+    jfs, jpath, _ = _jfs(spark, path)
+    return bool(jfs.exists(jpath))
+
+
+def _delete(spark, path: str) -> None:
+    jfs, jpath, _ = _jfs(spark, path)
+    jfs.delete(jpath, True)
+
+
+def _read_text(spark, path: str) -> str | None:
+    """The UTF-8 content of ``path``, or None when it does not exist."""
+    jfs, jpath, _ = _jfs(spark, path)
+    if not jfs.exists(jpath):
         return None
-    return json.loads(f.read_text())
+    stream = jfs.open(jpath)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
+
+
+def _publish(spark, path: str, text: str) -> None:
+    """Write ``text`` to ``path`` atomically: the complete content goes
+    to a hidden tmp sibling first, then is renamed to ``path``, so the
+    final name either does not exist or is complete. ``path`` must not
+    exist yet (HDFS rename never overwrites)."""
+    parent, name = path.rsplit("/", 1)
+    jfs, final, jvm = _jfs(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{parent}/.{name}.tmp")
+    out = jfs.create(tmp, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+    if not jfs.rename(tmp, final):
+        raise OSError(f"could not publish {path}")
+
+
+def list_sealed_batches(spark, root: str) -> list[int]:
+    """Sorted batch ids of ``root``'s ``batch_id=<n>`` directories.
+    Missing root reads as no batches; any OTHER listing failure
+    re-raises loudly."""
+    jfs, jpath, _ = _jfs(spark, root)
+    if not jfs.exists(jpath):
+        return []
+    out: list[int] = []
+    for st in jfs.listStatus(jpath):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("batch_id="):
+            tail = name.split("=", 1)[1]
+            if tail.isdigit():
+                out.append(int(tail))
+    return sorted(out)
+
+
+def level_dir(root: str, name: str) -> str:
+    return f"{root}/{COMPACTED}/{name}"
+
+
+def _manifest_version(name: str) -> int | None:
+    if name.startswith(_MANIFEST) and name.endswith(".json"):
+        tail = name[len(_MANIFEST) : -len(".json")]
+        if tail.isdigit():
+            return int(tail)
+    return None
+
+
+def _read_store_manifest(spark, root: str) -> dict | None:
+    """Highest-version manifest under ``root/_compacted``, or None when
+    no compaction has published yet. A corrupt manifest re-raises."""
+    comp = f"{root}/{COMPACTED}"
+    jfs, jcomp, _ = _jfs(spark, comp)
+    if not jfs.exists(jcomp):
+        return None
+    versions = [
+        v
+        for st in jfs.listStatus(jcomp)
+        if st.isFile()
+        and (v := _manifest_version(st.getPath().getName())) is not None
+    ]
+    if not versions:
+        return None
+    latest = f"{comp}/{_MANIFEST}{max(versions)}.json"
+    return json.loads(_read_text(spark, latest))
+
+
+def _write_store_manifest(spark, root: str, manifest: dict) -> None:
+    name = f"{_MANIFEST}{int(manifest['version'])}.json"
+    _publish(spark, f"{root}/{COMPACTED}/{name}", json.dumps(manifest))
 
 
 def _levels(manifest: dict | None) -> list[dict]:
-    """The manifest's live level list, oldest first — each entry
-    ``{"dir": "v<K>", "max_batch_id": n}``. Handles both the round-16
-    leveled format (``levels``) and the earlier single-dir one
-    (``version_dir``), so an existing sink keeps compacting without
-    migration."""
-    if manifest is None:
-        return []
-    if "levels" in manifest:
-        return [dict(lv) for lv in manifest["levels"]]
+    """The live level list, oldest first."""
+    return manifest["levels"] if manifest else []
+
+
+def _scan(spark, paths: list[str], schema: str | None, base=None):
+    reader = spark.read
+    if base is not None:
+        # keeps batch_id, a partition column of the batch dirs, in the scan
+        reader = reader.option("basePath", base)
+    if schema is not None:
+        # pinned schema: no inference, no footer of a pruned dir opened
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
+
+
+def _tail(spark, root: str, covered: int, before: int | None) -> list[int]:
     return [
-        {
-            "dir": manifest["version_dir"],
-            "max_batch_id": manifest["max_batch_id"],
-        }
+        b
+        for b in list_sealed_batches(spark, root)
+        if covered < b and (before is None or b < before)
     ]
+
+
+def _view(spark, root, read_level, schema=None, before=None):
+    manifest = _read_store_manifest(spark, root)
+    covered = manifest["max_batch_id"] if manifest else -1
+    parts = [
+        read_level(level_dir(root, lv["dir"])) for lv in _levels(manifest)
+    ]
+    tail = _tail(spark, root, covered, before)
+    if tail:
+        batches = [f"{root}/batch_id={b}" for b in tail]
+        parts.append(_scan(spark, batches, schema, root))
+    if not parts:
+        return None
+    view = reduce(DataFrame.unionByName, parts)
+    return view if before is None else view.filter(F.col("batch_id") < before)
+
+
+def live_view(
+    spark, root: str, schema: str | None = None, before: int | None = None
+) -> DataFrame | None:
+    """The store's consistent view — live levels plus the tail — or
+    None for a store with neither. ``before`` restricts it to batches
+    strictly older than ``before``: tail dirs by name, levels by their
+    ``batch_id`` column. ``schema`` pins every read."""
+    return _view(
+        spark, root, lambda vdir: _scan(spark, [vdir], schema), schema, before
+    )
+
+
+def compact(
+    spark,
+    root: str,
+    up_to_batch: int | None,
+    write,
+    schema: str | None = None,
+    major: bool = False,
+    max_levels: int = 8,
+) -> dict | None:
+    """Fold the sealed tail (``covered < n <= up_to_batch``; None = all
+    present) into a new level — and, for a major, merge the live levels
+    too — via ``write(df, vdir)``, then publish the manifest and delete
+    the folded inputs (see the module docstring). Returns the new
+    manifest, or None when there is nothing to do."""
+    if int(max_levels) < 1:
+        raise ValueError(f"max_levels must be >= 1, got {max_levels}")
+    manifest = _read_store_manifest(spark, root)
+    levels = _levels(manifest)
+    covered = manifest["max_batch_id"] if manifest else -1
+    before = None if up_to_batch is None else int(up_to_batch) + 1
+    todo = _tail(spark, root, covered, before)
+    major = bool(major) or (len(levels) + 1 > int(max_levels))
+    if not todo and not (major and len(levels) > 1):
+        return None  # nothing to fold (a 1-level major is already major)
+    merged = levels if major else []
+    parts = [
+        _scan(spark, [level_dir(root, lv["dir"])], schema) for lv in merged
+    ]
+    if todo:
+        batches = [f"{root}/batch_id={b}" for b in todo]
+        parts.insert(0, _scan(spark, batches, schema, root))
+    version = (manifest["version"] + 1) if manifest else 1
+    vdir = f"v{version}"
+    write(reduce(DataFrame.unionByName, parts), level_dir(root, vdir))
+    new_max = max(todo) if todo else covered
+    new_manifest = {
+        "version": version,
+        "levels": ([] if major else levels)
+        + [{"dir": vdir, "max_batch_id": new_max}],
+        "max_batch_id": new_max,
+        "n_source_batches": len(todo)
+        + (manifest["n_source_batches"] if manifest else 0),
+    }
+    _write_store_manifest(spark, root, new_manifest)
+    # Post-publish cleanup (a crash here leaves garbage `vacuum` removes).
+    for b in todo:
+        _delete(spark, f"{root}/batch_id={b}")
+    for lv in merged:
+        _delete(spark, level_dir(root, lv["dir"]))
+    return new_manifest
+
+
+def vacuum(spark, root: str) -> dict:
+    """Remove what the protocol can leave behind after a crash: batch
+    dirs the manifest covers, retired ``v<J>`` dirs outside the live set
+    with J <= the active version, older manifests and stale manifest tmp
+    files. Version dirs NEWER than the active manifest are spared (a
+    concurrent compaction's in-progress build); a crashed build's orphan
+    at active+1 is overwritten by the next compaction instead. No
+    manifest means nothing is superseded yet. Everything removed is
+    unreachable through `live_view`. Returns counts of what was
+    removed."""
+    manifest = _read_store_manifest(spark, root)
+    removed = {"batch_dirs": 0, "version_dirs": 0, "manifests": 0, "tmp": 0}
+    if manifest is None:
+        return removed
+    for b in list_sealed_batches(spark, root):
+        if b <= manifest["max_batch_id"]:
+            _delete(spark, f"{root}/batch_id={b}")
+            removed["batch_dirs"] += 1
+    live = {lv["dir"] for lv in _levels(manifest)}
+    jfs, jcomp, _ = _jfs(spark, f"{root}/{COMPACTED}")
+    for st in jfs.listStatus(jcomp):
+        name = st.getPath().getName()
+        if st.isDirectory() and name not in live:
+            tail = name[1:] if name.startswith("v") else ""
+            if tail.isdigit() and int(tail) <= manifest["version"]:
+                jfs.delete(st.getPath(), True)
+                removed["version_dirs"] += 1
+        elif st.isFile() and name.startswith(f".{_MANIFEST}"):
+            jfs.delete(st.getPath(), False)
+            removed["tmp"] += 1
+        elif (
+            st.isFile()
+            and (v := _manifest_version(name)) is not None
+            and v < manifest["version"]
+        ):
+            jfs.delete(st.getPath(), False)
+            removed["manifests"] += 1
+    return removed
+
+
+# ---------------------------------------------------------------------------
+# The idempotent sink (`sink.idempotent_parquet_writer`'s batch_id dirs).
+# ---------------------------------------------------------------------------
 
 
 def compact_sink(
@@ -113,9 +331,9 @@ def compact_sink(
     major: bool = False,
     max_levels: int = 8,
 ) -> dict | None:
-    """Rewrite sealed ``batch_id`` directories into a compacted dataset
-    and atomically publish it via the manifest. Returns the new manifest,
-    or None when there is nothing to compact.
+    """Fold sealed ``batch_id`` directories into a compacted level and
+    publish it via the manifest. Returns the new manifest, or None when
+    there is nothing to compact.
 
     ``up_to_batch``: highest batch id considered sealed (default: all
     present). Leave headroom below the stream's current batch when the
@@ -124,161 +342,50 @@ def compact_sink(
     ``target_partitions``: repartition width of the compacted write (the
     knob that fixes small files); None keeps the scan's partitioning.
     ``partition_by``: optional hive-partition columns for the compacted
-    dataset (e.g. an event-date column) — the layout a 100 TB reader
-    actually wants.
+    dataset (e.g. an event-date column).
     ``cluster_by``: range-partition + sort the compacted write by these
     columns so each output file owns a tight value slice — what makes
     per-file stats selective.
     ``stats_columns``: after the write, build the per-file min/max
     sidecar (sources/stats_manifest) for these columns inside the new
-    version dir; `read_sink_with_skipping` then prunes compacted files
+    level; `read_sink_with_skipping` then prunes compacted files
     without opening their footers. Pass it at EVERY compaction of a
     skipping-read sink — each level carries its own sidecar.
-    ``major`` / ``max_levels``: see the module docstring — minor folds
-    only the tail (O(tail) bytes); major merges the live level set.
+    ``major`` / ``max_levels``: see the module docstring.
     """
-    if int(max_levels) < 1:
-        raise ValueError(f"max_levels must be >= 1, got {max_levels}")
-    manifest = _read_manifest(sink_path)
-    levels = _levels(manifest)
-    already = manifest["max_batch_id"] if manifest else -1
-    dirs = _batch_dirs(sink_path)
-    todo = {
-        b: p
-        for b, p in dirs.items()
-        if b > already and (up_to_batch is None or b <= up_to_batch)
-    }
-    major = bool(major) or (len(levels) + 1 > int(max_levels))
-    if not todo and not (major and len(levels) > 1):
-        return None  # nothing to fold (a 1-level major is already major)
-    merged_levels = levels if major else []
 
-    # basePath keeps batch_id as a (partition) column in the scan; it is
-    # written back as a NORMAL column so compacted rows keep provenance.
-    sources: list[DataFrame] = []
-    if todo:
-        sources.append(
-            spark.read.option("basePath", sink_path)
-            .parquet(*[str(p) for p in sorted(todo.values())])
-        )
-    for lv in merged_levels:
-        sources.append(
-            spark.read.parquet(
-                str(Path(sink_path) / "_compacted" / lv["dir"])
+    def write(df: DataFrame, vdir: str) -> None:
+        if cluster_by:
+            n = target_partitions or df.rdd.getNumPartitions()
+            df = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(
+                *cluster_by
             )
-        )
-    df = sources[0]
-    for s in sources[1:]:
-        df = df.unionByName(s)
-    if cluster_by:
-        n = target_partitions or df.rdd.getNumPartitions()
-        df = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(
-            *cluster_by
-        )
-    elif target_partitions is not None:
-        df = df.repartition(target_partitions)
+        elif target_partitions is not None:
+            df = df.repartition(target_partitions)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(vdir)
+        if stats_columns:
+            write_stats_manifest(spark, vdir, stats_columns)
 
-    version = (manifest["version"] + 1) if manifest else 1
-    comp_root = Path(sink_path) / "_compacted"
-    comp_root.mkdir(exist_ok=True)
-    vdir = f"v{version}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(comp_root / vdir))
-    if stats_columns:
-        from usgs_lidar_spark.sources.stats_manifest import write_stats_manifest
-
-        write_stats_manifest(spark, str(comp_root / vdir), stats_columns)
-
-    new_max = max(todo) if todo else already
-    new_manifest = {
-        "version": version,
-        "levels": ([] if major else levels)
-        + [{"dir": vdir, "max_batch_id": new_max if major else max(todo)}],
-        "max_batch_id": new_max,
-        "n_source_batches": len(todo)
-        + (manifest["n_source_batches"] if manifest else 0),
-    }
-    tmp = comp_root / f".{MANIFEST}.tmp"
-    tmp.write_text(json.dumps(new_manifest, indent=1))
-    os.replace(tmp, comp_root / MANIFEST)  # the atomic publish point
-
-    # Post-publish cleanup: superseded batch dirs and (after a major)
-    # the merged level dirs.
-    for p in todo.values():
-        shutil.rmtree(p, ignore_errors=True)
-    for lv in merged_levels:
-        shutil.rmtree(comp_root / lv["dir"], ignore_errors=True)
-    return new_manifest
+    return compact(
+        spark, sink_path, up_to_batch, write, None, major, max_levels
+    )
 
 
 def read_sink(spark: SparkSession, sink_path: str) -> DataFrame:
-    """Consistent view of the sink at any protocol point: the manifest's
-    live LEVEL dirs plus batch directories NEWER than its max_batch_id
-    (uncompacted tail); plain batch-dir union when no compaction has
-    run."""
-    manifest = _read_manifest(sink_path)
-    covered = manifest["max_batch_id"] if manifest else -1
-    tail = [p for b, p in sorted(_batch_dirs(sink_path).items()) if b > covered]
-    parts: list[DataFrame] = []
-    for lv in _levels(manifest):
-        parts.append(
-            spark.read.parquet(
-                str(Path(sink_path) / "_compacted" / lv["dir"])
-            )
-        )
-    if tail:
-        parts.append(
-            spark.read.option("basePath", sink_path).parquet(
-                *[str(p) for p in tail]
-            )
-        )
-    if not parts:
+    """Consistent view of the sink at any protocol point (`live_view`)."""
+    view = live_view(spark, sink_path)
+    if view is None:
         raise FileNotFoundError(f"empty sink: {sink_path}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return view
 
 
-def vacuum_sink(sink_path: str) -> dict:
-    """Remove crash orphans the compaction protocol can legitimately
-    leave behind: batch directories already covered by the manifest
-    (crash after publish, before deletes), RETIRED ``v<J>`` level dirs
-    neither in the active level set nor newer than the active version,
-    and stale manifest tmp files. Never touches batch dirs newer than
-    the manifest (the live tail), version dirs NEWER than the active
-    version (a concurrent compaction's in-progress build — deleting one
-    mid-build would kill that compaction at publish; a crashed build's
-    orphan at active+1 is overwritten by the next compaction instead),
-    or anything when no manifest exists (nothing is superseded yet).
-
-    Safe to run at ANY time, concurrent with readers: everything removed
-    is, by the manifest's word, unreachable through read_sink. Returns a
-    summary of what was removed.
-    """
-    manifest = _read_manifest(sink_path)
-    removed = {"batch_dirs": 0, "version_dirs": 0, "tmp_files": 0}
-    comp_root = Path(sink_path) / "_compacted"
-    if manifest is None:
-        return removed
-    live = {lv["dir"] for lv in _levels(manifest)}
-    for b, p in _batch_dirs(sink_path).items():
-        if b <= manifest["max_batch_id"]:
-            shutil.rmtree(p, ignore_errors=True)
-            removed["batch_dirs"] += 1
-    if comp_root.is_dir():
-        for child in comp_root.iterdir():
-            if child.is_dir() and child.name not in live:
-                tail = child.name[1:] if child.name.startswith("v") else ""
-                if tail.isdigit() and int(tail) <= manifest["version"]:
-                    shutil.rmtree(child, ignore_errors=True)
-                    removed["version_dirs"] += 1
-            elif child.is_file() and child.name.startswith(f".{MANIFEST}"):
-                child.unlink(missing_ok=True)
-                removed["tmp_files"] += 1
-    return removed
+def vacuum_sink(spark: SparkSession, sink_path: str) -> dict:
+    """`vacuum` for the sink: safe to run at any time, concurrent with
+    readers."""
+    return vacuum(spark, sink_path)
 
 
 def read_sink_with_skipping(
@@ -292,46 +399,24 @@ def read_sink_with_skipping(
     ranges are re-applied as real predicates either way, so the result
     equals filter(read_sink(...)) exactly — skipping only changes which
     files get touched."""
-    from usgs_lidar_spark.sources.stats_manifest import prune_files
 
-    from usgs_lidar_spark.sources.stats_manifest import MANIFEST_DIR
-
-    manifest = _read_manifest(sink_path)
-    covered = manifest["max_batch_id"] if manifest else -1
-    tail = [p for b, p in sorted(_batch_dirs(sink_path).items()) if b > covered]
-    parts: list[DataFrame] = []
-    for lv in _levels(manifest):
-        vdir = str(Path(sink_path) / "_compacted" / lv["dir"])
-        if not (Path(vdir) / MANIFEST_DIR).exists():
+    def read_level(vdir: str) -> DataFrame:
+        if not _exists(spark, f"{vdir}/{MANIFEST_DIR}"):
             # a level compacted without stats_columns has no sidecar:
-            # read it whole (conservative — the predicates below still
-            # apply, only file skipping is lost for this level)
-            parts.append(spark.read.parquet(vdir))
-            continue
+            # read it whole (the predicates below still apply)
+            return spark.read.parquet(vdir)
         keep = prune_files(spark, vdir, ranges)
-        if keep:
-            # basePath: compact_sink allows partition_by + stats_columns
-            # together, so the pruned file list can live under hive dirs;
-            # without the anchor those partition columns would be dropped
-            # and unionByName(allowMissingColumns) would null them.
-            parts.append(spark.read.option("basePath", vdir).parquet(*keep))
-        else:
-            # everything pruned: keep the schema contribution (and the
-            # not-empty contract) with a zero-row scan of the version dir
-            parts.append(spark.read.parquet(vdir).limit(0))
-    if tail:
-        parts.append(
-            spark.read.option("basePath", sink_path).parquet(
-                *[str(p) for p in tail]
-            )
-        )
-    if not parts:
-        raise FileNotFoundError(f"empty sink: {sink_path}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    from pyspark.sql import functions as F
+        if not keep:
+            # everything pruned: keep the level's schema contribution
+            return spark.read.parquet(vdir).limit(0)
+        # basePath: compact_sink allows partition_by + stats_columns
+        # together, so the pruned file list can live under hive dirs;
+        # without the anchor those partition columns would be dropped.
+        return spark.read.option("basePath", vdir).parquet(*keep)
 
+    out = _view(spark, sink_path, read_level)
+    if out is None:
+        raise FileNotFoundError(f"empty sink: {sink_path}")
     for col, (lo, hi) in ranges.items():
         if lo is not None:
             out = out.filter(F.col(col) >= lo)

@@ -33,9 +33,9 @@ test_streaming_chunk_dedup_ingest_pack_exactly_once``.
 
 Scale: each micro-batch costs one digest-keyed anti-join (64-hex keys;
 historical TEXT never moves) plus the batch-sized election and
-reassembly; the store grows by one partition per batch and old
-partitions can compact via `streaming/compact.py` without touching the
-stream (readers prune by batch_id either way).
+reassembly; the store grows by one partition per batch and sealed
+partitions compact via `streaming/compact.compact_sink` without
+touching the stream (the probe reads `compact.live_view` either way).
 
 Round 11 — digest-PREFIX bucketing: each batch partition is further
 hive-partitioned by ``dp`` = the first ``prefix_width`` hex chars of
@@ -82,32 +82,40 @@ def read_store_before(
     the batch and commit duplicate-retaining output, the exact
     silent-rot class this module exists to prevent.
 
-    COMPACTED stores are first-class: a long-running ingest compacts
-    sealed batch dirs via `streaming/compact.compact_sink` (pass
-    ``partition_by=["dp"]`` to keep the prefix pruning), and this probe
-    reads manifest-compacted data + the strictly-older uncompacted tail.
-    Without the manifest branch a compacted store would be SILENTLY
-    invisible (Spark ignores underscore-prefixed ``_compacted/`` dirs in
-    a plain recursive read), so post-compaction probes would see no
-    history and retain duplicates — row counts intact, values rotted.
-    A manifest covering ``batch_id`` itself (or newer) raises loudly:
-    compaction folding a still-replayable batch into history would
-    recreate the flat-store self-dedup bug; compact only batches the
-    stream's checkpoint has sealed.
+    The probe reads `compact.live_view` — compacted levels plus the
+    strictly-older uncompacted tail, through the store's own Hadoop
+    filesystem. A long-running ingest compacts sealed batch dirs with
+    `compact.compact_sink` (pass ``partition_by=["dp"]`` to keep the
+    prefix pruning). A manifest covering ``batch_id`` itself (or newer)
+    raises loudly: compaction folding a still-replayable batch into
+    history would recreate the flat-store self-dedup bug; compact only
+    batches the stream's checkpoint has sealed.
 
     Pre-dp stores (written before digest-prefix bucketing existed) read
     back with dp=NULL under the pinned schema; NULL dp ALWAYS matches
     the prefix filter, so legacy history is never silently dropped
     (ADVICE r11). A store MIXING flat legacy batches with dp-bucketed
     batches fails loudly (Spark's CONFLICTING_PARTITION_COLUMN_NAMES —
-    partition layouts can't merge in one recursive scan); migrate by
-    compacting the sealed legacy batches with
-    ``compact_sink(..., partition_by=["dp"])`` first."""
-    from pyspark.errors import AnalysisException
+    partition layouts can't merge in one scan); migrate by compacting
+    the sealed legacy batches with ``compact_sink(...,
+    partition_by=["dp"])`` first."""
+    from usgs_lidar_spark.streaming.compact import (
+        _read_store_manifest,
+        live_view,
+    )
 
-    from usgs_lidar_spark.streaming.compact import _batch_dirs, _read_manifest
-
-    pred = F.col("batch_id") < batch_id
+    manifest = _read_store_manifest(spark, store_path)
+    if manifest is not None and manifest["max_batch_id"] >= batch_id:
+        raise ValueError(
+            f"digest store {store_path!r} is compacted through "
+            f"batch {manifest['max_batch_id']}, but batch {batch_id} may "
+            "still be replayed — its own digests would sit inside "
+            "'history' and the replay would dedup the batch against "
+            "itself. Compact only batches sealed by the stream checkpoint."
+        )
+    store = live_view(spark, store_path, STORE_SCHEMA, before=batch_id)
+    if store is None:
+        return spark.createDataFrame([], STORE_SCHEMA).select("digest")
     if prefixes is not None:
         # Literal partition filter: only the prefix buckets the probing
         # batch can match are listed/read (bounded: <= 16^prefix_width
@@ -121,61 +129,10 @@ def read_store_before(
         # exists to prevent. Partition pruning on dp-bucketed stores is
         # unaffected (a hive-partitioned dp is never NULL on disk, and
         # IsNull on a partition column prunes to nothing there).
-        pred = pred & (
+        store = store.filter(
             F.col("dp").isNull() | F.col("dp").isin(list(prefixes))
         )
-
-    manifest = _read_manifest(store_path)
-    if manifest is not None:
-        covered = int(manifest["max_batch_id"])
-        if covered >= batch_id:
-            raise ValueError(
-                f"digest store {store_path!r} is compacted through "
-                f"batch {covered}, but batch {batch_id} may still be "
-                "replayed — its own digests would sit inside 'history' "
-                "and the replay would dedup the batch against itself. "
-                "Compact only batches sealed by the stream checkpoint."
-            )
-        from pathlib import Path
-
-        from usgs_lidar_spark.streaming.compact import _levels
-
-        # Pinned schema everywhere: the tail list is built by DIRECTORY
-        # name (strictly older than batch_id), so a crashed newer
-        # batch's partially-written files are never opened at all. The
-        # compacted portion is the manifest's LIVE LEVEL SET (round 16 —
-        # one dir per minor fold; the single-dir legacy format reads as
-        # a one-level set).
-        store = None
-        for lv in _levels(manifest):
-            vdir = str(Path(store_path) / "_compacted" / lv["dir"])
-            part = spark.read.option("basePath", vdir).schema(
-                STORE_SCHEMA
-            ).parquet(vdir)
-            store = part if store is None else store.unionByName(part)
-        tail = [
-            str(p)
-            for b, p in sorted(_batch_dirs(store_path).items())
-            if covered < b < batch_id
-        ]
-        if tail:
-            store = store.unionByName(
-                spark.read.option("basePath", store_path)
-                .schema(STORE_SCHEMA)
-                .parquet(*tail)
-            )
-        return store.filter(pred).select("digest")
-
-    try:
-        store = spark.read.schema(STORE_SCHEMA).parquet(store_path)
-    except AnalysisException as e:
-        # Spark 4 error condition for a missing input path. Anything
-        # else (ACLs, corrupt partition metadata, ...) is a real error.
-        cond = getattr(e, "getCondition", getattr(e, "getErrorClass", None))
-        if cond is not None and cond() == "PATH_NOT_FOUND":
-            return spark.createDataFrame([], STORE_SCHEMA).select("digest")
-        raise
-    return store.filter(pred).select("digest")
+    return store.select("digest")
 
 
 def chunk_dedup_ingest_writer(

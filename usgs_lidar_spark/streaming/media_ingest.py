@@ -60,12 +60,6 @@ ingest's committed-flags-are-immutable rule), and byte-identical
 duplicate rows inside one batch collapse. Two rows in ONE batch sharing
 media_id with DIFFERENT content remain a caller error (ids must name
 content uniquely); the labeling would carry both hash rows.
-
-All driver-side state listing/metadata IO goes through the Hadoop
-FileSystem API of the store's own filesystem — a labels directory on
-HDFS/S3 must never silently read as empty the way a local-only
-``pathlib`` probe would (that silent miss would rebuild the corpus
-labeling from one batch); unexpected listing errors re-raise loudly.
 """
 
 from __future__ import annotations
@@ -75,9 +69,19 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Pinned store schema: probe reads never run inference (a crashed
-#: batch's partially-written directory is never opened — the
-#: strictly-older batch_id filter prunes it first).
+from usgs_lidar_spark.streaming.compact import (
+    _delete,
+    _exists,
+    _publish,
+    _read_store_manifest,
+    _read_text,
+    compact,
+    list_sealed_batches,
+    live_view,
+    vacuum,
+)
+
+#: Pinned store schema: probe reads never run inference.
 HASH_STORE_SCHEMA = (
     "band_idx int, band_val bigint, media_id bigint, "
     "b0 bigint, b1 bigint, b2 bigint, b3 bigint, "
@@ -96,200 +100,32 @@ DP_META = "_dp_buckets"
 ROWS_PER_BUCKET = 4096
 
 
-def _jfs(spark, path: str):
-    """(Hadoop FileSystem, Path, jvm) for ``path`` — the path's OWN
-    filesystem (file://, hdfs://, s3a://...), not the local one."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    jfs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jfs, jpath, jvm
-
-
-def list_sealed_batches(spark, root: str) -> list[int]:
-    """Sorted batch ids of ``root``'s ``batch_id=<n>`` directories via
-    the Hadoop FileSystem API (works on any scheme Spark can read — a
-    local-only pathlib glob would silently return [] on HDFS/S3 and
-    the caller would rebuild state from one batch). Missing root reads
-    as no batches; any OTHER listing failure re-raises loudly (the
-    silent-rot contract of `streaming/ingest.read_store_before`)."""
-    jfs, jpath, _ = _jfs(spark, root)
-    if not jfs.exists(jpath):
-        return []
-    out: list[int] = []
-    for st in jfs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id="):
-            tail = name.split("=", 1)[1]
-            if tail.isdigit():
-                out.append(int(tail))
-    return sorted(out)
-
-
 def read_dp_buckets(spark, store_path: str) -> int | None:
     """The store's persisted dp bucket count, or None for a store that
     has not committed its first batch yet. Corrupt metadata re-raises
     — guessing a layout parameter is exactly the silent-miss bug the
     metadata exists to prevent."""
-    jfs, _, jvm = _jfs(spark, store_path)
-    p = jvm.org.apache.hadoop.fs.Path(f"{store_path}/{DP_META}")
-    if not jfs.exists(p):
+    text = _read_text(spark, f"{store_path}/{DP_META}")
+    if text is None:
         return None
-    stream = jfs.open(p)
-    try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        line = reader.readLine()
-    finally:
-        stream.close()
-    text = (line or "").strip()
-    if not text.isdigit() or int(text) < 1:
+    line = text.split("\n", 1)[0].strip()
+    if not line.isdigit() or int(line) < 1:
         raise ValueError(
             f"corrupt dp_buckets metadata at {store_path}/{DP_META}: "
             f"{line!r} (expected one positive integer line)"
         )
-    return int(text)
+    return int(line)
 
 
 def _write_dp_buckets(spark, store_path: str, dp_buckets: int) -> None:
-    """Persist the layout metadata ATOMICALLY (hidden tmp + rename,
-    mirroring `_write_store_manifest`): a crash mid-write must never
-    leave a truncated ``_dp_buckets`` — that file failing the corrupt
-    check on every later open would wedge the store needing manual
-    repair, since `_resolve_dp_buckets` only rewrites when the file is
-    ABSENT. With tmp+rename the final name either doesn't exist (the
-    replayed first batch re-derives and self-heals) or is complete."""
-    jfs, _, jvm = _jfs(spark, store_path)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{store_path}/.{DP_META}.tmp")
-    out = jfs.create(tmp, True)
-    try:
-        out.write(bytearray(f"{int(dp_buckets)}\n".encode()))
-    finally:
-        out.close()
-    final = jvm.org.apache.hadoop.fs.Path(f"{store_path}/{DP_META}")
-    if not jfs.rename(tmp, final):
-        raise OSError(f"could not publish {store_path}/{DP_META}")
-
-
-# ---------------------------------------------------------------------------
-# Store compaction + vacuum (the `streaming/compact.py` protocol, re-bound
-# to Hadoop FS driver IO so it holds on HDFS/S3 like the rest of this
-# module). The band index accumulates one batch_id=<n>/dp=<bucket> tree per
-# micro-batch — at 100 TB that is the classic small-file problem on the
-# probe's read path. Compaction merges sealed batches into well-sized
-# dp-partitioned datasets under `_compacted/v<K>/` and publishes the live
-# set via a version-named manifest (`_compacted/MANIFEST-<K>.json`, written
-# tmp + atomic rename; readers take the highest K).
-#
-# LEVELED, LSM-style (round 16 — the r15 single-level form rewrote the
-# ENTIRE compacted dataset every run, O(store) write amplification paid
-# inline every Nth micro-batch under `compact_every`, total write volume
-# quadratic over a stream's lifetime): the manifest lists MULTIPLE level
-# dirs. A MINOR compaction folds only the tail batches into one NEW small
-# level — O(tail) bytes written, independent of store size. A MAJOR
-# compaction (explicit `major=True`, or triggered when the level count
-# would exceed ``max_levels``) merges all levels + tail into one dir —
-# rare by construction, so amortized per-batch write volume is bounded by
-# O(store / (compact_every * max_levels)) instead of O(store /
-# compact_every). The probe's consistent view is the manifest's level set
-# + batch dirs NEWER than its max_batch_id. Soundness: probes only ever
-# read `batch_id < current`, current only grows, and every merge re-emits
-# every row with its original batch_id column, so the view is
-# row-identical at every protocol point; dp stays a partition column in
-# every level, so prefix pruning keeps working. Crash-safe in the
-# compact.py sense: crash before manifest publish leaves an orphan v<K>
-# readers ignore and the NEXT compaction overwrites (it reuses version
-# K = active+1, mode overwrite); crash after publish leaves superseded
-# batch dirs readers skip (ids <= the manifest's max) and — after a major
-# — merged level dirs no longer in the live set; `vacuum_media_store`
-# removes both, and deliberately SPARES version dirs NEWER than the
-# active manifest (a concurrent compaction's in-progress build).
-#
-# MAINTENANCE IS SINGLE-MAINTAINER PER STORE: the inline `compact_every`
-# path satisfies this for free (foreachBatch serializes batches); an
-# external scheduler must not run compaction concurrently with a stream
-# that sets `compact_every`. Vacuum is safe to run at any time ONLY
-# because it skips in-flight (newer-versioned) build dirs.
-# ---------------------------------------------------------------------------
-
-_MANIFEST_RE = "MANIFEST-"
-
-
-def _read_store_manifest(spark, store_path: str) -> dict | None:
-    """Highest-version manifest under ``store/_compacted``, or None when
-    no compaction has published yet. Hadoop-FS listing + read; corrupt
-    manifest re-raises (same loud-failure contract as the dp metadata)."""
-    import json
-
-    comp = f"{store_path}/_compacted"
-    jfs, _, jvm = _jfs(spark, comp)
-    jcomp = jvm.org.apache.hadoop.fs.Path(comp)
-    if not jfs.exists(jcomp):
-        return None
-    best: tuple[int, str] | None = None
-    for st in jfs.listStatus(jcomp):
-        name = st.getPath().getName()
-        if st.isFile() and name.startswith(_MANIFEST_RE) and name.endswith(
-            ".json"
-        ):
-            tail = name[len(_MANIFEST_RE) : -len(".json")]
-            if tail.isdigit() and (best is None or int(tail) > best[0]):
-                best = (int(tail), name)
-    if best is None:
-        return None
-    stream = jfs.open(jvm.org.apache.hadoop.fs.Path(f"{comp}/{best[1]}"))
-    try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        lines = []
-        while True:
-            line = reader.readLine()
-            if line is None:
-                break
-            lines.append(line)
-    finally:
-        stream.close()
-    return json.loads("\n".join(lines))
-
-
-def _write_store_manifest(spark, store_path: str, manifest: dict) -> None:
-    """Publish atomically: write the complete JSON to a hidden tmp name,
-    then rename to its final version-named path (rename-to-fresh-name is
-    atomic on HDFS and posix; no overwrite semantics needed because each
-    version gets its own file — readers take the highest version)."""
-    import json
-
-    comp = f"{store_path}/_compacted"
-    jfs, _, jvm = _jfs(spark, comp)
-    name = f"{_MANIFEST_RE}{int(manifest['version'])}.json"
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{comp}/.{name}.tmp")
-    out = jfs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(manifest).encode()))
-    finally:
-        out.close()
-    final = jvm.org.apache.hadoop.fs.Path(f"{comp}/{name}")
-    if not jfs.rename(tmp, final):
-        raise OSError(f"could not publish manifest {comp}/{name}")
-
-
-def _manifest_levels(manifest: dict | None) -> list[dict]:
-    """The manifest's live level list, oldest first — each entry
-    ``{"dir": "v<K>", "max_batch_id": n}``. Handles both the round-16
-    leveled format (``levels``) and the round-15 single-dir format
-    (``version_dir``), so a store compacted at the old revision reads
-    and keeps compacting without migration."""
-    if manifest is None:
-        return []
-    if "levels" in manifest:
-        return [dict(lv) for lv in manifest["levels"]]
-    return [
-        {
-            "dir": manifest["version_dir"],
-            "max_batch_id": manifest["max_batch_id"],
-        }
-    ]
+    """Persist the layout metadata ATOMICALLY (`compact._publish`): a
+    crash mid-write must never leave a truncated ``_dp_buckets`` — that
+    file failing the corrupt check on every later open would wedge the
+    store needing manual repair, since `_resolve_dp_buckets` only
+    rewrites when the file is ABSENT. With tmp+rename the final name
+    either doesn't exist (the replayed first batch re-derives and
+    self-heals) or is complete."""
+    _publish(spark, f"{store_path}/{DP_META}", f"{int(dp_buckets)}\n")
 
 
 def compact_media_store(
@@ -299,15 +135,12 @@ def compact_media_store(
     major: bool = False,
     max_levels: int = 8,
 ) -> dict | None:
-    """LEVELED compaction of the band-index store (see the protocol
-    block above). MINOR (the default): fold ONLY the sealed batch
-    directories in (manifest max, ``up_to_batch``] into one NEW level
-    dir — O(tail) bytes written, existing levels untouched. MAJOR
-    (``major=True``, or automatic when the minor would push the live
-    level count past ``max_levels``): merge all live levels + the tail
-    into one dir and retire the merged level dirs. Publishes the new
-    manifest, then deletes the merged inputs. Returns the new manifest,
-    or None when there is nothing to do.
+    """`compact.compact` over the band index: MINOR (the default) folds
+    the sealed batch dirs in (manifest max, ``up_to_batch``] into one
+    new dp-partitioned level; MAJOR (``major=True``, or automatic past
+    ``max_levels``) merges the live levels too. dp stays a partition
+    column in every level, so the probe's prefix pruning keeps working.
+    Returns the new manifest, or None when there is nothing to do.
 
     ``up_to_batch`` must be <= the stream checkpoint's last COMMITTED
     batch id: a recovering stream only ever replays batches above that,
@@ -320,126 +153,27 @@ def compact_media_store(
     SINGLE MAINTAINER PER STORE: do not run two compactions (or a
     compaction and an external vacuum) concurrently — the inline
     `compact_every` path serializes maintenance for free."""
-    if int(max_levels) < 1:
-        raise ValueError(f"max_levels must be >= 1, got {max_levels}")
-    manifest = _read_store_manifest(spark, store_path)
-    levels = _manifest_levels(manifest)
-    covered = manifest["max_batch_id"] if manifest else -1
-    todo = [
-        b
-        for b in list_sealed_batches(spark, store_path)
-        if covered < b <= int(up_to_batch)
-    ]
-    major = bool(major) or (len(levels) + 1 > int(max_levels))
-    if not todo and not (major and len(levels) > 1):
-        return None  # nothing to fold (a 1-level major is already major)
-    merged_levels = levels if major else []
-    dp = read_dp_buckets(spark, store_path)
-    cols = [c.split(" ")[0] for c in HASH_STORE_SCHEMA.split(", ")]
-    # Two input layouts: batch dirs carry batch_id as a hive partition
-    # column (recovered via basePath); level dirs store it as a data
-    # column (the merge below re-emits it) with only dp partitioned.
-    parts: list[DataFrame] = []
-    if todo:
-        parts.append(
-            spark.read.option("basePath", store_path)
-            .schema(HASH_STORE_SCHEMA)
-            .parquet(*[f"{store_path}/batch_id={b}" for b in todo])
-            .select(*cols)
-        )
-    for lv in merged_levels:
-        parts.append(
-            spark.read.schema(HASH_STORE_SCHEMA)
-            .parquet(f"{store_path}/_compacted/{lv['dir']}")
-            .select(*cols)
-        )
-    scan = parts[0]
-    for p in parts[1:]:
-        scan = scan.unionByName(p)
-    version = (manifest["version"] + 1) if manifest else 1
-    vdir = f"{store_path}/_compacted/v{version}"
-    # ~1 file per dp bucket: partition the shuffle by dp itself (capped —
-    # at huge dp counts a few buckets per task is fine).
-    scan.repartition(min(int(dp or 32), 256), F.col("dp")).write.partitionBy(
-        "dp"
-    ).mode("overwrite").parquet(vdir)
-    new_max = max(todo) if todo else covered
-    new_level = {
-        "dir": f"v{version}",
-        "max_batch_id": new_max if major else max(todo),
-    }
-    new_manifest = {
-        "version": version,
-        "levels": ([] if major else levels) + [new_level],
-        "max_batch_id": new_max,
-    }
-    _write_store_manifest(spark, store_path, new_manifest)
-    # Post-publish cleanup (crash here leaves garbage vacuum removes).
-    jfs, _, jvm = _jfs(spark, store_path)
-    for b in todo:
-        jfs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{store_path}/batch_id={b}"), True
-        )
-    for lv in merged_levels:
-        jfs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{store_path}/_compacted/{lv['dir']}"
-            ),
-            True,
-        )
-    return new_manifest
+
+    def write(df: DataFrame, vdir: str) -> None:
+        # ~1 file per dp bucket: partition the shuffle by dp itself
+        # (capped — at huge dp counts a few buckets per task is fine).
+        dp = read_dp_buckets(spark, store_path)
+        df.repartition(min(int(dp or 32), 256), F.col("dp")).write.partitionBy(
+            "dp"
+        ).mode("overwrite").parquet(vdir)
+
+    return compact(
+        spark, store_path, int(up_to_batch), write, HASH_STORE_SCHEMA,
+        major, max_levels,
+    )
 
 
 def vacuum_media_store(spark, store_path: str) -> dict:
-    """Remove crash orphans the compaction protocol can leave behind:
-    batch dirs already covered by the manifest (crash after publish,
-    before deletes), retired ``v<J>`` level dirs that are neither in the
-    active manifest's level set nor NEWER than its version, manifests
-    older than the active one, and stale tmp files. Version dirs with
-    J > the active version are deliberately SPARED — they are a
-    concurrent compaction's in-progress build (deleting one mid-build
-    would kill that compaction at publish); a crashed build's orphan at
-    J = active+1 is overwritten by the next compaction rather than
-    vacuumed. Everything removed is unreachable through the manifest
-    view. No manifest means nothing is superseded yet — no-op.
-
-    Like compaction, vacuum assumes ONE maintainer per store issues it
-    (the inline `compact_every` path qualifies); the spared-newer rule
-    above is what makes an extra, racing vacuum merely wasteful instead
-    of destructive."""
-    manifest = _read_store_manifest(spark, store_path)
-    removed = {"batch_dirs": 0, "version_dirs": 0, "manifests": 0, "tmp": 0}
-    if manifest is None:
-        return removed
-    live = {lv["dir"] for lv in _manifest_levels(manifest)}
-    jfs, _, jvm = _jfs(spark, store_path)
-    hp = jvm.org.apache.hadoop.fs.Path
-    for b in list_sealed_batches(spark, store_path):
-        if b <= manifest["max_batch_id"]:
-            jfs.delete(hp(f"{store_path}/batch_id={b}"), True)
-            removed["batch_dirs"] += 1
-    comp = f"{store_path}/_compacted"
-    for st in jfs.listStatus(hp(comp)):
-        name = st.getPath().getName()
-        if st.isDirectory() and name not in live:
-            tail = name[1:] if name.startswith("v") else ""
-            if tail.isdigit() and int(tail) <= manifest["version"]:
-                jfs.delete(st.getPath(), True)
-                removed["version_dirs"] += 1
-        elif st.isFile() and name.startswith(f".{_MANIFEST_RE}"):
-            jfs.delete(st.getPath(), False)
-            removed["tmp"] += 1
-        elif (
-            st.isFile()
-            and name.startswith(_MANIFEST_RE)
-            and name.endswith(".json")
-            and name[len(_MANIFEST_RE) : -len(".json")].isdigit()
-            and int(name[len(_MANIFEST_RE) : -len(".json")])
-            < manifest["version"]
-        ):
-            jfs.delete(st.getPath(), False)
-            removed["manifests"] += 1
-    return removed
+    """`compact.vacuum` over the band index. Like compaction, assumes
+    ONE maintainer per store (the inline `compact_every` path
+    qualifies); vacuum sparing newer-versioned build dirs is what makes
+    an extra, racing vacuum merely wasteful instead of destructive."""
+    return vacuum(spark, store_path)
 
 
 def vacuum_media_labels(
@@ -458,19 +192,10 @@ def vacuum_media_labels(
     keepable = [b for b in sealed if b <= int(committed_batch_id)]
     if not keepable:
         return 0
-    keep = max(keepable)
-    jfs, _, jvm = _jfs(spark, labels_path)
-    n = 0
-    for b in sealed:
-        if b < keep:
-            jfs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{labels_path}/batch_id={b}"
-                ),
-                True,
-            )
-            n += 1
-    return n
+    older = [b for b in sealed if b < max(keepable)]
+    for b in older:
+        _delete(spark, f"{labels_path}/batch_id={b}")
+    return len(older)
 
 
 def _exploded_bands(hashes: DataFrame) -> DataFrame:
@@ -507,11 +232,10 @@ def read_hash_store_before(
     read failure re-raises loudly (the silent-rot contract of
     `streaming/ingest.read_store_before`).
 
-    The view is manifest-aware: the manifest's live LEVEL dirs (when
-    `compact_media_store` has published one) plus batch directories
-    NEWER than its max_batch_id — row-identical to the plain batch-dir
-    union at every protocol point, with dp a partition column in every
-    layout so prefix pruning reaches the file listing either way."""
+    The view is `compact.live_view` — row-identical to the plain
+    batch-dir union at every protocol point, with dp a partition column
+    in every layout so prefix pruning reaches the file listing either
+    way."""
     if prefixes is not None and dp_buckets is not None:
         stored = read_dp_buckets(spark, store_path)
         if stored is not None and stored != int(dp_buckets):
@@ -523,37 +247,12 @@ def read_hash_store_before(
                 "prefix pruning under a different bucket count silently "
                 "misses history pairs"
             )
-    pred = F.col("batch_id") < batch_id
+    store = live_view(spark, store_path, HASH_STORE_SCHEMA, before=batch_id)
+    if store is None:
+        store = spark.createDataFrame([], HASH_STORE_SCHEMA)
     if prefixes is not None:
-        pred = pred & F.col("dp").isin(list(prefixes))
-    cols = [c.split(" ")[0] for c in HASH_STORE_SCHEMA.split(", ")]
-    manifest = _read_store_manifest(spark, store_path)
-    covered = manifest["max_batch_id"] if manifest else -1
-    tail = [
-        b for b in list_sealed_batches(spark, store_path) if b > covered
-    ]
-    parts: list[DataFrame] = []
-    for lv in _manifest_levels(manifest):
-        parts.append(
-            spark.read.schema(HASH_STORE_SCHEMA)
-            .parquet(f"{store_path}/_compacted/{lv['dir']}")
-            .select(*cols)
-        )
-    if tail:
-        parts.append(
-            spark.read.option("basePath", store_path)
-            .schema(HASH_STORE_SCHEMA)
-            .parquet(*[f"{store_path}/batch_id={b}" for b in tail])
-            .select(*cols)
-        )
-    if not parts:
-        return spark.createDataFrame([], HASH_STORE_SCHEMA).drop(
-            "batch_id", "dp"
-        )
-    store = parts[0]
-    for p in parts[1:]:
-        store = store.unionByName(p)
-    return store.filter(pred).drop("batch_id", "dp")
+        store = store.filter(F.col("dp").isin(list(prefixes)))
+    return store.drop("batch_id", "dp")
 
 
 def read_labels_before(spark, labels_path: str, batch_id: int) -> DataFrame:
@@ -561,8 +260,8 @@ def read_labels_before(spark, labels_path: str, batch_id: int) -> DataFrame:
     than ``batch_id`` (directory-addressed, so a replayed batch's own
     crashed labels/batch_id=n output is never consulted). Fresh store
     reads as zero rows. Listing goes through the path's own Hadoop
-    filesystem — see module docstring for why a local-only probe is a
-    correctness bug, not a style choice."""
+    filesystem — see `streaming/compact.py` for why a local-only probe
+    is a correctness bug, not a style choice."""
     sealed = list_sealed_batches(spark, labels_path)
     older = [b for b in sealed if b < batch_id]
     if not older:
@@ -929,15 +628,10 @@ def materialize_media_shards(
     # off mid-write. Reading a partial labeling silently would be the
     # silent-rot class this module bans: accept only versions whose
     # _SUCCESS marker proves the write finished.
-    jfs, _, jvm = _jfs(spark, labels_path)
     sealed = [
         b
         for b in list_sealed_batches(spark, labels_path)
-        if jfs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{labels_path}/batch_id={b}/_SUCCESS"
-            )
-        )
+        if _exists(spark, f"{labels_path}/batch_id={b}/_SUCCESS")
     ]
     if not sealed:
         raise FileNotFoundError(

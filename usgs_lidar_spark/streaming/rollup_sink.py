@@ -11,14 +11,14 @@ evicted and lives inside the streaming query. This sink keeps the state
 OUT of the stream as plain parquet anyone can read, merge cost
 O(batch + rollup) per micro-batch.
 
-Exactly-once: foreachBatch is at-least-once, so the publish is keyed by
-batch id — version directory ``v<batchId>`` plus an atomic manifest
-swap (tmp + os.replace, same protocol as streaming/compact.py). A
-replayed batch rewrites ITS OWN version dir from the SAME previous
-version (the manifest only ever points at a batch id < the replayed
-one... a replay of batch N finds the manifest at N and rebuilds v<N>
-from v<M>, M < N, byte-identically) and re-swaps the manifest — no
-double counting, proven by the crash-restart test.
+Exactly-once: foreachBatch is at-least-once, so the store is a
+`streaming/compact.py` store with a single live level — the merged
+rollup — published by a version-named manifest that records the batch
+id it covers. A batch the manifest already records is a replay whose
+output would be byte-identical, so it is a no-op; any other batch
+merges into the live level, writes the next version dir and publishes
+it. A crash before the publish leaves an orphan version the retry
+overwrites; no double counting, proven by the crash-restart test.
 
 Scale: the merge is the rollup algebra's union+reduce (group-cardinality
 sized state); the stream's own state store holds nothing but source
@@ -27,31 +27,26 @@ offsets. Driver-side file ops are manifest-sized.
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Callable
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from usgs_lidar_spark.operators.rollup import merge_rollup, rollup_state
-
-MANIFEST = "MANIFEST.json"
-
-
-def _read_manifest(path: str) -> dict | None:
-    p = Path(path) / MANIFEST
-    if not p.is_file():
-        return None
-    return json.loads(p.read_text())
+from usgs_lidar_spark.streaming.compact import (
+    _read_store_manifest,
+    _write_store_manifest,
+    level_dir,
+    live_view,
+    vacuum,
+)
 
 
 def read_rollup(spark: SparkSession, path: str) -> DataFrame:
     """The current materialized rollup (manifest-pointed version)."""
-    m = _read_manifest(path)
-    if m is None:
+    view = live_view(spark, path)
+    if view is None:
         raise FileNotFoundError(f"no rollup published under {path}")
-    return spark.read.parquet(str(Path(path) / m["version_dir"]))
+    return view
 
 
 def rollup_writer(
@@ -64,42 +59,27 @@ def rollup_writer(
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         spark = df.sparkSession
-        batch_state = rollup_state(df, keys, measures, digits)
-        m = _read_manifest(path)
-        # A replay of batch N must merge against the same base it used
-        # the first time: any version with id < N qualifies (the manifest
-        # can only point at N itself after a crash-after-publish, in
-        # which case its PREVIOUS pointer is recorded in the manifest).
-        if m is not None and m["batch_id"] >= batch_id:
-            base_dir = m.get("prev_version_dir")
-        else:
-            base_dir = m["version_dir"] if m else None
-        if base_dir:
-            stored = spark.read.parquet(str(Path(path) / base_dir))
-            merged = merge_rollup(stored, batch_state, keys, measures)
-        else:
-            merged = batch_state
-        root = Path(path)
-        root.mkdir(parents=True, exist_ok=True)
-        vdir = f"v{batch_id}"
-        merged.write.mode("overwrite").parquet(str(root / vdir))
-        new_m = {
-            "batch_id": batch_id,
-            "version_dir": vdir,
-            "prev_version_dir": base_dir,
-        }
-        tmp = root / f".{MANIFEST}.tmp"
-        tmp.write_text(json.dumps(new_m))
-        os.replace(tmp, root / MANIFEST)
-        # Post-publish cleanup: keep the active version and its base (the
-        # base is what a replay of THIS batch would rebuild from); every
-        # older version is unreachable by both readers and replays.
-        import shutil
-
-        keep = {vdir, base_dir}
-        for child in root.iterdir():
-            if child.is_dir() and child.name.startswith("v") and child.name not in keep:
-                shutil.rmtree(child, ignore_errors=True)
+        m = _read_store_manifest(spark, path)
+        if m is not None and m["max_batch_id"] >= batch_id:
+            return  # replay of a published batch: same bytes, nothing to do
+        merged = rollup_state(df, keys, measures, digits)
+        stored = live_view(spark, path)
+        if stored is not None:
+            merged = merge_rollup(stored, merged, keys, measures)
+        version = (m["version"] + 1) if m else 1
+        vdir = f"v{version}"
+        merged.write.mode("overwrite").parquet(level_dir(path, vdir))
+        _write_store_manifest(
+            spark,
+            path,
+            {
+                "version": version,
+                "levels": [{"dir": vdir, "max_batch_id": batch_id}],
+                "max_batch_id": batch_id,
+                "n_source_batches": version,
+            },
+        )
+        vacuum(spark, path)  # the superseded version and manifest
 
     return write_batch
 
