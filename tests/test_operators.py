@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from usgs_lidar_spark.multimodal import fake_decode_image, to_media_table, decode_image
 from usgs_lidar_spark.operators.asof import asof_join
-from usgs_lidar_spark.operators.dedup import char_shingles, simhash64
+from usgs_lidar_spark.operators.dedup import char_shingles
 from usgs_lidar_spark.operators.spatial import (
     bbox_contains,
     filter_within_polygon,
@@ -219,12 +219,10 @@ def test_shingle_apis_cap_stop_shingles_by_default(spark):
     from usgs_lidar_spark.operators.dedup import (
         char_shingles,
         minhash_lsh_pairs,
-        minhash_signatures,
         ngram_jaccard_pairs,
     )
 
-    for fn in (char_shingles, ngram_jaccard_pairs, minhash_signatures,
-               minhash_lsh_pairs):
+    for fn in (char_shingles, ngram_jaccard_pairs, minhash_lsh_pairs):
         default = inspect.signature(fn).parameters["max_df"].default
         assert default is not None and default > 0, fn.__name__
 
@@ -758,15 +756,6 @@ def test_semdedup_flags_accepts_dataframe_quantizer(spark):
         assert out[v + 100000] == (1, False)  # its re-encode is dropped
 
 
-def test_simhash_deterministic(spark):
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over it"), (2, "the quick brown fox jumps over it")],
-        ["doc_id", "text"],
-    )
-    fps = [r["simhash"] for r in simhash64(docs, "text", "doc_id").collect()]
-    assert fps[0] == fps[1] >= 0
-
-
 def test_exact_dedup_hashed_matches_text_key(spark):
     """Hash-first dedup (shuffles hashes, never text) must agree with the
     text-key form on (keep_id, n_copies), with no detected collisions."""
@@ -820,63 +809,30 @@ def test_exact_dedup_hashed_second_family_independent(spark):
     assert all(r["n_variants"] == r["n_copies"] for r in forced)
 
 
-def test_simhash_near_dup_blocked_equals_bruteforce(spark):
-    """Pigeonhole block join must find EXACTLY the brute-force
-    Hamming<=max_hamming pairs (max_hamming < n_blocks guarantees no
-    false negatives; popcount verify removes false positives)."""
-    from usgs_lidar_spark.operators.dedup import simhash64, simhash_near_dup_pairs
-
-    base = "the quick brown fox jumps over the lazy dog near the riverbank"
-    rows = [
-        (1, base),
-        (2, base),                       # identical -> hamming 0
-        (3, base.replace("lazy", "hazy")),  # near-dup
-        (4, "completely different content about spark shuffle planning"),
-        (5, base.replace("river", "water")),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = sorted(
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_dup_pairs(
-            docs, "text", "doc_id", k=8, max_hamming=3, n_blocks=4
-        ).collect()
-    )
-    fps = {r["doc_id"]: r["simhash"] for r in simhash64(docs, "text", "doc_id").collect()}
-    ids = sorted(fps)
-    brute = sorted(
-        (a, b, bin(fps[a] ^ fps[b]).count("1"))
-        for i, a in enumerate(ids)
-        for b in ids[i + 1:]
-        if bin(fps[a] ^ fps[b]).count("1") <= 3
-    )
-    assert got == brute
-    assert (1, 2, 0) in got  # identical docs collide at distance 0
-    with pytest.raises(ValueError):
-        simhash_near_dup_pairs(docs, "text", "doc_id", max_hamming=4, n_blocks=4)
-
-
 def test_simhash_hot_bucket_cap(spark):
     """max_bucket caps (block, value) bucket occupancy before the
     self-join. A generous cap changes nothing (capped == uncapped); a
     cap of 1 empties every shared bucket, so no pairs survive — the
     degenerate-hot-bucket quadratic is bounded by construction."""
-    from usgs_lidar_spark.operators.dedup import simhash_near_dup_pairs
+    from usgs_lidar_spark.operators.dedup import (
+        simhash_portable_near_dup_pairs,
+    )
 
-    base = "the quick brown fox jumps over the lazy dog near the riverbank"
+    base = [f"w{i}" for i in range(40)]
     rows = [
-        (1, base),
-        (2, base),
-        (3, base.replace("lazy", "hazy")),
-        (4, "completely different content about spark shuffle planning"),
-        (5, base.replace("river", "water")),
+        (1, " ".join(base)),
+        (2, " ".join(base)),
+        (3, " ".join(base[:38] + ["x1", "x2"])),
+        (4, " ".join(f"v{i}" for i in range(40))),
+        (5, " ".join(base[:39] + ["x3"])),
     ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     def pairs(**kw):
         return sorted(
             (r["id_a"], r["id_b"], r["hamming"])
-            for r in simhash_near_dup_pairs(
-                docs, "text", "doc_id", k=8, max_hamming=3, n_blocks=4, **kw
+            for r in simhash_portable_near_dup_pairs(
+                docs, n_bits=32, max_hamming=3, n_blocks=4, **kw
             ).collect()
         )
 
@@ -1035,32 +991,6 @@ def test_exact_dedup_hashed_primary_bits_validated(spark):
     for bad in (0, -1, 64, 65):
         with _pytest.raises(ValueError, match="primary_bits"):
             exact_dedup_hashed(docs, "text", "doc_id", primary_bits=bad)
-
-
-def test_kmeans_refine_reduces_inertia(spark):
-    """Lloyd iterations must not worsen the quantizer: mean best-cell
-    cosine similarity is non-decreasing after refinement."""
-    from usgs_lidar_spark.catalog import load_table
-    from usgs_lidar_spark.operators.similarity import (
-        _centroid_sims,
-        kmeans_refine,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-
-    def mean_best_sim(cents):
-        best = F.array_max(_centroid_sims("embedding", cents, 6))["sim"]
-        return emb.agg(F.avg(best)).collect()[0][0]
-
-    cents0 = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < 8).collect()
-    ]
-    before = mean_best_sim(cents0)
-    cents1 = kmeans_refine(emb, cents0, dim=len(cents0[0][1]), n_iter=2)
-    after = mean_best_sim(cents1)
-    assert after >= before - 1e-9
-    assert len(cents1) == len(cents0)
 
 
 def test_connected_components_chain_and_singleton(spark):
@@ -1587,37 +1517,6 @@ def test_split_by_group_no_leakage(spark):
     assert splits <= {"train", "val", "test"} and "train" in splits
 
 
-def test_pq_refinement_reduces_error(spark):
-    """Lloyd sub-codebook refinement must strictly reduce mean quantization
-    error vs the seeded codebooks, and the refined books plug into the
-    same encode/ADC path (full top-5 per query, valid codes)."""
-    from usgs_lidar_spark.operators.similarity import (
-        pq_adc_topk,
-        pq_codebooks_from_rows,
-        pq_quantization_error,
-        pq_refine_codebooks,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    seeds = [
-        [float(x) for x in r["embedding"]]
-        for r in emb.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
-    ]
-    cbs0 = pq_codebooks_from_rows(seeds, n_sub=4)
-    err0 = pq_quantization_error(emb, cbs0)
-    cbs1 = pq_refine_codebooks(emb, cbs0, n_iter=3)
-    err1 = pq_quantization_error(emb, cbs1)
-    assert err1 < err0 * 0.9, (err0, err1)
-
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = pq_adc_topk(emb, q, cbs1, k=5)
-    per_q = {r["query_id"]: r["n"] for r in
-             out.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert all(n == 5 for n in per_q.values())
-
-
 def test_multiprobe2_candidates_superset(spark):
     """Hamming-2 probing can only add candidates over Hamming-1: every
     neighbor the 1-flip probe ranks with sim above the 2-flip probe's
@@ -1641,27 +1540,6 @@ def test_multiprobe2_candidates_superset(spark):
     assert set(worst2) >= set(worst1)
     for qid, w1 in worst1.items():
         assert worst2[qid] >= w1, (qid, w1, worst2[qid])
-
-
-def test_bruteforce_arrow_matches_expression_path(spark):
-    """The numpy-matmul fast path must reproduce the expression path's
-    top-k exactly (same rounding, same tie order) — the throughput
-    variant may never change answers."""
-    from usgs_lidar_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        cosine_topk_bruteforce_arrow,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    expr_path = cosine_topk_bruteforce(emb, q, k=5)
-    arrow_path = cosine_topk_bruteforce_arrow(
-        emb.repartition(7), q, k=5  # odd partitioning: partial top-k merge
-    )
-    assert arrow_path.exceptAll(expr_path).count() == 0
-    assert expr_path.exceptAll(arrow_path).count() == 0
 
 
 def test_split_and_sample_handle_negative_and_null_ids(spark):
@@ -1952,18 +1830,11 @@ def test_contamination_fractional_cap_is_scale_stable(spark):
     assert flagged(big, max_df=2) == []
 
 
-def test_ivf_append_matches_full_assign_and_drift_vs_refined(spark):
-    """Incremental IVF maintenance: (a) appending a batch with the
+def test_ivf_append_matches_full_assign(spark):
+    """Incremental IVF maintenance: appending a batch with the
     existing quantizer is indistinguishable from re-assigning the whole
-    corpus; (b) drift metrics against a kmeans_refine'd quantizer are
-    well-formed and the refined quantizer never LOWERS mean within-cell
-    similarity on the data it was refined on."""
-    from usgs_lidar_spark.operators.similarity import (
-        ivf_append,
-        ivf_assign,
-        ivf_drift_metrics,
-        kmeans_refine,
-    )
+    corpus."""
+    from usgs_lidar_spark.operators.similarity import ivf_append, ivf_assign
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = [
@@ -1976,22 +1847,6 @@ def test_ivf_append_matches_full_assign_and_drift_vs_refined(spark):
     a = {r["vec_id"]: (r["__cid"], r["__csim"]) for r in appended.collect()}
     f = {r["vec_id"]: (r["__cid"], r["__csim"]) for r in full.collect()}
     assert a == f and len(a) == 500
-
-    refined = kmeans_refine(emb, cents, n_iter=1)
-    drift = ivf_drift_metrics(emb, cents, refined).collect()
-    assert sum(r["n"] for r in drift) == 500
-    for r in drift:
-        assert 0.0 <= r["moved_frac"] <= 1.0
-        assert r["n_moved"] <= r["n"]
-        assert -1.0 <= r["mean_csim"] <= 1.0
-    # Lloyd step quality: mean sim to assigned centroid must not drop.
-    def mean_csim(centroids):
-        rows = ivf_assign(emb, centroids, keep_sim=True).agg(
-            F.avg("__csim").alias("m")
-        ).collect()
-        return rows[0]["m"]
-
-    assert mean_csim(refined) >= mean_csim(cents) - 1e-9
 
 
 def test_gap_fill_ffill_preserves_occupied_null(spark):
@@ -2045,28 +1900,6 @@ def test_portable_hash_bucket_extreme_ids(spark):
         assert 0 <= got[i] < N_BUCKETS
 
 
-def test_bruteforce_arrow_preserves_id_types(spark):
-    """Output id columns keep the INPUT id types (int stays int), and an
-    oversized query side fails loudly instead of a silent full collect."""
-    from usgs_lidar_spark.operators.similarity import (
-        cosine_topk_bruteforce_arrow,
-    )
-
-    emb = spark.createDataFrame(
-        [(i, [float(i == j) for j in range(4)]) for i in range(6)],
-        "vec_id int, embedding array<double>",
-    )
-    q = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 0.0])], "query_id smallint, embedding array<double>"
-    )
-    out = cosine_topk_bruteforce_arrow(emb, q, k=2)
-    dts = dict(out.dtypes)
-    assert dts["query_id"] == "smallint" and dts["neighbor_id"] == "int"
-    assert out.count() == 2
-    with pytest.raises(ValueError, match="max_queries"):
-        cosine_topk_bruteforce_arrow(emb, q, k=2, max_queries=0)
-
-
 def test_new_operators_tolerate_empty_inputs(spark):
     """Empty-input robustness sweep for the round-4 operators: every path
     returns an empty (or sensible) result instead of crashing."""
@@ -2078,7 +1911,6 @@ def test_new_operators_tolerate_empty_inputs(spark):
     )
     from usgs_lidar_spark.operators.resample import gap_fill, resample_events
     from usgs_lidar_spark.operators.similarity import (
-        cosine_topk_bruteforce_arrow,
         pq_adc_topk,
         pq_codebooks_from_rows,
     )
@@ -2113,15 +1945,6 @@ def test_new_operators_tolerate_empty_inputs(spark):
         "query_id long, embedding array<double>",
     )
     assert pq_adc_topk(emb, q, cbs, k=3).count() == 0  # empty corpus
-    assert cosine_topk_bruteforce_arrow(emb, q, k=3).count() == 0
-    assert cosine_topk_bruteforce_arrow(
-        some_docs.select(
-            F.col("doc_id").alias("vec_id"),
-            F.array(*[F.lit(1.0)] * 8).alias("embedding"),
-        ),
-        q.limit(0),
-        k=3,
-    ).count() == 0  # empty queries
 
 
 def test_ivf_pq_narrowed_probe_recall_floor(spark):
@@ -4982,15 +4805,10 @@ def test_rp_doc_embedding_vs_bruteforce_and_jl_property(spark):
 def test_kmeans_step_exact_vs_python_reference(spark):
     """The exact Lloyd step's integer cell statistics match a Python
     reimplementation of the quantized argmax + coordinate sums
-    cell-for-cell, occupancies sum to the corpus size, and the derived
-    means land within quantization precision of the float-path
-    kmeans_refine means."""
+    cell-for-cell and occupancies sum to the corpus size."""
     import math
 
-    from usgs_lidar_spark.operators.similarity import (
-        kmeans_refine,
-        kmeans_step_exact,
-    )
+    from usgs_lidar_spark.operators.similarity import kmeans_step_exact
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     rows = [
@@ -5030,13 +4848,6 @@ def test_kmeans_step_exact_vs_python_reference(spark):
     want = {k: (n_per_cell[k[0]], v) for k, v in ref.items()}
     assert step == want
     assert sum(n_per_cell.values()) == len(rows)
-
-    refined = dict(kmeans_refine(emb, cents, dim=64, n_iter=1))
-    for (cid, dim), (n, cs) in step.items():
-        mean_from_step = cs / (n * s)
-        # float-path assignment can differ on knife-edge ties, so this
-        # is a loose sanity band, not an exactness pin
-        assert abs(mean_from_step - refined[cid][dim - 1]) < 0.02
 
 
 def test_kmeans_two_steps_monotone_inertia_and_empty_cell_keep(spark):
@@ -5974,20 +5785,12 @@ def test_near_dup_dhash_combo_lossless_and_guards(spark):
     finds EVERY pair a brute-force 128-bit Hamming scan finds
     (pigeonhole: 6 differing bits leave >= 2 intact bands => >= 1
     intact combination), on a population with planted 1-6-bit
-    perturbations and pseudo-random far pairs. The generalized packer
-    at n_bands=4 must equal the classic 64-bit packer bit-for-bit, and
-    the radius/combo guards must fail loudly."""
+    perturbations and pseudo-random far pairs, and the radius/combo
+    guards must fail loudly."""
     import itertools
     import pytest as _pytest
 
     from usgs_lidar_spark.multimodal import near_dup_media_by_dhash_combo
-    from usgs_lidar_spark.multimodal.binary_ops import (
-        _pack_dhash_bands,
-        _pack_dhash_bands_n,
-    )
-
-    px = [(i * 37 + 11) % 251 for i in range(72)]
-    assert _pack_dhash_bands_n(px, 4) == _pack_dhash_bands(px)
 
     rows = []
     for i in range(30):
@@ -6870,11 +6673,12 @@ def test_semantic_contamination_arrow_parity(spark):
 
 
 def test_quant_exact_kernels_match_expr(spark):
-    """Optimization round 16: the quantized-exact Arrow kernels
-    (`impl="kernel"`, the auto path past the expression budget) must
-    agree BIT FOR BIT with the literal-expression plans — int64 partial
-    aggregation is associative even under wraparound, so per-task
-    partials sum to the sequential fold exactly."""
+    """The quantized-exact Arrow kernels (`impl="kernel"`, the auto path
+    past the expression budget) must agree BIT FOR BIT with the
+    literal-expression plans inside the int64 envelope, and fail loudly
+    wherever the expression form fails: on sf0.001 rows, and on an edge
+    fixture with zero-norm rows, a zero-norm centroid, duplicate rows,
+    a tie, and cell sums on either side of 2^63."""
     from usgs_lidar_spark.operators.similarity import (
         ivf_drift_metrics_exact,
         kmeans_step_exact,
@@ -6912,6 +6716,55 @@ def test_quant_exact_kernels_match_expr(spark):
     )
     e = sorted(map(tuple, kmeans_step_exact(emb, old, impl="expr").collect()))
     assert k == e and len(k) > 0
+
+    # Edge fixture (qbits=20): rows 0-1 are zero-norm, 2-3 duplicates,
+    # row 4 ties cids 1 and 2 (min cid wins), row 6 is closest to the
+    # zero-norm centroid 3. The 40 duplicate rows (big, 0, 0, 0) land
+    # in cell 1 with qdot = big * 2^40 each: big = 2^17 keeps cell 1's
+    # sum_qdot under 2^63, 2^20 pushes it past (as it does the partial
+    # of any kernel task holding nine or more of these rows), and 2^23
+    # pushes a single dot past.
+    def edge(big):
+        vecs = [[0.0] * 4] * 2 + [[0.5, 0.25, 0.0, 0.0]] * 2 + [
+            [1.0, 1.0, 0.0, 0.0],
+            [0.1, 0.9, 0.0, 0.0],
+            [-1.0] * 4,
+        ] + [[big, 0.0, 0.0, 0.0]] * 40
+        return spark.createDataFrame(
+            list(enumerate(vecs)), "vec_id long, embedding array<double>"
+        )
+
+    e_old = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
+             (3, [0.0] * 4)]
+    e_new = [(10, [0.0, 0.0, 1.0, 0.0]), (11, [1.0, 1.0, 0.0, 0.0]),
+             (12, [0.0] * 4)]
+
+    def drift(df):
+        return lambda impl: ivf_drift_metrics_exact(
+            df, e_old, e_new, impl=impl
+        )
+
+    def step(df):
+        return lambda impl: kmeans_step_exact(df, e_old, impl=impl)
+
+    below = edge(2.0**17)
+    for run in (drift(below), step(below)):
+        k, e = (
+            sorted(map(tuple, run(impl).collect()))
+            for impl in ("kernel", "expr")
+        )
+        assert k == e and len({r[0] for r in k}) == 3
+    sums = {r["cid"]: r["sum_qdot"] for r in drift(below)("kernel").collect()}
+    assert sums[1] > 2**62
+    for impl in ("kernel", "expr"):
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            drift(edge(2.0**20))(impl).collect()
+    over = edge(2.0**23)
+    for run in (drift(over), step(over)):
+        with pytest.raises(Exception, match="int64 envelope"):
+            run("kernel").collect()
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            run("expr").collect()
 
 
 def test_bloom_prefilter_join_transparent_and_no_false_negatives(spark):

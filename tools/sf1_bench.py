@@ -5,8 +5,9 @@ Builds an sf1-equivalent dataset under the temp dir (the test data is
 read-only) by 10x-replicating ONLY the tables the queries read —
 lineitem (~6 M rows), documents, embeddings — and symlinking the rest
 from sf0.1, then runs each query at sf0.1 (1x) and sf1 (10x) in its own
-SparkSession with an event log, reporting wall seconds and total shuffle
-bytes per scenario.
+SparkSession with an event log, reporting wall seconds and the shuffle
+bytes of the timed run (its jobs run under one job group, and
+`perfbench.trace.eventlog_bytes` reads the group's totals back).
 
 Replication semantics (reported as measured, not as an
 independent-replica approximation):
@@ -44,6 +45,7 @@ if str(REPO) not in sys.path:
 from pyspark.sql import functions as F  # noqa: E402
 
 from bench import _force  # noqa: E402
+from perfbench.trace import eventlog_bytes  # noqa: E402
 from usgs_lidar_spark.session import get_spark  # noqa: E402
 
 SF01 = Path("/root/testdata/sf0.1")
@@ -133,7 +135,7 @@ WARM_AT_TARGET = {
 
 def make_session(name: str, log_dir: Path):
     """The engine session with an uncompressed, unrolled event log in
-    ``log_dir`` — the file `shuffle_bytes` reads back."""
+    ``log_dir`` — the file `eventlog_bytes` reads back."""
     log_dir.mkdir(parents=True, exist_ok=True)
     return get_spark(
         name,
@@ -144,24 +146,6 @@ def make_session(name: str, log_dir: Path):
             "spark.eventLog.rolling.enabled": "false",
         },
     )
-
-
-def shuffle_bytes(log_dir: Path) -> tuple[int, int]:
-    """(read_bytes, write_bytes) summed over every task in the app log."""
-    rd = wr = 0
-    for f in log_dir.rglob("*"):
-        if f.is_dir() or f.name.startswith(".") or f.suffix == ".crc":
-            continue
-        for line in f.read_text(errors="ignore").splitlines():
-            if '"SparkListenerTaskEnd"' not in line:
-                continue
-            ev = json.loads(line)
-            tm = ev.get("Task Metrics") or {}
-            srm = tm.get("Shuffle Read Metrics") or {}
-            swm = tm.get("Shuffle Write Metrics") or {}
-            rd += srm.get("Remote Bytes Read", 0) + srm.get("Local Bytes Read", 0)
-            wr += swm.get("Shuffle Bytes Written", 0)
-    return rd, wr
 
 
 def build_sf1() -> None:
@@ -226,7 +210,8 @@ def run_query(name: str, sf_dir: str, tag: str) -> dict:
     shutil.rmtree(log_dir, ignore_errors=True)
     spark = make_session(f"{name}-{tag}", log_dir)
     # One untimed warmup at the smallest SF compiles the plan shape, so
-    # the timed run measures steady-state execution (bench.py convention).
+    # the timed run measures steady-state execution (bench.py convention);
+    # it runs outside the timed job group, so its bytes are not counted.
     # Persisted-artifact serving queries (WARM_AT_TARGET) additionally
     # warm at the TARGET dir in a SEPARATE session first, so the build
     # lands in neither the timed wall NOR this log's shuffle totals —
@@ -241,6 +226,8 @@ def run_query(name: str, sf_dir: str, tag: str) -> dict:
         wspark.stop()
         spark = make_session(f"{name}-{tag}", log_dir)
     _force(QUERIES[name](spark, str(SF01.parent / "sf0.001")), name)
+    group = f"sf1_bench.{name}.{tag}"
+    spark.sparkContext.setJobGroup(group, "timed run")
     t0 = time.perf_counter()
     n_rows = _force(QUERIES[name](spark, sf_dir), name)
     dt = time.perf_counter() - t0
@@ -251,13 +238,13 @@ def run_query(name: str, sf_dir: str, tag: str) -> dict:
         "spark_version": spark.version,
     }
     spark.stop()
-    rd, wr = shuffle_bytes(log_dir)
+    got = eventlog_bytes(str(log_dir)).get(group, {})
     return {
         "scenario": f"{name}_{tag}",
         "n_rows": n_rows,
         "sec": round(dt, 2),
-        "shuffle_read_mb": round(rd / 1e6, 1),
-        "shuffle_write_mb": round(wr / 1e6, 1),
+        "shuffle_read_mb": round(got.get("shuffle_read_bytes", 0) / 1e6, 1),
+        "shuffle_write_mb": round(got.get("shuffle_write_bytes", 0) / 1e6, 1),
         **session,
     }
 

@@ -482,21 +482,6 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def _pack_dhash_bands(pixels: list[int]) -> tuple[int, int, int, int]:
-    """64 adjacent-pixel comparisons over a row-major 8x9 grid -> four
-    16-bit bands. Comparison j (row r = j//8, col c = j%8) sets bit
-    j%16 of band j//16 iff pixel(r,c) > pixel(r,c+1) — the classic
-    difference-hash: invariant to brightness/contrast shifts (any
-    monotone per-pixel map preserves every > comparison), sensitive to
-    structure."""
-    bands = [0, 0, 0, 0]
-    for j in range(64):
-        r, c = divmod(j, 8)
-        if pixels[r * 9 + c] > pixels[r * 9 + c + 1]:
-            bands[j // 16] |= 1 << (j % 16)
-    return bands[0], bands[1], bands[2], bands[3]
-
-
 def dhash_image(media: DataFrame) -> DataFrame:
     """Perceptual difference-hash (dHash) over image payloads via PIL:
     decode -> grayscale -> 9x8 downsample -> 64 adjacent-pixel
@@ -532,7 +517,7 @@ def dhash_image(media: DataFrame) -> DataFrame:
             try:
                 with Image.open(io.BytesIO(bytes(b))) as im:
                     px = list(im.convert("L").resize((9, 8)).getdata())
-                    return _pack_dhash_bands(px)
+                    return _pack_dhash_bands_n(px, 4)
             except Exception:
                 return 0, 0, 0, 0
 
@@ -705,8 +690,10 @@ def _pack_dhash_bands_n(pixels: list[int], n_bands: int) -> tuple[int, ...]:
     """16*n_bands adjacent-pixel comparisons over a row-major
     8 x (2*n_bands + 1) grid -> ``n_bands`` 16-bit bands. Comparison j
     (row r = j // (2*n_bands), col c = j % (2*n_bands)) sets bit j%16
-    of band j//16 iff pixel(r,c) > pixel(r,c+1). n_bands=4 is the
-    classic 64-bit dHash `_pack_dhash_bands` packs."""
+    of band j//16 iff pixel(r,c) > pixel(r,c+1) — the difference hash:
+    invariant to brightness/contrast shifts (any monotone per-pixel map
+    preserves every > comparison), sensitive to structure. n_bands=4 is
+    the classic 64-bit dHash over an 8x9 grid."""
     per_row = 2 * n_bands
     cols = per_row + 1
     bands = [0] * n_bands

@@ -15,9 +15,7 @@ from usgs_lidar_spark.operators.dedup import (  # noqa: F401
     exact_dedup,
     minhash_lsh_pairs,
     minhash_lsh_pairs_incremental,
-    minhash_signatures,
     ngram_jaccard_pairs,
-    simhash64,
 )
 from usgs_lidar_spark.operators.graph import (  # noqa: F401
     collapse_clusters,

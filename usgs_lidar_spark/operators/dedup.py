@@ -14,8 +14,8 @@ Scale design notes (100 TB of documents):
   * MinHash LSH: signature = per-row column math (no shuffle), banding
     turns near-dup search into an equi-join on (band, band-hash) buckets —
     candidate pairs only, never all-pairs;
-  * SimHash: 64-bit fingerprint per doc; near-dups share fingerprints at
-    small Hamming distance — bucket-join on rotated prefixes.
+  * SimHash: n-bit fingerprint per doc; near-dups share fingerprints at
+    small Hamming distance — bucket-join on contiguous fingerprint blocks.
 
 All shingle/minhash hashing uses Spark's built-in xxhash64/hash with fixed
 seeds — deterministic across runs and cluster layouts.
@@ -487,22 +487,6 @@ def _mh_band_struct_sql(bands: int, rows_per_band: int, hash_inline: bool) -> st
     return "array(" + ", ".join(entries) + ")"
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 8,
-    num_perm: int = 64,
-    max_df: int | None = 20,
-) -> DataFrame:
-    """MinHash signature per document: num_perm seeded xxhash64 minima over
-    the shingle set. Pure column math after the shingle explode — the
-    num_perm 'permutations' are xxhash64(shingle, seed=i) minima, the
-    standard one-pass construction."""
-    sh = char_shingles(df, text_col, id_col, k, max_df)
-    return sh.groupBy("doc_id").agg(*_mh_sig_exprs(num_perm))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -650,10 +634,10 @@ def minhash_decon_pairs(
     Shingles are deliberately UNCAPPED on both sides (no max_df): a
     signature must be a pure function of the document's own text —
     capping by corpus-wide document frequency would make corpus and
-    benchmark signatures disagree about which shingles exist (the
-    `simhash64` rationale), and unlike the dedup SELF-join there is no
-    sum(df^2) blowup to guard: every join here is keyed by band hash or
-    restricted to candidates, linear in corpus size.
+    benchmark signatures disagree about which shingles exist — and
+    unlike the dedup SELF-join there is no sum(df^2) blowup to guard:
+    every join here is keyed by band hash or restricted to candidates,
+    linear in corpus size.
 
     Scale: the benchmark side of a real run is a few thousand eval
     documents, so its band table (n_bench x bands rows of (id, band, h))
@@ -717,81 +701,6 @@ def minhash_decon_pairs(
     )
 
 
-def simhash64(df: DataFrame, text_col: str, id_col: str, k: int = 8) -> DataFrame:
-    """64-bit SimHash fingerprint per document over char k-shingles.
-
-    Bit j of the fingerprint is 1 iff the majority of the doc's shingle
-    hashes have bit j set. Implemented as a groupBy with 64 conditional
-    sums over xxhash64 bits — all JVM-side expressions.
-
-    Shingles are deliberately UNCAPPED (max_df=None): a fingerprint must
-    be a pure function of the document's own text, not of corpus-wide
-    document frequencies, and the per-doc vote aggregation is linear —
-    the df cap exists to bound shingle-JOIN blowup, a step simhash does
-    not have (its join-side guard is simhash_near_dup_pairs'
-    max_bucket).
-    """
-    sh = char_shingles(df, text_col, id_col, k, max_df=None)
-    h = F.xxhash64(F.col("shingle"))
-    votes = [
-        F.sum(
-            F.when(h.bitwiseAND(F.lit(1 << j).cast("long")) != 0, 1).otherwise(-1)
-        ).alias(f"v_{j}")
-        for j in range(63)  # bit 63 (sign) excluded: keeps fingerprint >= 0
-    ]
-    agg = sh.groupBy("doc_id").agg(*votes)
-    fp = F.lit(0).cast("long")
-    for j in range(63):
-        fp = fp + F.when(F.col(f"v_{j}") > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return agg.select("doc_id", fp.alias("simhash"))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 8,
-    max_hamming: int = 3,
-    n_blocks: int = 4,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """SimHash near-duplicate pairs: all (id_a, id_b, hamming) with
-    Hamming(simhash_a, simhash_b) <= max_hamming — WITHOUT an all-pairs
-    comparison.
-
-    Pigeonhole bucketing (the rotated-prefix scheme promised by the module
-    docstring, in its contiguous-block form — Manku et al., WWW'07): split
-    the 63-bit fingerprint into ``n_blocks`` contiguous blocks. A pair
-    differing in at most ``max_hamming < n_blocks`` bits must agree
-    EXACTLY on at least one block, so the equi-self-join on
-    (block_index, block_value) finds every qualifying pair; popcount of
-    the XOR then verifies, removing false positives. Shuffle is keyed by
-    block values — at 100 TB each fingerprint contributes ``n_blocks``
-    16-bit-ish rows, and only same-block candidates ever meet.
-
-    ``max_bucket``: frequency cap on a (block, value) bucket — the analog
-    of ``char_shingles``'s ``max_df``. With the default 4 blocks the block
-    values are ~16-bit, so a 10^9-doc corpus puts ~15 K docs in an AVERAGE
-    bucket (~10^8 candidate pairs per hot bucket before popcount verify) —
-    a degenerate block value (e.g. all-zeros from short boilerplate docs)
-    goes quadratic. The cap drops buckets with more than ``max_bucket``
-    occupants via a spillable window COUNT before the self-join, bounding
-    the worst key at max_bucket^2 pairs. Recall caveat: a pair whose ONLY
-    agreeing block is capped is missed — same contract as max_df; raise
-    ``n_blocks`` (narrower values, more blocks) to shrink buckets instead
-    of capping when exact recall at max_hamming is required.
-    """
-    if max_hamming >= n_blocks:
-        raise ValueError(
-            f"pigeonhole needs max_hamming < n_blocks "
-            f"(got {max_hamming} >= {n_blocks})"
-        )
-    fps = simhash64(df, text_col, id_col, k)
-    return _simhash_block_pairs(fps, 63, max_hamming, n_blocks, max_bucket)
-
-
 def _simhash_block_pairs(
     fps: DataFrame,
     n_bits: int,
@@ -799,9 +708,26 @@ def _simhash_block_pairs(
     n_blocks: int,
     max_bucket: int | None,
 ) -> DataFrame:
-    """Shared pigeonhole-block candidate join + popcount verify over a
-    (doc_id, simhash) frame — used by both the xxhash64 and portable
-    fingerprint families (the blocking math only needs the bit width)."""
+    """Pigeonhole-block candidate join + popcount verify over a
+    (doc_id, simhash) frame of ``n_bits``-bit fingerprints.
+
+    Split the fingerprint into ``n_blocks`` contiguous blocks (Manku et
+    al., WWW'07). A pair differing in at most ``max_hamming < n_blocks``
+    bits must agree EXACTLY on at least one block, so the
+    equi-self-join on (block_index, block_value) finds every qualifying
+    pair; popcount of the XOR then verifies, removing false positives.
+    Shuffle is keyed by block values — only same-block candidates ever
+    meet.
+
+    ``max_bucket``: frequency cap on a (block, value) bucket — the analog
+    of ``char_shingles``'s ``max_df``. A degenerate block value (e.g.
+    all-zeros from short boilerplate docs) otherwise goes quadratic; the
+    cap drops buckets with more than ``max_bucket`` occupants via a
+    spillable window COUNT before the self-join, bounding the worst key
+    at max_bucket^2 pairs. Recall caveat: a pair whose ONLY agreeing
+    block is capped is missed — same contract as max_df; raise
+    ``n_blocks`` to shrink buckets instead of capping when exact recall
+    at max_hamming is required."""
     width = (n_bits + n_blocks - 1) // n_blocks
     blocks = F.array(
         *[
@@ -1314,12 +1240,11 @@ def simhash_portable(
     id_col: str = "doc_id",
     lowercase: bool = True,
 ) -> DataFrame:
-    """SimHash with a PORTABLE hash family — the oracled sibling of
-    `simhash64`: bit j of a token's signature is the parity of the
-    two-round Lehmer hash of (token polyhash, j), so the whole
-    fingerprint is reproducible in ANSI SQL (and therefore carries the
-    hard value-hash oracle the xxhash64 form cannot — that one is
-    golden-pinned by necessity, this one by nothing). Bit j of the
+    """SimHash with a PORTABLE hash family: bit j of a token's
+    signature is the parity of the two-round Lehmer hash of (token
+    polyhash, j), so the whole fingerprint is reproducible in ANSI SQL
+    and carries a hard value-hash oracle (an xxhash64 family could only
+    be golden-pinned). Bit j of the
     DOCUMENT is the majority sign over its token slots; ties (sum 0)
     resolve to 0.
 
@@ -1405,12 +1330,13 @@ def simhash_portable_near_dup_pairs(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-duplicate pairs over the PORTABLE SimHash family
-    (`simhash_portable`) — the same Manku-style pigeonhole blocking as
-    `simhash_near_dup_pairs` (agree exactly on >= 1 of n_blocks blocks
+    (`simhash_portable`) with Manku-style pigeonhole blocking
+    (`_simhash_block_pairs`: agree exactly on >= 1 of n_blocks blocks
     when Hamming < n_blocks, popcount-verify candidates, never
-    all-pairs), but with fingerprints ANSI SQL can reproduce, so the
-    whole detector sits under the hard oracle (exact all-pairs Hamming
-    in DuckDB at verification scale) instead of a golden pin."""
+    all-pairs, optional ``max_bucket`` hot-bucket cap). The fingerprints
+    are ones ANSI SQL can reproduce, so the whole detector sits under
+    the hard oracle (exact all-pairs Hamming in DuckDB at verification
+    scale)."""
     if max_hamming >= n_blocks:
         raise ValueError(
             f"pigeonhole needs max_hamming < n_blocks "

@@ -12,7 +12,7 @@ exact BIGINT sums — order-independent, partitioning-independent, and
 replayable in ANSI SQL, where a float Gram would drift in the last ulp
 per partitioning and break hash-compared oracles.
 
-This is also the engine's one DELIBERATE mapInPandas hot path: a
+This is also the engine's one DELIBERATE pandas-UDF hot path: a
 per-batch numpy matmul that reduces its input to d x d numbers is
 exactly the case where Arrow-batched Python beats JVM expressions (the
 expression form explodes d² rows per VECTOR; the batch form emits d²
@@ -27,8 +27,6 @@ of 10^4 rows that is ~2^38, and the global BIGINT sum holds to ~2^63 /
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,39 +43,15 @@ def embed_gram_quantized(
     column: one row per (i, j), i <= j, 1-based, with
     ``g = sum over rows of q_i * q_j`` (q = floor(x * 2^qbits), BIGINT).
 
-    mapInPandas computes a numpy int64 partial Gram per Arrow batch and
-    emits d*(d+1)/2 rows; the groupBy sums partials — the shuffle is
+    The (i, j >= 1) rows of the aggregated `_gram_partials`: a numpy
+    partial per Arrow batch, summed by one groupBy — the shuffle is
     O(d² x partitions), never O(rows). Result is bit-identical under
     any partitioning and equals the ANSI-SQL double loop (the oracle).
     """
     if qbits <= 0:
         raise ValueError(f"qbits must be positive, got {qbits}")
-    q = emb.select(quantize_exact(vec_col, qbits).alias("q"))
-
-    def partial_gram(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            g = m.T @ m  # d x d, int64 per the documented envelope
-            d = g.shape[0]
-            iu, ju = np.triu_indices(d)
-            yield pd.DataFrame(
-                {"i": iu + 1, "j": ju + 1, "g": g[iu, ju]}
-            )
-
-    partials = q.mapInPandas(partial_gram, "i int, j int, g long")
-    return (
-        partials.groupBy("i", "j")
-        .agg(F.sum("g").cast("long").alias("g"))
-        .select(
-            F.col("i").cast("long").alias("i"),
-            F.col("j").cast("long").alias("j"),
-            "g",
-        )
+    return _sum_moments(_gram_partials(emb, vec_col, qbits)).filter(
+        (F.col("i") >= 1) & (F.col("j") >= 1)
     )
 
 
@@ -88,54 +62,18 @@ def pca_components(
     qbits: int = 12,
 ) -> list[list[float]]:
     """Top-k principal components of the embedding column, computed from
-    the distributed exact Gram: the driver receives d*(d+1)/2 BIGINTs
-    (bounded — never row data), un-quantizes, mean-centers
-    (cov = G/n - mean meanᵀ), and eigendecomposes the d x d matrix.
-    Components are sign-normalized (largest-|coordinate| entry made
-    positive) so the basis is deterministic up to numpy's eigh, which
-    is deterministic for a fixed matrix.
+    the distributed exact moments in ONE scan: the driver receives the
+    count, d first moments and d*(d+1)/2 Gram BIGINTs (bounded — never
+    row data) and hands them to `_components_from_moments`.
 
     Returns k lists of d floats, variance-descending.
     """
-    import numpy as np
-
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    rows = embed_gram_quantized(emb, vec_col, qbits).collect()
-    if not rows:
-        raise ValueError("pca_components: empty input")
-    d = max(int(r["j"]) for r in rows)
-    n = emb.count()
-    scale = float(2**qbits)
-    g = np.zeros((d, d), dtype=np.float64)
-    for r in rows:
-        i, j = int(r["i"]) - 1, int(r["j"]) - 1
-        v = float(r["g"]) / (scale * scale)
-        g[i, j] = v
-        g[j, i] = v
-    mean = np.array(
-        emb.select(
-            F.array(
-                *[
-                    (
-                        F.sum(quantize_exact(vec_col, qbits)[i]) / F.lit(scale)
-                    ).cast("double")
-                    for i in range(d)
-                ]
-            ).alias("s")
-        ).collect()[0]["s"],
-        dtype=np.float64,
-    ) / float(n)
-    cov = g / float(n) - np.outer(mean, mean)
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][: min(k, d)]
-    comps = []
-    for idx in order:
-        c = vecs[:, idx]
-        if c[int(np.argmax(np.abs(c)))] < 0:
-            c = -c
-        comps.append([float(x) for x in c])
-    return comps
+    return _components_from_moments(
+        _sum_moments(_gram_partials(emb, vec_col, qbits)),
+        k,
+        qbits,
+        "pca_components: empty input",
+    )
 
 
 def embed_pca_project(
@@ -168,13 +106,13 @@ def embed_pca_project(
 def _gram_partials(
     emb: DataFrame, vec_col: str, qbits: int
 ) -> DataFrame:
-    """The additive moment rows a Gram store holds: (0,0,count),
-    (i,0,sum q_i) first moments, and (i,j,g) second moments for
-    i <= j — all BIGINT, so any union of partials aggregates to the
-    exact totals (integer addition is associative: the store can be
-    append-only and crash-safe, with aggregation deferred to read)."""
-    from usgs_lidar_spark.functions.vectors import quantize_exact
-
+    """The additive moment rows of a corpus, one set per Arrow batch:
+    (0,0,count), (i,0,sum q_i) first moments, and (i,j,g) second
+    moments for i <= j — all BIGINT, so any union of partials
+    aggregates to the exact totals (integer addition is associative:
+    a store of them can be append-only and crash-safe, with aggregation
+    deferred to read). A numpy int64 matmul per batch; see the module
+    docstring for its overflow envelope."""
     q = emb.select(quantize_exact(vec_col, qbits).alias("q"))
 
     def partial(batches):
@@ -202,6 +140,50 @@ def _gram_partials(
     return q.mapInPandas(partial, "i long, j long, g long")
 
 
+def _sum_moments(partials: DataFrame) -> DataFrame:
+    """Aggregate moment partials to exact (i, j, g) totals."""
+    return partials.groupBy("i", "j").agg(F.sum("g").cast("long").alias("g"))
+
+
+def _components_from_moments(
+    moments: DataFrame, k: int, qbits: int, empty_msg: str
+) -> list[list[float]]:
+    """Top-k principal components from aggregated moment rows: the
+    driver un-quantizes, mean-centers (cov = G/n - mean meanᵀ) and
+    eigendecomposes the d x d matrix. Components are sign-normalized
+    (largest-|coordinate| entry made positive) so the basis is
+    deterministic up to numpy's eigh, which is deterministic for a
+    fixed matrix."""
+    import numpy as np
+
+    if k <= 0:
+        raise ValueError(f"k must be positive, got {k}")
+    by = {(int(r["i"]), int(r["j"])): int(r["g"]) for r in moments.collect()}
+    if not by:
+        raise ValueError(empty_msg)
+    n = by[(0, 0)]
+    d = max(i for i, j in by if j == 0 and i > 0)
+    scale = float(2**qbits)
+    g = np.zeros((d, d), dtype=np.float64)
+    for (i, j), v in by.items():
+        if i >= 1 and j >= 1:
+            g[i - 1, j - 1] = v / (scale * scale)
+            g[j - 1, i - 1] = v / (scale * scale)
+    mean = np.array(
+        [by[(i, 0)] / scale for i in range(1, d + 1)], dtype=np.float64
+    ) / float(n)
+    cov = g / float(n) - np.outer(mean, mean)
+    vals, vecs = np.linalg.eigh(cov)
+    order = np.argsort(vals)[::-1][: min(k, d)]
+    comps = []
+    for idx in order:
+        c = vecs[:, idx]
+        if c[int(np.argmax(np.abs(c)))] < 0:
+            c = -c
+        comps.append([float(x) for x in c])
+    return comps
+
+
 def write_gram_store(
     emb: DataFrame, path: str, vec_col: str = "embedding", qbits: int = 12
 ) -> None:
@@ -227,13 +209,9 @@ def append_to_gram_store(
 
 def read_gram_store(spark, path: str) -> DataFrame:
     """Aggregate the store to exact totals: (0,0) count, (i,0) first
-    moments, (i,j) Gram entries — identical to a from-scratch
-    `embed_gram_quantized`+moments pass over the union corpus."""
-    return (
-        spark.read.parquet(path)
-        .groupBy("i", "j")
-        .agg(F.sum("g").cast("long").alias("g"))
-    )
+    moments, (i,j) Gram entries — identical to the aggregated moments
+    of a from-scratch pass over the union corpus."""
+    return _sum_moments(spark.read.parquet(path))
 
 
 def pca_components_from_store(
@@ -241,30 +219,9 @@ def pca_components_from_store(
 ) -> list[list[float]]:
     """`pca_components` served from a persisted store — no corpus scan:
     the d*(d+1)/2 + d + 1 aggregated rows are the entire read."""
-    import numpy as np
-
-    rows = read_gram_store(spark, path).collect()
-    if not rows:
-        raise ValueError("pca_components_from_store: empty store")
-    by = {(int(r["i"]), int(r["j"])): int(r["g"]) for r in rows}
-    n = by[(0, 0)]
-    d = max(i for i, j in by if j == 0 and i > 0)
-    scale = float(2**qbits)
-    g = np.zeros((d, d), dtype=np.float64)
-    for (i, j), v in by.items():
-        if i >= 1 and j >= 1:
-            g[i - 1, j - 1] = v / (scale * scale)
-            g[j - 1, i - 1] = v / (scale * scale)
-    mean = np.array(
-        [by[(i, 0)] / scale for i in range(1, d + 1)], dtype=np.float64
-    ) / float(n)
-    cov = g / float(n) - np.outer(mean, mean)
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][: min(k, d)]
-    comps = []
-    for idx in order:
-        c = vecs[:, idx]
-        if c[int(np.argmax(np.abs(c)))] < 0:
-            c = -c
-        comps.append([float(x) for x in c])
-    return comps
+    return _components_from_moments(
+        read_gram_store(spark, path),
+        k,
+        qbits,
+        "pca_components_from_store: empty store",
+    )

@@ -18,13 +18,10 @@ Scale design (100 TB of vectors):
     unroll into literal expressions, large ones ride a one-row broadcast
     as DATA so the plan stays O(1) in k (see `_with_centroid_sims`);
     queries probe their n_probe nearest cells, and the cell equi-join
-    replaces the cross product. `kmeans_refine` improves the centroids
-    with Lloyd iterations (per-dimension JVM-side AVGs);
+    replaces the cross product. `kmeans_train_centroids` improves the
+    centroids with exact Lloyd steps (`kmeans_step_exact`);
   * dot products run as zip_with/aggregate higher-order expressions —
     JVM-side, no Python — keeping every default path oracle-comparable;
-    `cosine_topk_bruteforce_arrow` is the measured ~3.5x throughput
-    escape hatch (per-batch BLAS matmul over mapInPandas, byte-identical
-    results by test);
   * `pq_encode`/`pq_adc_topk`/`ivf_pq_topk` add the compressed-domain
     tier: map-side code assignment, broadcast ADC LUTs, and the IVF-PQ
     composition that touches full vectors exactly once.
@@ -1700,7 +1697,7 @@ def ivf_append(
     zero bytes), vs a full rebuild costing n_iter scans + aggregates of
     the WHOLE corpus. The price is quantizer staleness — new data may
     cluster where the old centroids aren't; measure it with
-    `ivf_drift_metrics` and rebuild when the drift crosses the caller's
+    `ivf_drift_metrics_exact` and rebuild when the drift crosses the caller's
     threshold (assignments are identical to a from-scratch assign with
     the same centroids — parity pinned by the sim_ivf_append_parity
     oracle query — so the INDEX is never wrong, only less selective).
@@ -1717,57 +1714,6 @@ def ivf_append(
         keep_sim="__csim" in base_assigned.columns,
     )
     return base_assigned.unionByName(newly.select(*base_assigned.columns))
-
-
-def ivf_drift_metrics(
-    corpus: DataFrame,
-    centroids_old: list[tuple[int, list[float]]],
-    centroids_new: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """Per-cell staleness report for an incrementally-maintained IVF
-    index: under the CURRENT quantizer (`centroids_old`), each cell's
-    occupancy and mean cosine-to-centroid (exact scaled-integer mean),
-    plus how many of its vectors a CANDIDATE quantizer (`centroids_new`,
-    e.g. a kmeans_refine output) would reassign — the rebuild-decision
-    signal.
-
-    One pass: both assignments are map-only expression argmaxes attached
-    to the same scan, followed by a single groupBy(cid) aggregate; shuffle
-    volume is one row per cell. Returns (cid, n, sum_csim_e4, mean_csim,
-    n_moved, moved_frac) — `sum_csim_e4` is the EXACT scaled-integer sum
-    of per-row quantization cosines (BIGINT, order-independent,
-    bit-reproducible across engines/layouts); `mean_csim`/`moved_frac`
-    are the derived DOUBLE conveniences (sum_csim_e4/(1e4*n), n_moved/n)
-    for human consumption. Cross-engine comparisons should use the
-    integer columns."""
-    scale = 10**round_digits
-    both = ivf_assign(
-        ivf_assign(corpus, centroids_old, vec_col, round_digits, keep_sim=True)
-        .withColumnRenamed("__cid", "__cid_old")
-        .withColumnRenamed("__csim", "__csim_old"),
-        centroids_new,
-        vec_col,
-        round_digits,
-    )
-    return (
-        both.groupBy(F.col("__cid_old").alias("cid"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("__csim_old") * scale).cast("long"))
-            .alias("sum_csim_e4"),
-            F.sum(
-                F.when(F.col("__cid") != F.col("__cid_old"), 1).otherwise(0)
-            ).cast("long").alias("n_moved"),
-        )
-        .withColumn(
-            "mean_csim",
-            F.col("sum_csim_e4") / (F.lit(float(scale)) * F.col("n")),
-        )
-        .withColumn("moved_frac", F.col("n_moved") / F.col("n"))
-        .select("cid", "n", "sum_csim_e4", "mean_csim", "n_moved", "moved_frac")
-    )
 
 
 def _quantize_centroids_exact(
@@ -1827,10 +1773,13 @@ def _exact_argmax_structs(qvec_col, qcents: list[tuple[int, list[int], int]]):
 
 def _quant_assign_kernel_parts(centroids, qbits):
     """Driver-side prep shared by the quantized-exact Arrow kernels:
-    cid-ASCENDING (cids, Qc matrix, |qc|² vector) NumPy views of
-    `_quantize_centroids_exact`. First-occurrence argmax over the
-    ascending order reproduces the expression path's struct-max
-    (max key, then min cid) exactly."""
+    cid-ASCENDING (cids, Qc matrix, sqrt(|qc|²) vector) NumPy views of
+    `_quantize_centroids_exact`. The norm is the same Python double the
+    expression path writes as a literal, so it never passes through an
+    int64. First-occurrence argmax over the ascending order reproduces
+    the expression path's struct-max (max key, then min cid) exactly."""
+    import math
+
     import numpy as np
 
     qc = sorted(_quantize_centroids_exact(centroids, qbits))
@@ -1839,25 +1788,88 @@ def _quant_assign_kernel_parts(centroids, qbits):
     Qc = np.asarray([q for _, q, _ in qc], dtype=np.int64).reshape(
         len(qc), dim
     )
-    nq = np.asarray([n for _, _, n in qc], dtype=np.int64)
-    return cids, Qc, nq
+    norms = np.asarray(
+        [math.sqrt(float(n)) for _, _, n in qc], dtype=np.float64
+    )
+    return cids, Qc, norms
 
 
-def _quant_assign_np(Q, Qc, nq):
+#: The kernels' int64 envelope: every quantity the expression form holds
+#: in a BIGINT must hold in [-2^63, 2^63).
+_INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
+
+
+def _quantize_np(C, scale):
+    """`quantize_exact` on an (n, d) float64 matrix, including Spark's
+    saturating floor(double) -> BIGINT: a component beyond int64 clamps
+    to the nearer bound and NaN becomes 0, as the expression form
+    evaluates it."""
+    import numpy as np
+
+    f = np.floor(C * scale)
+    with np.errstate(invalid="ignore"):
+        q = f.astype(np.int64)
+    q[f >= 2.0**63] = _INT64_MAX
+    q[f < -(2.0**63)] = _INT64_MIN
+    q[np.isnan(f)] = 0
+    return q
+
+
+def _exact_sums(a):
+    """Column sums of an int64 array as exact Python ints: numpy's int64
+    sum where no partial sum can leave int64, Python integers otherwise
+    (numpy's would wrap)."""
+    import numpy as np
+
+    bound = len(a) * float(np.abs(a.astype(np.float64)).max(initial=0.0))
+    s = a.sum(axis=0) if bound < 2.0**62 else a.astype(object).sum(axis=0)
+    return np.asarray(s).tolist()
+
+
+def _int64_terms(v: int) -> list[int]:
+    """Int64 terms that sum to the exact integer ``v`` (one term when it
+    fits). A kernel's per-task partial sum leaves the task unwrapped,
+    and the cell total is decided by the same BIGINT sum aggregate as in
+    the expression form, which raises ARITHMETIC_OVERFLOW under ANSI."""
+    terms = []
+    while v > _INT64_MAX:
+        terms.append(_INT64_MAX)
+        v -= _INT64_MAX
+    while v < _INT64_MIN:
+        terms.append(_INT64_MIN)
+        v -= _INT64_MIN
+    return terms + [v]
+
+
+def _quant_assign_np(Q, Qc, norms):
     """Quantized argmax of `_exact_argmax_structs`, vectorized: int64
-    dots (matmul — integer addition is associative, and even silent
-    wraparound is mod-2^64 on BOTH engines, so ANY summation order is
-    bit-identical to the sequential fold), key = double(qdot)/sqrt(|qc|²)
-    (two correctly-rounded IEEE ops, 0.0 for a zero-norm centroid), and
-    a first-occurrence argmax over cid-ascending centroids (= max key,
-    min cid on ties). Returns (best index per row, dots matrix)."""
+    dots (matmul), key = double(qdot)/sqrt(|qc|²) (two correctly-rounded
+    IEEE ops, 0.0 for a zero-norm centroid), and a first-occurrence
+    argmax over cid-ascending centroids (= max key, min cid on ties).
+    Returns (best index per row, dots matrix).
+
+    The matmul wraps silently past int64, so a dot whose exact value
+    leaves int64 raises ArithmeticError instead. The expression form's
+    BIGINT fold cannot finish such a dot either (its last addition
+    overflows at the latest), so this never rejects an input that form
+    accepts. Rows whose bound sum|q| * max|qc| stays below 2^62 cannot
+    wrap; only the others are recomputed in Python integers."""
     import numpy as np
 
     dots = Q @ Qc.T
-    zero = nq == 0
-    key = dots.astype(np.float64) / np.sqrt(
-        np.where(zero, 1, nq).astype(np.float64)
+    bound = np.abs(Q.astype(np.float64)).sum(axis=1) * float(
+        np.abs(Qc.astype(np.float64)).max(initial=0.0)
     )
+    risky = np.nonzero(bound >= 2.0**62)[0]
+    if len(risky):
+        exact = Q[risky].astype(object) @ Qc.T.astype(object)
+        if any(not _INT64_MIN <= v <= _INT64_MAX for v in exact.flat):
+            raise ArithmeticError(
+                "quantized dot product outside the int64 envelope "
+                "(|q . qc| >= 2^63); lower qbits"
+            )
+    zero = norms == 0
+    key = dots.astype(np.float64) / np.where(zero, 1.0, norms)
     if zero.any():
         key[:, zero] = 0.0
     return np.argmax(key, axis=1), dots
@@ -1871,10 +1883,9 @@ def ivf_drift_metrics_exact(
     qbits: int = 20,
     impl: str = "auto",
 ) -> DataFrame:
-    """Bit-reproducible rebuild-decision metrics for an IVF index — the
-    hash-stable sibling of `ivf_drift_metrics`.
+    """Bit-reproducible rebuild-decision metrics for an IVF index.
 
-    The float form's summed ``ROUND(cos, 4)`` proved to be a cross-
+    A float form that summed ``ROUND(cos, 4)`` proved to be a cross-
     environment knife edge (a last-ulp difference in any one of the
     corpus's dot products flips a half-way decimal rounding and shifts
     the per-cell sum — observed as driver-red in rounds 5/6 while every
@@ -1890,10 +1901,10 @@ def ivf_drift_metrics_exact(
     signal), and `n_moved` vectors the candidate quantizer would
     reassign.
 
-    Same plan shape as the float form: both argmaxes are map-side
-    expressions on one scan, then a single groupBy(cid) — shuffle is one
-    row per cell. The two argmax structs are evaluated exactly once per
-    row behind an explode(array(struct(...))) Generate barrier —
+    Plan: both argmaxes are map-side expressions on one scan, then a
+    single groupBy(cid) — shuffle is one row per cell. The two argmax
+    structs are evaluated exactly once per row behind an
+    explode(array(struct(...))) Generate barrier —
     extracting three fields from them in a plain projection lets
     CollapseProject inline the whole 8-dot chain per field (3x the
     argmax text in the plan; runtime subexpression elimination mostly
@@ -1904,10 +1915,11 @@ def ivf_drift_metrics_exact(
     (~2^46 at qbits=20, dim=64 for unit-scale inputs), so SUM(qdot) stays
     inside int64 for up to ~2^17 ~= 131k rows per cell at worst-case
     magnitudes — and ~2^26 (~67M rows/cell) for typical |x| <= 0.1
-    embedding components. Beyond that Spark's long wraps silently while
-    DuckDB's HUGEINT->BIGINT cast errors; lower qbits (the sum bound
-    scales as 2^-2*qbits per bit removed) or shard cells before trusting
-    the cross-engine hash at larger cell cardinalities.
+    embedding components. Beyond that both forms raise (Spark's ANSI
+    BIGINT sum, like DuckDB's HUGEINT->BIGINT cast, fails with
+    ARITHMETIC_OVERFLOW); lower qbits (the sum bound scales as
+    2^-2*qbits per bit removed) or shard cells at larger cell
+    cardinalities.
 
     ``impl``: ``"auto"`` (default) picks the Arrow kernel (optimization
     round 16) once the quantizer exceeds the literal-expression budget
@@ -1915,11 +1927,13 @@ def ivf_drift_metrics_exact(
     `ivf_assign`): both quantized argmaxes run as one int64 matmul pass
     with PER-TASK PARTIAL AGGREGATION in the kernel (guide §2.3: the
     shuffle then carries tasks x cells partial rows instead of one row
-    per corpus vector), bit-identical because every aggregated quantity
-    is an int64 whose addition is associative even under wraparound.
-    Below the budget the literal-unrolled expression plan measured
-    faster (0.66 s vs 0.73 s at k=8, sf0.1 — no Python roundtrip) and
-    stays the default; ``"kernel"``/``"expr"`` force either."""
+    per corpus vector). Inside the envelope the rows equal the
+    expression form's: the kernel's sums are exact integers, and a dot
+    outside int64 raises ArithmeticError rather than wrapping (see
+    `_quant_assign_np`). Below the budget the literal-unrolled
+    expression plan measured faster (0.66 s vs 0.73 s at k=8, sf0.1 —
+    no Python roundtrip) and stays the default; ``"kernel"``/``"expr"``
+    force either."""
     from usgs_lidar_spark.functions.vectors import quantize_exact
 
     if impl not in ("auto", "kernel", "expr"):
@@ -1941,8 +1955,8 @@ def ivf_drift_metrics_exact(
             list_array_to_matrix,
         )
 
-        ocids, oQc, onq = _quant_assign_kernel_parts(centroids_old, qbits)
-        ncids, nQc, nnq = _quant_assign_kernel_parts(centroids_new, qbits)
+        ocids, oQc, onorm = _quant_assign_kernel_parts(centroids_old, qbits)
+        ncids, nQc, nnorm = _quant_assign_kernel_parts(centroids_new, qbits)
         dim = oQc.shape[1]
         if nQc.shape[1] != dim:
             raise ValueError(
@@ -1968,32 +1982,25 @@ def ivf_drift_metrics_exact(
                 for lo in range(0, batch.num_rows, 65536):
                     sub = batch.slice(lo, 65536)
                     C = list_array_to_matrix(sub.column(0), expect_dim=dim)
-                    Q = np.floor(C * scale).astype(np.int64)
-                    bo, dots = _quant_assign_np(Q, oQc, onq)
-                    bn, _ = _quant_assign_np(Q, nQc, nnq)
+                    Q = _quantize_np(C, scale)
+                    bo, dots = _quant_assign_np(Q, oQc, onorm)
+                    bn, _ = _quant_assign_np(Q, nQc, nnorm)
                     qdot = dots[np.arange(len(bo)), bo]
                     moved = (ncids[bn] != ocids[bo]).astype(np.int64)
                     for c in np.unique(bo):
                         rows = bo == c
                         cur = acc.setdefault(int(ocids[c]), [0, 0, 0])
                         cur[0] += int(rows.sum())
-                        cur[1] += int(qdot[rows].sum())
+                        cur[1] += _exact_sums(qdot[rows])
                         cur[2] += int(moved[rows].sum())
-            if acc:
-                cids_out = sorted(acc)
+            out = [
+                (c, n, t, m) if i == 0 else (c, 0, t, 0)
+                for c, (n, s, m) in sorted(acc.items())
+                for i, t in enumerate(_int64_terms(s))
+            ]
+            if out:
                 yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cids_out, type=pa.int64()),
-                        pa.array([acc[c][0] for c in cids_out], pa.int64()),
-                        pa.array(
-                            [
-                                (acc[c][1] + 2**63) % 2**64 - 2**63
-                                for c in cids_out
-                            ],
-                            pa.int64(),
-                        ),
-                        pa.array([acc[c][2] for c in cids_out], pa.int64()),
-                    ],
+                    [pa.array(col, pa.int64()) for col in zip(*out)],
                     schema=arrow_out,
                 )
 
@@ -2132,7 +2139,7 @@ def append_to_ivf_index(
     into the existing cell partitions — the persisted twin of
     `ivf_append` (same invariant: indistinguishable from a full
     re-assign with the same centroids, so the index is never wrong, only
-    staler; watch `ivf_drift_metrics` for the rebuild signal). This is
+    staler; watch `ivf_drift_metrics_exact` for the rebuild signal). This is
     the `foreachBatch` body for a streaming corpus: each micro-batch
     costs one map-only assignment + an append write touching only the
     batch's cells' directories."""
@@ -2170,8 +2177,8 @@ def ivf_topk_from_index(
     a literal isin() — Spark's partition pruning then skips every other
     cell's directory at plan time (asserted via inputFiles in the test).
     The probed-cell set is collected driver-side; it is bounded by
-    n_queries * n_probe and the query matrix is small by the module's
-    contract (see cosine_topk_bruteforce_arrow's max_queries note)."""
+    n_queries * n_probe, and the query side is small by the module's
+    contract (queries broadcast against the corpus)."""
     from usgs_lidar_spark.functions.vectors import dot, norm
 
     centroids = read_ivf_centroids(spark, path)
@@ -2215,40 +2222,6 @@ def ivf_topk_from_index(
         .filter(F.col("rank") <= k)
         .select(query_id_col, F.col(id_col).alias("neighbor_id"), "sim", "rank")
     )
-
-
-def kmeans_refine(
-    corpus: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    n_iter: int = 2,
-    round_digits: int = 4,
-) -> list[tuple[int, list[float]]]:
-    """Lloyd refinement of the coarse quantizer: assign (expression-only,
-    see ivf_assign) then recompute each centroid as the per-dimension mean
-    of its cell — `dim` JVM-side AVG aggregates, one shuffle per
-    iteration, shuffle volume bounded by k*dim not corpus size. Empty
-    cells keep their previous centroid. Returns the refined driver-side
-    centroid list (it is the INDEX, not data — k*dim floats)."""
-    if dim is None:
-        dim = len(centroids[0][1])
-    for _ in range(n_iter):
-        assigned = ivf_assign(corpus, centroids, vec_col, round_digits)
-        means = assigned.groupBy("__cid").agg(
-            *[
-                F.avg(F.element_at(F.col(vec_col), i + 1).cast("double")).alias(
-                    f"d{i}"
-                )
-                for i in range(dim)
-            ]
-        )
-        got = {
-            int(r["__cid"]): [float(r[f"d{i}"]) for i in range(dim)]
-            for r in means.collect()
-        }
-        centroids = [(cid, got.get(cid, old)) for cid, old in centroids]
-    return centroids
 
 
 def recall_at_k(
@@ -2336,7 +2309,6 @@ def pq_encode(
     codebooks: list[list[tuple[int, list[float]]]],
     vec_col: str = "embedding",
     codes_col: str = "pq_codes",
-    with_error: bool = False,
 ) -> DataFrame:
     """Encode vectors to per-subspace code ids (array<int>): for each
     subspace, argmin of squared L2 distance to the sub-codebook, ties to
@@ -2345,11 +2317,7 @@ def pq_encode(
     Expression-only and map-side: each subspace's argmin is an array_min
     over a (dist, code) struct array built from literal code vectors — no
     shuffle, no UDF, corpus never moves. 64 floats become n_sub bytes'
-    worth of codes: the 100 TB memory story of IVF-PQ.
-
-    ``with_error=True`` also emits ``pq_err``: the row's total squared
-    quantization error (sum of the winning distances) — computed from the
-    same argmin structs, so error consumers don't re-derive distances."""
+    worth of codes: the 100 TB memory story of IVF-PQ."""
     sub = len(codebooks[0][0][1])
     best = []
     for j, cb in enumerate(codebooks):
@@ -2366,13 +2334,7 @@ def pq_encode(
             ]
         )
         best.append(F.array_min(cands))
-    out = df.withColumn(codes_col, F.array(*[b["c"] for b in best]))
-    if with_error:
-        err = best[0]["d"]
-        for b in best[1:]:
-            err = err + b["d"]
-        out = out.withColumn("pq_err", err)
-    return out
+    return df.withColumn(codes_col, F.array(*[b["c"] for b in best]))
 
 
 #: Fixed-point scale for ADC sums: each LUT entry carries 4 decimals, so
@@ -2516,77 +2478,6 @@ def ivf_pq_topk(
     return _adc_rank(scored, query_id_col, k)
 
 
-def pq_refine_codebooks(
-    corpus: DataFrame,
-    codebooks: list[list[tuple[int, list[float]]]],
-    vec_col: str = "embedding",
-    n_iter: int = 3,
-) -> list[list[tuple[int, list[float]]]]:
-    """Lloyd refinement of the PQ sub-codebooks: per subspace, each code
-    moves to the mean of its assigned subvector slices (n_iter rounds).
-
-    Same discipline as the IVF `kmeans_refine`: the per-round shuffle
-    carries (subspace, code) partial sums — n_sub * n_codes groups, never
-    vectors to the driver beyond the n_sub*n_codes*sub_dim centroid
-    matrix itself (kilobytes). Codes that lose every member keep their
-    previous vector. Deterministic given the input codebooks (assignment
-    ties break on code id).
-
-    Refined codebooks plug into pq_encode/pq_adc_topk/ivf_pq_topk
-    unchanged; they trade the seeded construction's oracle
-    reproducibility for real quantization error (see the improvement
-    test) — production uses this, the oracled queries keep seeds.
-    """
-    n_sub = len(codebooks)
-    sub = len(codebooks[0][0][1])
-    cbs = [list(cb) for cb in codebooks]
-    for _ in range(n_iter):
-        enc = pq_encode(corpus, cbs, vec_col=vec_col)
-        per = enc.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            F.col("pq_codes")[j].alias("code"),
-                            F.slice(F.col(vec_col), j * sub + 1, sub).alias("s"),
-                        )
-                        for j in range(n_sub)
-                    ]
-                )
-            ).alias("e")
-        ).select("e.*")
-        means = (
-            per.groupBy("j", "code")
-            .agg(
-                *[
-                    F.avg(F.col("s")[d].cast("double")).alias(f"d{d}")
-                    for d in range(sub)
-                ]
-            )
-            .collect()
-        )
-        updated = {(r["j"], r["code"]): [r[f"d{d}"] for d in range(sub)] for r in means}
-        cbs = [
-            [(c, updated.get((j, c), vec)) for c, vec in cb]
-            for j, cb in enumerate(cbs)
-        ]
-    return cbs
-
-
-def pq_quantization_error(
-    corpus: DataFrame,
-    codebooks: list[list[tuple[int, list[float]]]],
-    vec_col: str = "embedding",
-) -> float:
-    """Mean total squared quantization error over the corpus — the
-    quantity Lloyd refinement minimizes; used to validate refinement.
-    Reads pq_encode's own winning distances (with_error=True), so nothing
-    is re-derived."""
-    enc = pq_encode(corpus, codebooks, vec_col=vec_col, with_error=True)
-    return enc.agg(F.avg("pq_err")).collect()[0][0]
-
-
 def cosine_topk_lsh_multiprobe2(
     corpus: DataFrame,
     queries: DataFrame,
@@ -2617,125 +2508,6 @@ def cosine_topk_lsh_multiprobe2(
     return _lsh_topk(
         corpus, queries, masks, id_col, vec_col, query_id_col, k, n_bits,
         round_digits,
-    )
-
-
-def cosine_topk_bruteforce_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 5,
-    round_digits: int = 4,
-    max_queries: int = 100_000,
-) -> DataFrame:
-    """Throughput variant of cosine_topk_bruteforce: an Arrow-batched
-    numpy matmul replaces the per-pair higher-order folds.
-
-    The query matrix (small by contract) is captured in the closure and
-    shipped once per Python worker; each mapInPandas batch computes
-    corpus_block @ queries.T as one BLAS call and emits only its block's
-    top-k rows per query, so the Python->JVM return is k*n_queries rows
-    per batch, not the full similarity matrix. A final window over those
-    partial winners (tiny) picks the global top-k. Same ranking contract
-    as the expression path (rounded sim DESC, id ASC) — parity is pinned
-    by test; the expression path remains the oracle-comparable form.
-    Rounding replicates Spark's HALF_UP (away from zero), not numpy's
-    half-to-even, so boundary sims rank identically on both paths.
-
-    Contract: integer id columns (the module's other operators are
-    id-type generic; this fast path trades that for the matmul). Output
-    id columns keep the INPUT id types (tinyint stays tinyint), matching
-    the type-preserving expression path. The query side must be small —
-    it is collected to the driver and closure-shipped; ``max_queries``
-    bounds that collect and the call fails loudly past it.
-    """
-    import numpy as np
-    import pandas as pd
-
-    _np_by_spark = {
-        "tinyint": np.int8,
-        "smallint": np.int16,
-        "int": np.int32,
-        "bigint": np.int64,
-    }
-    q_dt = dict(queries.dtypes).get(query_id_col)
-    c_dt = dict(corpus.dtypes).get(id_col)
-    for col, dt in ((query_id_col, q_dt), (id_col, c_dt)):
-        if dt not in _np_by_spark:
-            raise TypeError(
-                f"cosine_topk_bruteforce_arrow requires integer id columns; "
-                f"{col!r} is {dt} — use cosine_topk_bruteforce for other id "
-                "types"
-            )
-
-    def round_half_up(a, d):
-        scale = 10.0**d
-        return np.sign(a) * np.floor(np.abs(a) * scale + 0.5) / scale
-
-    # limit(max_queries+1) bounds the driver collect even on a runaway
-    # query side; >max_queries is a contract violation, not a truncation.
-    q_rows = (
-        queries.select(query_id_col, vec_col).limit(max_queries + 1).collect()
-    )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_bruteforce_arrow: query side exceeds max_queries="
-            f"{max_queries}; this path broadcasts the full query matrix — "
-            "shrink the query set or raise max_queries explicitly"
-        )
-    if not q_rows:
-        empty = (
-            f"{query_id_col} {q_dt}, neighbor_id {c_dt}, sim double, "
-            "rank long"
-        )
-        return corpus.sparkSession.createDataFrame([], empty)
-    q_ids = np.array([r[0] for r in q_rows], dtype=_np_by_spark[q_dt])
-    qm = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norms = np.linalg.norm(qm, axis=1)
-    q_norms[q_norms == 0] = np.inf  # zero-norm query => sim 0 everywhere
-
-    def block_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=_np_by_spark[c_dt])
-            cm = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_norms = np.linalg.norm(cm, axis=1)
-            c_norms[c_norms == 0] = np.inf
-            sims = (cm @ qm.T) / np.outer(c_norms, q_norms)
-            sims = round_half_up(sims, round_digits)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                col = sims[:, qi]
-                mask = ids != q_ids[qi]
-                cand_idx = np.nonzero(mask)[0]
-                if len(cand_idx) == 0:
-                    continue
-                # partial top-k inside the block: sort by (-sim, id)
-                order = np.lexsort((ids[cand_idx], -col[cand_idx]))[:k]
-                sel = cand_idx[order]
-                out_q.extend([q_ids[qi]] * len(sel))
-                out_n.extend(ids[sel])
-                out_s.extend(col[sel])
-            yield pd.DataFrame(
-                {
-                    query_id_col: pd.Series(out_q, dtype=_np_by_spark[q_dt]),
-                    "neighbor_id": pd.Series(out_n, dtype=_np_by_spark[c_dt]),
-                    "sim": pd.Series(out_s, dtype="float64"),
-                }
-            )
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        block_topk, f"{query_id_col} {q_dt}, neighbor_id {c_dt}, sim double"
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
     )
 
 
@@ -3010,7 +2782,7 @@ def sq8_clip_metrics(
     index with FROZEN bounds: how many components fall below min (clip
     to code 0) or above max (clip to 255). Frozen bounds keep old codes
     valid — the append-without-rebuild story, mirroring
-    ivf_append/ivf_drift_metrics — and the clip rate is the signal for
+    ivf_append/ivf_drift_metrics_exact — and the clip rate is the signal for
     when re-quantization pays.
 
     One posexplode + per-dim aggregate (64 rows out); bounds ride as
@@ -3411,16 +3183,20 @@ def kmeans_step_exact(
     integers: assign every vector to its nearest centroid (the same
     quantized argmax as `ivf_drift_metrics_exact` — no rounding
     decision anywhere), then emit per (cell, dimension) the occupancy
-    and the EXACT integer sum of quantized coordinates. The driver (or
-    `kmeans_refine`, which computes the same means in floats) divides
+    and the EXACT integer sum of quantized coordinates. The driver
+    (`_kmeans_update_exact`) divides
     ``coord_sum_q / (n * 2^qbits)`` to get the next centroid — the
     division is the only inexact step and it happens on k*dim bounded
     numbers, never on data.
 
     Plan: assignment is a map-side literal-expression argmax on one
     scan; posexplode emits dim rows per vector and the one shuffle is
-    map-combined down to k*dim rows. Int64 envelope: |coord_sum_q| <=
-    rows_per_cell * 2^qbits, so qbits=20 holds to ~2^43 rows per cell.
+    map-combined down to k*dim rows. Int64 envelope: for |x| <= 1,
+    |coord_sum_q| <= rows_per_cell * 2^qbits, so qbits=20 holds to
+    ~2^43 rows per cell. Past it both forms raise instead of wrapping:
+    a cell sum past int64 fails the BIGINT sum with ARITHMETIC_OVERFLOW
+    under ANSI (Spark 4's default), and a row's dot past int64 fails the
+    expression fold the same way and the kernel with ArithmeticError.
 
     Returns (cid, dim, n, coord_sum_q) — dim is 1-based.
 
@@ -3430,10 +3206,12 @@ def kmeans_step_exact(
     (cell, dim) statistics PARTIALLY AGGREGATED inside the task (guide
     §2.3), so the posexplode of dim rows per vector disappears and the
     shuffle carries tasks x k x dim partial rows instead of corpus x
-    dim rows. Bit-identical: int64 addition is associative even under
-    wraparound. Below the budget the literal expression plan measured
-    faster (0.37 s vs 0.95 s at k=8, sf0.1 — no Python roundtrip) and
-    stays the default; ``"kernel"``/``"expr"`` force either.
+    dim rows. Inside the envelope the rows equal the expression form's:
+    the kernel's sums are exact integers, and a dot outside int64
+    raises ArithmeticError (see `_quant_assign_np`). Below the budget
+    the literal expression plan measured faster (0.37 s vs 0.95 s at
+    k=8, sf0.1 — no Python roundtrip) and stays the default;
+    ``"kernel"``/``"expr"`` force either.
     """
     from usgs_lidar_spark.functions.vectors import quantize_exact
 
@@ -3455,7 +3233,7 @@ def kmeans_step_exact(
             list_array_to_matrix,
         )
 
-        cids, Qc, nq = _quant_assign_kernel_parts(centroids, qbits)
+        cids, Qc, norms = _quant_assign_kernel_parts(centroids, qbits)
         dim = Qc.shape[1]
         scale = float(2**qbits)
         out_schema = StructType(
@@ -3478,51 +3256,24 @@ def kmeans_step_exact(
                 for lo in range(0, batch.num_rows, 65536):
                     sub = batch.slice(lo, 65536)
                     C = list_array_to_matrix(sub.column(0), expect_dim=dim)
-                    Q = np.floor(C * scale).astype(np.int64)
-                    best, _ = _quant_assign_np(Q, Qc, nq)
+                    Q = _quantize_np(C, scale)
+                    best, _ = _quant_assign_np(Q, Qc, norms)
                     for c in np.unique(best):
                         rows = best == c
                         key = int(cids[c])
                         n_acc[key] = n_acc.get(key, 0) + int(rows.sum())
-                        s = Q[rows].sum(axis=0)
-                        if key in s_acc:
-                            s_acc[key] = s_acc[key] + s
-                        else:
-                            s_acc[key] = s
-            if n_acc:
-                cids_out = sorted(n_acc)
+                        s = _exact_sums(Q[rows])
+                        prev = s_acc.get(key, [0] * dim)
+                        s_acc[key] = [a + b for a, b in zip(prev, s)]
+            out = [
+                (c, d, n_acc[c] if i == 0 else 0, t)
+                for c in sorted(n_acc)
+                for d, v in enumerate(s_acc[c], start=1)
+                for i, t in enumerate(_int64_terms(v))
+            ]
+            if out:
                 yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            np.repeat(
-                                np.asarray(cids_out, dtype=np.int64), dim
-                            ),
-                            pa.int64(),
-                        ),
-                        pa.array(
-                            np.tile(
-                                np.arange(1, dim + 1, dtype=np.int64),
-                                len(cids_out),
-                            ),
-                            pa.int64(),
-                        ),
-                        pa.array(
-                            np.repeat(
-                                np.asarray(
-                                    [n_acc[c] for c in cids_out],
-                                    dtype=np.int64,
-                                ),
-                                dim,
-                            ),
-                            pa.int64(),
-                        ),
-                        pa.array(
-                            np.concatenate(
-                                [s_acc[c] for c in cids_out]
-                            ).astype(np.int64),
-                            pa.int64(),
-                        ),
-                    ],
+                    [pa.array(col, pa.int64()) for col in zip(*out)],
                     schema=arrow_out,
                 )
 

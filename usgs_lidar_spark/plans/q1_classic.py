@@ -1238,10 +1238,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (dedup_simhash64 retired in round 10: the xxhash64 fingerprint surface
-# is covered by `dedup_simhash_portable`, whose two-round-Lehmer hash
-# family carries a HARD DuckDB oracle; the xxhash64 kernel itself stays
-# exercised by operators/dedup.simhash64's unit tests.)
+# (dedup_simhash64 retired in round 10 in favour of
+# `dedup_simhash_portable`, whose two-round-Lehmer hash family carries a
+# HARD DuckDB oracle; the xxhash64 fingerprint operator it ran has since
+# been deleted.)
 
 
 # =====================================================================

@@ -451,9 +451,10 @@ def sim_ivf_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     index: per current cell, occupancy, the exact integer sum of
     quantized dots-to-centroid, and how many vectors a candidate
     quantizer (a disjoint seed set, deterministically reproducible by
-    the oracle; in production a kmeans_refine output) would reassign.
+    the oracle; in production a `kmeans_train_centroids` output) would
+    reassign.
 
-    Uses `ivf_drift_metrics_exact`: the float form's summed
+    Uses `ivf_drift_metrics_exact`: an earlier float form's summed
     ROUND(cos, 4) was driver-red for two rounds (a last-ulp environment
     difference in ANY corpus dot product flips a half-way decimal
     rounding and shifts the sum) — this form quantizes vectors with

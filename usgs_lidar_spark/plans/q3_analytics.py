@@ -1816,7 +1816,7 @@ def _dhash_band_sql(q: int, src: str = "smp") -> str:
     """DuckDB expression for dHash band ``q`` over a 72-sample list
     ``src`` (1-indexed): comparison j = 16q+m sits at grid row j//8,
     col j%8 -> samples (j//8)*9 + j%8 + 1 vs + 2 — the exact packing
-    of multimodal/binary_ops._pack_dhash_bands."""
+    of multimodal/binary_ops._pack_dhash_bands_n at n_bands=4."""
     return f"""CAST(list_sum(list_transform(range(0, 16), j ->
         CASE WHEN {src}[CAST(((16*{q}+j)//8)*9 + ((16*{q}+j)%8) + 1 AS INTEGER)]
                 > {src}[CAST(((16*{q}+j)//8)*9 + ((16*{q}+j)%8) + 2 AS INTEGER)]
