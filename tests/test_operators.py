@@ -4343,6 +4343,36 @@ def test_embed_gram_exact_and_partition_invariant(spark):
     assert got == got2
 
 
+def test_embed_gram_int64_envelope_exact_or_raises(spark):
+    """The Gram kernel never wraps: just below the int64 envelope its
+    moments equal a Python-integer reference (the batch is recomputed
+    exactly past the 2^62 bound), and a moment past 2^63 raises naming
+    the envelope — the one-row (2^40, 1) frame at qbits=12, whose true
+    Gram entries are 2^104 and 2^64, used to come back wrapped to 0."""
+    from usgs_lidar_spark.operators.linalg import embed_gram_quantized
+
+    def gram(rows):
+        emb = spark.createDataFrame(
+            [(i, list(r)) for i, r in enumerate(rows)],
+            "vec_id long, embedding array<double>",
+        ).coalesce(1)
+        return {(r["i"], r["j"]): r["g"] for r in embed_gram_quantized(emb).collect()}
+
+    # q = (2^31 - 1, -3): two rows put g(1,1) at 2^63 - 2^33 + 2.
+    x = (2**31 - 1) / 4096.0
+    near = [(x, -3 / 4096.0), (x, 5 / 4096.0)]
+    q = [(2**31 - 1, -3), (2**31 - 1, 5)]
+    want = {
+        (i + 1, j + 1): sum(r[i] * r[j] for r in q)
+        for i in range(2)
+        for j in range(i, 2)
+    }
+    assert want[(1, 1)] > 2**62
+    assert gram(near) == want
+    with pytest.raises(Exception, match="int64 envelope"):
+        gram([(2.0**40, 1.0)])
+
+
 def test_pca_components_and_projection(spark):
     """Components match a numpy eigendecomposition of the same
     quantized covariance (sign-normalized), are orthonormal and

@@ -661,3 +661,97 @@ def test_python_datasource_stream_writer_end_to_end(spark, tmp_path):
     assert not any(f.endswith(".tmp") for f in _os.listdir(out))
     back = spark.read.format("lidar_catalog").option("path", out).load()
     assert back.count() == 2
+
+
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_testdata_matches_declared_schemas(spark):
+    """The declared-schema reads trust each file to carry exactly its
+    declaration: every testdata generation's tables, read with inference,
+    have the declared names, types and order (a mismatch would read
+    by name and silently NULL a missing column). ``events`` is checked in
+    its normalized, loaded form."""
+    import glob
+    import os
+
+    from tests.conftest import SF_SMALL
+    from usgs_lidar_spark.catalog import load_table
+    from usgs_lidar_spark.schemas import DECLARED, EVENTS, TABLE_NAMES
+
+    sf_dirs = sorted(glob.glob(os.path.join(os.path.dirname(SF_SMALL), "sf*")))
+    assert sf_dirs
+    for sf in sf_dirs:
+        for name in TABLE_NAMES:
+            if name == "events":
+                got = load_table(spark, sf, name).schema
+                assert _fields(got) == _fields(EVENTS), sf
+                continue
+            got = spark.read.parquet(f"{sf}/{name}.parquet").schema
+            assert _fields(got) == _fields(DECLARED[name]), (sf, name)
+
+
+def test_benchmark_tables_match_declared_schemas(spark, tmp_path):
+    """The benchmark generator's point, catalog, documents, embeddings
+    and lineitem tables, as Spark infers them, match POINTS, CATALOG,
+    DOCUMENTS, EMBEDDINGS and LINEITEM; the partitioned point layout
+    reads back through `read_points` exactly as inference would."""
+    import numpy as np
+
+    from perfbench import datagen
+    from usgs_lidar_spark.schemas import CATALOG, DOCUMENTS, EMBEDDINGS, LINEITEM, POINTS
+
+    rng = np.random.default_rng(0)
+    regions = datagen.lidar_regions(1, 2_000, 500)
+    tables = {
+        "points": (datagen.point_table(rng, regions), POINTS),
+        "catalog": (datagen.catalog_table(regions), CATALOG),
+        "documents": (datagen.documents_table(rng, 50), DOCUMENTS),
+        "embeddings": (datagen.embeddings_table(rng, 20), EMBEDDINGS),
+        "lineitem": (datagen.lineitem_table(rng, 200), LINEITEM),
+    }
+    for name, (table, declared) in tables.items():
+        path = datagen.write_table(table, str(tmp_path), name)
+        assert _fields(spark.read.parquet(path).schema) == _fields(declared), name
+    layout = str(tmp_path / "layout")
+    write_points_partitioned(spark.read.parquet(str(tmp_path / "points.parquet")), layout)
+    inferred = spark.read.parquet(layout)
+    declared = read_points(spark, layout)
+    assert _fields(declared.schema) == _fields(inferred.schema)
+    assert sorted(declared.collect()) == sorted(inferred.collect())
+
+
+def test_events_nanos_timestamps_load_as_ntz(spark, tmp_path):
+    """A data generation whose ``events.ts`` is parquet TIMESTAMP(NANOS)
+    still loads through ``load_table``: read as raw int64 nanos, converted
+    to TimestampNTZ truncated to the microsecond by integer division."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from usgs_lidar_spark.catalog import load_table
+    from usgs_lidar_spark.schemas import EVENTS
+
+    nanos = [1_700_000_000_123_456_789, 1_600_000_000_000_000_999, 1_500]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+                "user_id": pa.array([7, 8, 9], pa.int64()),
+                "event_type": ["view", "click", "buy"],
+                "value": [1.5, 2.5, 3.5],
+                "props": ["{}", "{}", "{}"],
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type == pa.timestamp("ns")
+    ev = load_table(spark, str(tmp_path), "events")
+    assert _fields(ev.schema) == _fields(EVENTS)
+    epoch = dt.datetime(1970, 1, 1)
+    want = [epoch + dt.timedelta(microseconds=n // 1000) for n in nanos]
+    got = [r["ts"] for r in ev.orderBy("event_id").collect()]
+    assert got == want

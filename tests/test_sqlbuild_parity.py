@@ -302,3 +302,108 @@ def test_dlit_round_trips_exactly():
         dlit(float("nan"))
     with pytest.raises(ValueError):
         dlit(float("inf"))
+
+
+# ---- lidar lifecycle builders (spatial predicates, voxel keys/aggregates) --
+
+
+def _bbox_contains_composed(qminx, qmaxx, qminy, qmaxy):
+    return (
+        (F.col("xmin") <= F.lit(qminx))
+        & (F.col("xmax") >= F.lit(qmaxx))
+        & (F.col("ymin") <= F.lit(qminy))
+        & (F.col("ymax") >= F.lit(qmaxy))
+    )
+
+
+def _within_polygon_composed(df, polygon, x_col, y_col):
+    from usgs_lidar_spark.operators.spatial import point_in_polygon, polygon_bbox
+
+    minx, miny, maxx, maxy = polygon_bbox(polygon)
+    bbox = F.col(x_col).between(minx, maxx) & F.col(y_col).between(miny, maxy)
+    return df.filter(bbox & point_in_polygon(polygon, x_col, y_col))
+
+
+def _voxel_keys_composed(df, axes, resolutions):
+    mins = df.agg(*[F.min(a).alias(f"__min_{a}") for a in axes])
+    keyed = df.crossJoin(F.broadcast(mins))
+    for a, r in zip(axes, resolutions):
+        keyed = keyed.withColumn(
+            f"i{a}",
+            F.floor((F.col(a) - F.col(f"__min_{a}")) / F.lit(float(r))).cast("long"),
+        )
+    return keyed.drop(*[f"__min_{a}" for a in axes])
+
+
+def _voxel_downsample_composed(df, axes, resolutions, round_digits=4,
+                               exact_decimals=None, value_cols=()):
+    keyed = _voxel_keys_composed(df, axes, resolutions)
+    aggs = []
+    for i, a in enumerate(axes):
+        if exact_decimals is not None:
+            scale = 10 ** exact_decimals[i]
+            c = F.sum(F.round(F.col(a) * scale).cast("long")) / (
+                F.lit(float(scale)) * F.count(F.lit(1))
+            )
+        else:
+            c = F.avg(a)
+            if round_digits is not None:
+                c = F.round(c, round_digits)
+        aggs.append(c.alias(f"c{a}"))
+    for v in value_cols:
+        c = F.avg(v)
+        if round_digits is not None:
+            c = F.round(c, round_digits)
+        aggs.append(c.alias(f"c{v}"))
+    aggs.append(F.count(F.lit(1)).alias("n_points"))
+    return keyed.groupBy(*[f"i{a}" for a in axes]).agg(*aggs)
+
+
+def _points_df(spark):
+    return spark.createDataFrame(
+        [(0.0, 0.0, 1.25, 10.0), (1.0, 2.999, -0.005, 11.0), (2.5, 3.0, 7.0, 12.0),
+         (3.0, 3.0001, 7.0, 13.0), (-0.0, 1e-300, 2.0, 14.0), (9.99, 5.5, 0.1, 15.0)],
+        "x double, y double, z double, w double",
+    )
+
+
+def test_bbox_contains_plan_equal(spark):
+    from usgs_lidar_spark.operators.spatial import bbox_contains
+
+    cat = spark.createDataFrame(
+        [(0.0, 100.0, 0.0, 100.0), (5.0, 15.0, 5.0, 15.0), (-0.0, 10.0, 0.1, 10.0)],
+        "xmin double, xmax double, ymin double, ymax double",
+    )
+    for q in [(0.1, 10.0, 0.1, 10.0), (-0.0, 1e-300, 5.0, 15.0), (6.0, 7.0, 6.0, 7.0)]:
+        new = cat.filter(bbox_contains(qminx=q[0], qmaxx=q[1], qminy=q[2], qmaxy=q[3]))
+        old = cat.filter(_bbox_contains_composed(*q))
+        assert _same_result(new, old)
+        assert new.collect() == old.collect()
+
+
+def test_filter_within_polygon_plan_equal(spark):
+    from usgs_lidar_spark.operators.spatial import filter_within_polygon
+
+    pts = _points_df(spark)
+    poly = [(-1.0, -1.0), (4.0, 0.5), (3.0, 3.0), (0.5, 3.0)]
+    new = filter_within_polygon(pts, poly, x_col="x", y_col="y")
+    old = _within_polygon_composed(pts, poly, "x", "y")
+    assert _same_result(new, old)
+    assert new.collect() == old.collect()
+
+
+def test_voxel_builders_plan_equal(spark):
+    from usgs_lidar_spark.operators.voxel import voxel_downsample, voxel_keys
+
+    pts = _points_df(spark)
+    axes, res = ["x", "y", "z"], [2.5, 3.0, 0.5]
+    new, old = voxel_keys(pts, axes, res), _voxel_keys_composed(pts, axes, res)
+    assert new.columns == old.columns
+    assert _same_result(new, old)
+    for kw in ({}, {"round_digits": None}, {"exact_decimals": [2, 3, 3]},
+               {"value_cols": ["w"]}, {"round_digits": 2, "value_cols": ["w"]}):
+        new = voxel_downsample(pts, axes, res, **kw)
+        old = _voxel_downsample_composed(pts, axes, res, **kw)
+        assert new.columns == old.columns
+        assert _same_result(new, old), kw
+        assert sorted(new.collect()) == sorted(old.collect())

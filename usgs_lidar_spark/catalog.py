@@ -14,7 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from usgs_lidar_spark.schemas import TABLE_NAMES
+from usgs_lidar_spark.schemas import DECLARED, TABLE_NAMES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -22,13 +22,22 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table, normalizing types.
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS); Spark has no nanos
-    type, so the session reads it as raw int64 (nanosAsLong) and we convert
-    to TimestampNTZ at microsecond precision here. This is a metadata-only
-    projection — it does not break column pruning or predicate pushdown on
-    the other columns.
+    Every table of ``schemas.DECLARED`` (``"catalog"`` and all of
+    ``TABLE_NAMES`` but ``events``) is read with its declared schema, so
+    building the plan starts no schema-inference job.
+
+    ``events`` keeps an inferring read: its ``ts`` is TIMESTAMP(NANOS) in
+    some data generations and TIMESTAMP(MICROS) in others. Spark has no
+    nanos type, so the session reads nanos as raw int64 (nanosAsLong) and
+    we convert to TimestampNTZ at microsecond precision here. This is a
+    metadata-only projection — it does not break column pruning or
+    predicate pushdown on the other columns.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    declared = DECLARED.get(name)
+    if declared is not None:
+        return spark.read.schema(declared).parquet(path)
+    df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Integer division, NOT `/1000` + cast: epoch nanos (~1.7e18) exceed
         # a double's 2^53 exact-integer range, so float division corrupts

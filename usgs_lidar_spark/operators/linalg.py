@@ -19,11 +19,14 @@ expression form explodes d² rows per VECTOR; the batch form emits d²
 rows per BATCH). The UDF-off-hot-paths doctrine is about row-wise
 Python, not about batch-reducing kernels.
 
-Overflow envelope (documented, same doctrine as `functions/vectors.dot_q`):
-per-row products are <= 2^(2*qbits); a batch of B rows accumulates
-<= B * 2^(2*qbits) per cell — at the default qbits=12 and Arrow batches
-of 10^4 rows that is ~2^38, and the global BIGINT sum holds to ~2^63 /
-2^24 ≈ 5e11 rows per cell. Lower qbits for bigger corpora.
+Overflow envelope (same doctrine as `functions/vectors.dot_q`): per-row
+products of unit-range components are <= 2^(2*qbits); a batch of B rows
+accumulates <= B * 2^(2*qbits) per cell — at the default qbits=12 and
+Arrow batches of 10^4 rows that is ~2^38, and the global BIGINT sum holds
+to ~2^63 / 2^24 ≈ 5e11 rows per cell. Lower qbits for bigger corpora.
+Nothing wraps silently: a batch partial that would leave int64 raises
+`ArithmeticError` naming the envelope, and the cross-batch BIGINT sum
+raises ARITHMETIC_OVERFLOW under ANSI.
 """
 
 from __future__ import annotations
@@ -111,8 +114,8 @@ def _gram_partials(
     moments for i <= j — all BIGINT, so any union of partials
     aggregates to the exact totals (integer addition is associative:
     a store of them can be append-only and crash-safe, with aggregation
-    deferred to read). A numpy int64 matmul per batch; see the module
-    docstring for its overflow envelope."""
+    deferred to read). A numpy int64 matmul per batch, exact or raising
+    (`_batch_moments`); see the module docstring for the envelope."""
     q = emb.select(quantize_exact(vec_col, qbits).alias("q"))
 
     def partial(batches):
@@ -122,9 +125,8 @@ def _gram_partials(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            g = m.T @ m
-            d = g.shape[0]
+            first, g = _batch_moments(np.array(list(pdf["q"]), dtype=np.int64))
+            d = len(first)
             iu, ju = np.triu_indices(d)
             rows = {
                 "i": np.concatenate(([0], np.arange(1, d + 1), iu + 1)),
@@ -132,12 +134,36 @@ def _gram_partials(
                     ([0], np.zeros(d, dtype=np.int64), ju + 1)
                 ),
                 "g": np.concatenate(
-                    ([len(pdf)], m.sum(axis=0), g[iu, ju])
-                ),
+                    ([len(pdf)], first, g[iu, ju])
+                ).astype(np.int64),
             }
             yield pd.DataFrame(rows)
 
     return q.mapInPandas(partial, "i long, j long, g long")
+
+
+def _batch_moments(m):
+    """First moments ``m.sum(axis=0)`` and Gram ``m.T @ m`` of one batch
+    of quantized rows, exact.
+
+    The int64 matmul wraps silently past int64, so a batch whose bound
+    ``sum over rows of max(max|q|, max|q|²)`` reaches 2^62 (margin for the
+    bound's own float rounding) is recomputed in Python integers, and a
+    moment that leaves int64 there raises `ArithmeticError` naming the
+    int64 envelope — the BIGINT moment rows cannot carry it."""
+    import numpy as np
+
+    peak = np.abs(m.astype(np.float64)).max(axis=1, initial=0.0)
+    if float(np.maximum(peak, peak * peak).sum()) < 2.0**62:
+        return m.sum(axis=0), m.T @ m
+    exact = m.astype(object)
+    first, g = exact.sum(axis=0), exact.T @ exact
+    if any(not -(2**63) <= v < 2**63 for v in (*first.flat, *g.flat)):
+        raise ArithmeticError(
+            "Gram moment outside the int64 envelope (|sum q_i q_j| >= 2^63); "
+            "lower qbits"
+        )
+    return first, g
 
 
 def _sum_moments(partials: DataFrame) -> DataFrame:

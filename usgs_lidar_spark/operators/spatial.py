@@ -35,12 +35,12 @@ def bbox_contains(
     *, qminx: float, qmaxx: float, qminy: float, qmaxy: float,
 ) -> Column:
     """F2: catalog-row bbox CONTAINS the query bbox (the reference's
-    fetch_regions predicate — containment, not intersection)."""
-    return (
-        (F.col(xmin) <= F.lit(qminx))
-        & (F.col(xmax) >= F.lit(qmaxx))
-        & (F.col(ymin) <= F.lit(qminy))
-        & (F.col(ymax) >= F.lit(qmaxy))
+    fetch_regions predicate — containment, not intersection), as one
+    JVM-parsed expression with the Column form's tree
+    ``((xmin <= qminx AND xmax >= qmaxx) AND ymin <= qminy) AND ...``."""
+    return F.expr(
+        f"{qident(xmin)} <= {dlit(qminx)} AND {qident(xmax)} >= {dlit(qmaxx)}"
+        f" AND {qident(ymin)} <= {dlit(qminy)} AND {qident(ymax)} >= {dlit(qmaxy)}"
     )
 
 
@@ -56,7 +56,14 @@ def point_in_polygon(
     polygon: Sequence[tuple[float, float]], x_col: str, y_col: str
 ) -> Column:
     """Even-odd ray-casting test for an arbitrary polygon, as one SQL
-    expression parsed JVM-side (one py4j call to construct).
+    expression parsed JVM-side (one py4j call to construct)."""
+    return F.expr(_point_in_polygon_sql(polygon, qident(x_col), qident(y_col)))
+
+
+def _point_in_polygon_sql(
+    polygon: Sequence[tuple[float, float]], x: str, y: str
+) -> str:
+    """SQL text of `point_in_polygon` over the SQL operands ``x``, ``y``.
 
     Edge (x1,y1)->(x2,y2) counts a crossing when it straddles the ray,
     ``(y1 <= y) != (y2 <= y)``, and the point lies left of the crossing,
@@ -66,7 +73,6 @@ def point_in_polygon(
     order, so each edge decision is bit-identical to the vectorized
     NumPy form of the rule. Horizontal edges never straddle the ray and
     are skipped (which also keeps the divisor non-zero)."""
-    x, y = qident(x_col), qident(y_col)
     n = len(polygon)
     terms = []
     for i in range(n):
@@ -79,7 +85,7 @@ def point_in_polygon(
             f"AND {x} < {dlit(x1)} + ({y} - {dlit(y1)}) * {dlit(x2 - x1)}"
             f" / {dlit(y2 - y1)} THEN 1 ELSE 0 END"
         )
-    return F.expr(f"({' + '.join(terms)}) % 2 = 1")
+    return f"({' + '.join(terms)}) % 2 = 1"
 
 
 def filter_within_polygon(
@@ -89,12 +95,17 @@ def filter_within_polygon(
     y_col: str = "y",
 ) -> DataFrame:
     """The planner helper: rewrite within(polygon) into bbox-prefilter
-    (pushed to the scan) AND the exact `point_in_polygon` expression."""
+    (pushed to the scan) AND the exact `point_in_polygon` expression, as
+    one filter string parsed JVM-side. The tree is the Column form's
+    ``(x.between(..) AND y.between(..)) AND inside``, each ``between``
+    written as the two comparisons `Column.between` builds."""
     minx, miny, maxx, maxy = polygon_bbox(polygon)
-    bbox = (
-        F.col(x_col).between(minx, maxx) & F.col(y_col).between(miny, maxy)
+    x, y = qident(x_col), qident(y_col)
+    return df.filter(
+        f"(({x} >= {dlit(minx)} AND {x} <= {dlit(maxx)})"
+        f" AND ({y} >= {dlit(miny)} AND {y} <= {dlit(maxy)}))"
+        f" AND ({_point_in_polygon_sql(polygon, x, y)})"
     )
-    return df.filter(bbox & point_in_polygon(polygon, x_col, y_col))
 
 
 def convex_halfplane_sql(

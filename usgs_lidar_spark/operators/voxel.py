@@ -16,6 +16,10 @@ Spark design: two hash aggregates, zero driver round-trips.
      (partition, voxel), not per point — at 100 TB the shuffle volume is
      bounded by voxel count, not point count. No sort anywhere (the
      reference's np.unique/argsort sort is an artifact of numpy's API).
+
+The key and aggregate columns are rendered as single-parse SQL
+(functions/sqlbuild.py) with the Column form's analyzed plan, so building
+it costs a few py4j calls per axis, not one per expression node.
 """
 
 from __future__ import annotations
@@ -24,6 +28,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from usgs_lidar_spark.functions.sqlbuild import dlit, qident
 
 
 def voxel_keys(
@@ -36,12 +42,12 @@ def voxel_keys(
     Equivalent of /root/reference/scripts/usgs_lidar.py:416 — but the global
     min is computed distributed and broadcast, never collected to the driver.
     """
-    mins = df.agg(*[F.min(a).alias(f"__min_{a}") for a in axes])
+    mins = df.agg(*[F.expr(f"min({qident(a)}) AS {qident('__min_' + a)}") for a in axes])
     keyed = df.crossJoin(F.broadcast(mins))
     for a, r in zip(axes, resolutions):
         keyed = keyed.withColumn(
             f"i{a}",
-            F.floor((F.col(a) - F.col(f"__min_{a}")) / F.lit(float(r))).cast("long"),
+            F.expr(f"CAST(FLOOR(({qident(a)} - {qident('__min_' + a)}) / {dlit(r)}) AS BIGINT)"),
         )
     return keyed.drop(*[f"__min_{a}" for a in axes])
 
@@ -79,21 +85,21 @@ def voxel_downsample(
             # itself engine-dependent: Spark rounds the decimal rendering
             # HALF_UP, C engines round the binary double — observed live).
             scale = 10 ** exact_decimals[i]
-            c = F.sum(F.round(F.col(a) * scale).cast("long")) / (
-                F.lit(float(scale)) * F.count(F.lit(1))
+            c = (
+                f"sum(CAST(round({qident(a)} * {scale}) AS BIGINT))"
+                f" / ({dlit(scale)} * count(1))"
             )
         else:
-            c = F.avg(a)
-            if round_digits is not None:
-                c = F.round(c, round_digits)
-        aggs.append(c.alias(f"c{a}"))
+            c = _rounded(f"avg({qident(a)})", round_digits)
+        aggs.append(f"{c} AS {qident('c' + a)}")
     for v in value_cols:
-        c = F.avg(v)
-        if round_digits is not None:
-            c = F.round(c, round_digits)
-        aggs.append(c.alias(f"c{v}"))
-    aggs.append(F.count(F.lit(1)).alias("n_points"))
-    return keyed.groupBy(*[f"i{a}" for a in axes]).agg(*aggs)
+        aggs.append(f"{_rounded(f'avg({qident(v)})', round_digits)} AS {qident('c' + v)}")
+    aggs.append("count(1) AS n_points")
+    return keyed.groupBy(*[f"i{a}" for a in axes]).agg(*[F.expr(e) for e in aggs])
+
+
+def _rounded(sql: str, digits: int | None) -> str:
+    return sql if digits is None else f"round({sql}, {int(digits)})"
 
 
 def voxel_pyramid(

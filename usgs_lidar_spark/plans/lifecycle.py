@@ -14,6 +14,9 @@ Engine mapping: catalog filter = broadcast predicate; the per-region scan
 qualifying region list (the dynamic form of the reference's catalog-first
 pruning); noise filter + polygon crop pushed into the scan; the year-keyed
 dict = a `year` column (group or partitionBy to materialize the keying).
+As the reference's fetch_data hands its crop to subsample in memory,
+`fetch_data` returns its crop pinned (an eager local checkpoint), so the
+two voxel passes of `subsample` read the pin instead of re-scanning.
 
 **Fixed reference bug** (SURVEY.md §3.1): the reference fetches the
 DEFAULT region's data for every requested region (fetch_region_data is
@@ -42,15 +45,18 @@ from usgs_lidar_spark.operators.voxel import voxel_downsample
 NOISE_CLASS = 7
 
 
+def _qualifying(catalog: DataFrame, polygon: Sequence[tuple[float, float]]) -> DataFrame:
+    """Catalog rows whose bbox CONTAINS the polygon's bbox."""
+    minx, miny, maxx, maxy = polygon_bbox(polygon)
+    return catalog.filter(bbox_contains(qminx=minx, qmaxx=maxx, qminy=miny, qmaxy=maxy))
+
+
 def fetch_regions(catalog: DataFrame, polygon: Sequence[tuple[float, float]]) -> DataFrame:
     """Qualifying regions for a polygon: catalog bbox CONTAINS the
     polygon's bbox; sorted by year ascending, nulls last (the reference's
     demo-pinned ordering, scripts/usgs_lidar.py:297-305)."""
-    minx, miny, maxx, maxy = polygon_bbox(polygon)
     return (
-        catalog.filter(
-            bbox_contains(qminx=minx, qmaxx=maxx, qminy=miny, qmaxy=maxy)
-        )
+        _qualifying(catalog, polygon)
         .orderBy(F.col("year").asc_nulls_last(), F.col("filename"))
         .select("filename", "region", "year")
     )
@@ -61,37 +67,51 @@ def fetch_data(
     catalog: DataFrame,
     polygon: Sequence[tuple[float, float]],
 ) -> DataFrame:
-    """All years of point data for a polygon: partition-pruned scan of the
-    qualifying regions, noise filter + bbox pushed to the scan, exact
-    polygon crop as a column expression in the same map stage, year
-    attached from the catalog (broadcast). Returns one DataFrame with a
-    `year` column — the distributed form of the reference's
-    dict[year -> GeoDataFrame]."""
+    """All years of point data for a polygon, cropped once and pinned.
+
+    Plan: partition-pruned scan of the qualifying regions, noise filter +
+    bbox pushed to the scan, exact polygon crop as a column expression in
+    the same map stage, year attached from the catalog (broadcast). The
+    qualifying ``(region, catalog_year)`` pairs are made distinct on one
+    partition — the reference's crawl bounds the catalog at 1,597 regions
+    — so the broadcast side has no exchange stage. Returns one DataFrame
+    with a `year_label` column — the distributed form of the reference's
+    dict[year -> GeoDataFrame].
+
+    The crop is returned pinned by an eager ``localCheckpoint()``, as the
+    reference's fetch_data returns its crop in memory: this call runs
+    exactly two Spark jobs, the catalog broadcast and the crop, and every
+    consumer (both passes of `subsample`) reads the pin without touching
+    the catalog or the point files again. Local-checkpoint blocks live in
+    the executors' block managers and die with their executor — the same
+    contract as the graph operators' default ``checkpoint_mode="local"``;
+    rebuild the crop if an executor is lost."""
     regions = (
-        fetch_regions(catalog, polygon)
-        .select("region", F.col("year").alias("catalog_year"))
+        _qualifying(catalog, polygon)
+        .selectExpr("region", "year AS catalog_year")
+        .coalesce(1)
         .distinct()
     )
     # The catalog's year labels the data (as in the reference's lookup at
     # scripts/usgs_lidar.py:328); the points table's own year column is
     # dropped to keep the join unambiguous.
     scoped = points.drop("year").join(F.broadcast(regions), "region")
-    clean = scoped.filter(F.col("classification") != NOISE_CLASS)
+    clean = scoped.filter(f"classification != {NOISE_CLASS}")
     cropped = filter_within_polygon(clean, polygon, x_col="x", y_col="y")
-    return cropped.select(
+    return cropped.selectExpr(
         "region",
-        F.coalesce(F.col("catalog_year").cast("string"), F.lit("not_specified")).alias(
-            "year_label"
-        ),
+        "coalesce(CAST(catalog_year AS STRING), 'not_specified') AS year_label",
         "x",
         "y",
-        F.col("z").alias("elevation"),
-    )
+        "z AS elevation",
+    ).localCheckpoint()
 
 
 def subsample(
     points: DataFrame, resolution: float = 3.0, axes: Sequence[str] = ("x", "y", "elevation")
 ) -> DataFrame:
     """Voxel barycenter decimation at `resolution` (the reference's
-    subsample, demo: 401,577 -> 60,998 at res=3)."""
+    subsample, demo: 401,577 -> 60,998 at res=3). Builds the plan only:
+    on `fetch_data`'s pin it starts no job, and its min pass and keyed
+    pass both read the pin."""
     return voxel_downsample(points, list(axes), [resolution] * len(axes))

@@ -5,6 +5,17 @@ The reference infers all schemas dynamically (pandas ``read_csv`` inference at
 ``ept.json``). The engine declares them (SURVEY.md §1.6): explicit schemas are
 the contract that lets Catalyst prune columns at the scan and skip schema
 inference jobs on 100 TB inputs.
+
+Reads that trust these declarations (no footer-inference job at plan
+construction): ``sources.writers.read_points`` reads with ``POINTS``, and
+``catalog.load_table`` reads every table of ``DECLARED`` with its entry —
+``"catalog"`` and every ``TABLE_NAMES`` entry except ``events``. A file whose
+columns differ from its declaration is read by name (missing columns come
+back NULL), so ``tests/test_sources.py`` pins the testdata and the
+benchmark's generated tables to these schemas name by name and type by type.
+``events`` keeps its inferring read: its ``ts`` column is TIMESTAMP(NANOS) in
+some data generations and TIMESTAMP(MICROS) in others (see
+``EVENTS_RAW_TS_NANOS``).
 """
 
 from __future__ import annotations
@@ -120,9 +131,11 @@ LINEITEM = T.StructType(
     ]
 )
 
-#: Raw on-disk schema of events.parquet: ts is INT64 TIMESTAMP(NANOS) which
-#: Spark reads as long under spark.sql.legacy.parquet.nanosAsLong=true.
-#: catalog.load_table converts it to TimestampNTZ (microsecond truncation).
+#: Raw on-disk schema of events.parquet: in some data generations ts is INT64
+#: TIMESTAMP(NANOS), which Spark reads as long under
+#: spark.sql.legacy.parquet.nanosAsLong=true, and in others TIMESTAMP(MICROS).
+#: catalog.load_table infers which and converts nanos to TimestampNTZ
+#: (microsecond truncation); EVENTS is the normalized form.
 EVENTS_RAW_TS_NANOS = True
 
 EVENTS = T.StructType(
@@ -166,3 +179,19 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
+
+#: Tables ``catalog.load_table`` reads with their declared schema (no
+#: inference job). ``events`` is absent: its on-disk ``ts`` type varies by
+#: data generation, so its read infers.
+DECLARED = {
+    "catalog": CATALOG,
+    "region": REGION,
+    "nation": NATION,
+    "customer": CUSTOMER,
+    "supplier": SUPPLIER,
+    "part": PART,
+    "orders": ORDERS,
+    "lineitem": LINEITEM,
+    "documents": DOCUMENTS,
+    "embeddings": EMBEDDINGS,
+}

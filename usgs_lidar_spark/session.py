@@ -31,10 +31,12 @@ def get_spark(
         coalescing, skew-join splitting, dynamic join-strategy switch.
       * ``spark.sql.session.timeZone=UTC`` — parquet TIMESTAMP (naive)
         round-trips with identical wall-clock values as DuckDB reads them.
-      * ``spark.sql.legacy.parquet.nanosAsLong=true`` — the driver's
-        ``events.parquet`` carries TIMESTAMP(NANOS) which Spark has no
-        native type for; we read the raw int64 nanos and convert with
-        ``timestamp_micros`` (see catalog.load_table).
+      * ``spark.sql.legacy.parquet.nanosAsLong=true`` — in some data
+        generations the driver's ``events.parquet`` carries ``ts`` as
+        TIMESTAMP(NANOS), which Spark has no native type for (others
+        carry TIMESTAMP(MICROS)); we read the raw int64 nanos and convert
+        with ``timestamp_micros`` (see catalog.load_table, which keeps an
+        inferring read for ``events`` for this reason).
       * Arrow enabled — every pandas UDF / mapInPandas transfer is
         columnar-batched, never per-row pickling.
       * Runtime bloom-filter joins stay at the Spark default (ON): when

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from usgs_lidar_spark.schemas import POINTS
+
 
 def write_points_partitioned(
     df: DataFrame,
@@ -81,9 +83,11 @@ def write_catalog(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 
 def read_points(spark: SparkSession, path: str) -> DataFrame:
-    """Scan the partitioned point table (partition columns recovered from
-    directory layout)."""
-    return spark.read.parquet(path)
+    """Scan the partitioned point table with the declared ``POINTS`` schema
+    (no schema-inference job; the partition columns' values come from the
+    directory layout, their types from the declaration). Columns come back
+    data first, then ``region``, ``year``."""
+    return spark.read.schema(POINTS).parquet(path)
 
 
 def write_training_shards(
