@@ -333,6 +333,11 @@ def main() -> None:
                 "queries": timings,
                 "calibration": {"pre": calib_pre, "post": calib_post},
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                # The session the run actually got (numbers from boxes of
+                # different core counts are not comparable).
+                "master": spark.sparkContext.master,
+                "default_parallelism": spark.sparkContext.defaultParallelism,
+                "spark_version": spark.version,
             }
         )
     )

@@ -3025,6 +3025,127 @@ def test_copurchase_edges_cap_rule_deterministic(spark):
         copurchase_edges(df, "basket", "item", max_basket=1)
 
 
+def _copurchase_capped_window(df, basket_col, item_col, min_support,
+                              max_basket, seed, keep_support):
+    """The capped co-purchase build as it was before the one-aggregate
+    form, frozen: distinct (basket, item), a row_number window by
+    (Lehmer hash, item) per basket, collect_list of the kept rows and
+    the ordered pairs of each list."""
+    from pyspark.sql import Window
+
+    from usgs_lidar_spark.operators.pipeline import portable_hash_long
+
+    li = df.select(
+        F.col(basket_col).alias("__basket"), F.col(item_col).alias("__item")
+    ).distinct()
+    w = Window.partitionBy("__basket").orderBy(
+        portable_hash_long("__item", seed), F.col("__item")
+    )
+    li = (
+        li.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= max_basket)
+        .drop("__rn")
+    )
+    packs = li.groupBy("__basket").agg(F.collect_list("__item").alias("__items"))
+    pair_structs = F.filter(
+        F.flatten(
+            F.transform(
+                "__items",
+                lambda a: F.transform(
+                    F.col("__items"),
+                    lambda b: F.struct(a.alias("src"), b.alias("dst")),
+                ),
+            )
+        ),
+        lambda p: p["src"] < p["dst"],
+    )
+    return (
+        packs.select(F.explode(pair_structs).alias("__p"))
+        .select("__p.src", "__p.dst")
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("support"))
+        .filter(F.col("support") >= min_support)
+        .select("src", "dst", *(["support"] if keep_support else []))
+    )
+
+
+def test_copurchase_capped_equals_window_formulation(spark):
+    """The one-aggregate capped build keeps exactly the set the frozen
+    distinct -> row_number -> collect_list build kept: duplicate rows,
+    null items (a null takes one slot, then drops out of every pair),
+    a null basket, items whose Lehmer hashes collide (i and
+    i + 2^31 - 1, tie broken by item), at caps below, at and above the
+    basket sizes, for two seeds, with and without the support column."""
+    from usgs_lidar_spark.operators.graph import copurchase_edges
+
+    m = 2**31 - 1
+    rows = [(b, i) for b in range(4) for i in range(1, 3 + 2 * b)]
+    rows += [(b, i) for b, i in rows[::3]]  # duplicate (basket, item)
+    rows += [(1, None), (2, None), (2, None), (None, 1), (None, 2), (None, 5)]
+    rows += [(b, i + m) for b in (0, 3) for i in (1, 2)]  # hash collisions
+    rows += [(5, i) for i in (3, 3 + m, 4, 4 + m, 7, None)]
+    df = spark.createDataFrame(rows, "basket long, item long")
+
+    cases = [(c, s, k) for c in (2, 3, 8) for s in (0, 5) for k in (0, 1)]
+
+    def tagged(build):
+        # One job per side: every (cap, seed, keep_support) case unioned
+        # under a tag.
+        out = None
+        for max_basket, seed, keep in cases:
+            e = build(df, "basket", "item", min_support=1,
+                      max_basket=max_basket, seed=seed, keep_support=bool(keep))
+            if not keep:
+                e = e.withColumn("support", F.lit(None).cast("long"))
+            e = e.select(F.lit(f"{max_basket}/{seed}/{keep}").alias("case"), "*")
+            out = e if out is None else out.unionByName(e)
+        return sorted(map(tuple, out.collect()), key=repr)
+
+    got = tagged(copurchase_edges)
+    assert got == tagged(_copurchase_capped_window)
+    assert {r[0] for r in got} == {"/".join(map(str, c)) for c in cases}
+
+
+def test_copurchase_capped_plan_one_basket_aggregate(spark):
+    """The capped build is one basket aggregate and one pair aggregate:
+    no Window node and exactly two shuffle exchanges. Under
+    `triangle_count`, which references the edge frame three times while
+    it builds its pin, the pair stage runs once: the triangles equal
+    those over the frozen window build, and the build starts fewer jobs
+    (a lambda pair emitter defeated AQE's stage reuse and re-ran the
+    pair stage per reference)."""
+    from usgs_lidar_spark.operators.graph import copurchase_edges, triangle_count
+    from tests.test_plans import plan_digest
+
+    df = spark.range(200).select(
+        (F.col("id") % 17).alias("basket"), (F.col("id") % 23).alias("item")
+    )
+    e = copurchase_edges(df, "basket", "item", max_basket=4)
+    plan = e._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    assert plan_digest(plan)["shuffle_exchange"] == 2
+
+    sc = spark.sparkContext
+
+    def build(edges_fn, group):
+        sc.setJobGroup(group, "triangle construction")
+        try:
+            tri = triangle_count(
+                edges_fn(df, "basket", "item", min_support=2, max_basket=4,
+                         seed=0, keep_support=False)
+            )
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return sorted(map(tuple, tri.collect())), jobs
+
+    new, new_jobs = build(copurchase_edges, "capped-one-aggregate")
+    old, old_jobs = build(_copurchase_capped_window, "capped-window")
+    assert new == old and new
+    assert new_jobs < old_jobs
+
+
 def test_tfidf_topk_hand_case(spark):
     """Integer-idf retrieval on a hand corpus: rare-term matches outrank
     common-term matches, scores are exactly tf * (1e9 div df) sums, ties
@@ -6795,6 +6916,37 @@ def test_quant_exact_kernels_match_expr(spark):
             run("kernel").collect()
         with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
             run("expr").collect()
+
+
+def test_quantize_exact_raises_outside_int64_and_on_nan(spark):
+    """`quantize_exact` (both builder forms) and its kernel mirror
+    `_quantize_np` floor x * 2^qbits exactly inside the int64 envelope,
+    down to its two edges, keep a null component null, and raise naming
+    the envelope on NaN, infinities and components just past either
+    edge, where Spark's floor would clamp silently."""
+    import math
+
+    import numpy as np
+
+    from usgs_lidar_spark.functions.vectors import quantize_exact
+    from usgs_lidar_spark.operators.similarity import _quantize_np
+
+    q = 20
+    edge = 2.0 ** (63 - q)
+    ok = [0.5, -0.25, 1e-7, -3.0, math.nextafter(edge, 0.0), -edge]
+    want = [math.floor(x * 2.0**q) for x in ok]
+    assert want[-2:] == [2**63 - 2**10, -(2**63)]
+    df = spark.createDataFrame([(ok + [None],)], "v array<double>")
+    for form in ("v", F.col("v")):
+        assert df.select(quantize_exact(form, q)).first()[0] == want + [None]
+    assert _quantize_np(np.asarray([ok]), 2.0**q).tolist() == [want]
+    for bad in (math.nan, math.inf, -math.inf, edge, math.nextafter(-edge, -math.inf)):
+        bdf = spark.createDataFrame([([0.5, bad],)], "v array<double>")
+        for form in ("v", F.col("v")):
+            with pytest.raises(Exception, match="int64 envelope"):
+                bdf.select(quantize_exact(form, q)).collect()
+        with pytest.raises(ArithmeticError, match="int64 envelope"):
+            _quantize_np(np.asarray([[0.5, bad]]), 2.0**q)
 
 
 def test_bloom_prefilter_join_transparent_and_no_false_negatives(spark):

@@ -259,12 +259,16 @@ def test_vector_builders_plan_equal(spark):
         return b
 
     def composed_quant(a, q):
-        return F.transform(
-            V._c(a),
-            lambda x: F.floor(x.cast("double") * F.lit(float(2**q))).cast(
-                "long"
-            ),
-        )
+        lim = float(2 ** (63 - q))
+        msg = f"quantize_exact: NaN or outside the int64 envelope at qbits={q}"
+
+        def one(x):
+            x = x.cast("double")
+            return F.when(
+                ~((x >= -lim) & (x < lim)), F.raise_error(msg)
+            ).otherwise(F.floor(x * F.lit(float(2**q))).cast("long"))
+
+        return F.transform(V._c(a), one)
 
     def composed_dotq(a, b):
         prods = F.zip_with(V._c(a), V._c(b), lambda x, y: x * y)

@@ -112,19 +112,31 @@ def quantize_exact(a: Column | str, qbits: int = 20) -> Column:
     ``math.floor(x * 2.0**qbits)`` all produce the SAME integers from the
     same inputs. Integer dot products / norms over quantized vectors are
     then exact BIGINT arithmetic: order-independent, hash-stable across
-    engines, layouts, and SIMD summation strategies."""
+    engines, layouts, and SIMD summation strategies.
+
+    A NaN, infinite or beyond-int64 component raises, as DuckDB's cast
+    does, where Spark's floor would clamp it (NaN to 0); NaN sorts above
+    every double, so ``x < 2^(63-qbits)`` rejects it too."""
+    lim, scale = float(2 ** (63 - qbits)), float(2**qbits)
+    msg = f"quantize_exact: NaN or outside the int64 envelope at qbits={qbits}"
     na = _sql_name(a)
     if na:
         from usgs_lidar_spark.functions.sqlbuild import dlit
 
+        x = "CAST(x AS DOUBLE)"
         return F.expr(
-            f"transform({na}, x -> "
-            f"CAST(floor(CAST(x AS DOUBLE) * {dlit(float(2 ** qbits))}) AS BIGINT))"
+            f"transform({na}, x -> CASE WHEN NOT ({x} >= {dlit(-lim)} AND "
+            f"{x} < {dlit(lim)}) THEN raise_error('{msg}') "
+            f"ELSE CAST(floor({x} * {dlit(scale)}) AS BIGINT) END)"
         )
-    return F.transform(
-        _c(a),
-        lambda x: F.floor(x.cast("double") * F.lit(float(2**qbits))).cast("long"),
-    )
+
+    def q(x):
+        x = x.cast("double")
+        return F.when(~((x >= -lim) & (x < lim)), F.raise_error(msg)).otherwise(
+            F.floor(x * F.lit(scale)).cast("long")
+        )
+
+    return F.transform(_c(a), q)
 
 
 def dot_q(a: Column | str, b: Column | str) -> Column:

@@ -334,6 +334,8 @@ def source_overlap_matrix(
     Returns (src_a, src_b, n_shared, n_a, n_b, jaccard), src_a < src_b,
     only pairs sharing at least one shingle.
     """
+    from usgs_lidar_spark.operators.graph import _ordered_pairs
+
     pairs = char_shingles(
         docs, text_col, id_col, k=k, max_df=max_df, max_df_frac=max_df_frac,
         impl="kernel",
@@ -363,25 +365,9 @@ def source_overlap_matrix(
         .groupBy("__g")
         .agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     )
-    # Ordered pairs from each set — pure map work over <= |set|²
-    # structs per shingle (bounded by max_df²), no self-join.
-    pair_structs = F.filter(
-        F.flatten(
-            F.transform(
-                "__gs",
-                lambda a: F.transform(
-                    F.col("__gs"),
-                    lambda b: F.struct(
-                        a.alias("src_a"), b.alias("src_b")
-                    ),
-                ),
-            )
-        ),
-        lambda p: p["src_a"] < p["src_b"],
-    )
+    # Ordered pairs from each set, map-side (<= max_df² per shingle).
     inter = (
-        sets.select(F.explode(pair_structs).alias("__p"))
-        .select("__p.src_a", "__p.src_b")
+        _ordered_pairs(sets, "__gs", "src_a", "src_b")
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )

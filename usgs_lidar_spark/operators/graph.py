@@ -585,6 +585,20 @@ def pagerank_fixed(
     )
 
 
+def _ordered_pairs(df: DataFrame, items: str, a: str, b: str) -> DataFrame:
+    """(a, b) rows with a < b from each row's array column ``items``:
+    two explodes and a filter, all map-side (<= |items|² rows per row,
+    no self-join); rows with a null element drop out. No lambda: with
+    one, AQE did not reuse the pair stage of a frame referenced more
+    than once (three times under `triangle_count`) and re-ran it per
+    reference."""
+    return (
+        df.select(items, F.explode(items).alias(a))
+        .select(a, F.explode(items).alias(b))
+        .filter(F.col(a) < F.col(b))
+    )
+
+
 def copurchase_edges(
     df: DataFrame,
     basket_col: str,
@@ -614,68 +628,46 @@ def copurchase_edges(
     cost of undercounting support for pairs whose co-occurrences sit in
     capped baskets (the standard frequent-itemset truncation trade; cap
     ABOVE the p99.9 basket size so it only touches pathological
-    baskets)."""
-    from pyspark.sql import Window
-
+    baskets). The capped build is one aggregate per basket (two
+    shuffles, no window); its buffer holds ALL of the basket's distinct
+    items before the slice, so one basket must fit in a task's memory,
+    where the uncapped self-join can spill."""
     from usgs_lidar_spark.operators.pipeline import portable_hash_long
 
-    li = df.select(
-        F.col(basket_col).alias("__basket"), F.col(item_col).alias("__item")
-    ).distinct()
-    if max_basket is not None:
-        if max_basket < 2:
-            raise ValueError(f"max_basket must be >= 2, got {max_basket}")
-        w = Window.partitionBy("__basket").orderBy(
-            portable_hash_long("__item", seed), F.col("__item")
-        )
-        li = (
-            li.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= max_basket)
-            .drop("__rn")
-        )
-        # Capped path (optimization round 16, guide §2.3/§2.4): each
-        # basket is now <= max_basket rows, so collecting it to a LIST
-        # is knob-bounded (unlike the uncapped case, where only the
-        # spillable self-join is memory-safe) — and the basket groupBy
-        # REUSES the window's hash partitioning, so no new exchange.
-        # Ordered pairs are then emitted map-side from each list
-        # (<= C(max_basket, 2) structs per basket), deleting both
-        # basket-keyed self-join legs from the plan.
-        packs = li.groupBy("__basket").agg(
-            F.collect_list("__item").alias("__items")
-        )
-        pair_structs = F.filter(
-            F.flatten(
-                F.transform(
-                    "__items",
-                    lambda a: F.transform(
-                        F.col("__items"),
-                        lambda b: F.struct(
-                            a.alias("src"), b.alias("dst")
-                        ),
-                    ),
-                )
-            ),
-            lambda p: p["src"] < p["dst"],
-        )
-        return (
-            packs.select(F.explode(pair_structs).alias("__p"))
-            .select("__p.src", "__p.dst")
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).alias("support"))
-            .filter(F.col("support") >= min_support)
-            .select("src", "dst", *(["support"] if keep_support else []))
-        )
-    a, b = li.alias("a"), li.alias("b")
-    return (
-        a.join(
+    if max_basket is None:
+        li = df.select(
+            F.col(basket_col).alias("__basket"), F.col(item_col).alias("__item")
+        ).distinct()
+        a, b = li.alias("a"), li.alias("b")
+        pairs = a.join(
             b,
             (F.col("a.__basket") == F.col("b.__basket"))
             & (F.col("a.__item") < F.col("b.__item")),
+        ).select(F.col("a.__item").alias("src"), F.col("b.__item").alias("dst"))
+    elif max_basket < 2:
+        raise ValueError(f"max_basket must be >= 2, got {max_basket}")
+    else:
+        # The set dedups (basket, item); (hash, item) structs sort nulls
+        # first, so a null item takes one of the slots and then drops
+        # out of every pair.
+        kept = F.slice(
+            F.sort_array(
+                F.collect_set(
+                    F.struct(
+                        portable_hash_long(item_col, seed).alias("h"),
+                        F.col(item_col).alias("i"),
+                    )
+                )
+            ),
+            1,
+            max_basket,
         )
-        .groupBy(
-            F.col("a.__item").alias("src"), F.col("b.__item").alias("dst")
+        pairs = _ordered_pairs(
+            df.groupBy(basket_col).agg(kept["i"].alias("__kept")),
+            "__kept", "src", "dst",
         )
+    return (
+        pairs.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("support"))
         .filter(F.col("support") >= min_support)
         .select("src", "dst", *(["support"] if keep_support else []))

@@ -1800,19 +1800,18 @@ _INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
 
 
 def _quantize_np(C, scale):
-    """`quantize_exact` on an (n, d) float64 matrix, including Spark's
-    saturating floor(double) -> BIGINT: a component beyond int64 clamps
-    to the nearer bound and NaN becomes 0, as the expression form
-    evaluates it."""
+    """`quantize_exact` on an (n, d) float64 matrix: a NaN, infinite or
+    beyond-int64 component raises naming the envelope, as the
+    expression form does."""
     import numpy as np
 
     f = np.floor(C * scale)
-    with np.errstate(invalid="ignore"):
-        q = f.astype(np.int64)
-    q[f >= 2.0**63] = _INT64_MAX
-    q[f < -(2.0**63)] = _INT64_MIN
-    q[np.isnan(f)] = 0
-    return q
+    if not ((f >= -(2.0**63)) & (f < 2.0**63)).all():
+        raise ArithmeticError(
+            "quantize_exact: NaN or outside the int64 envelope "
+            f"[-2^63, 2^63) at scale {scale!r}"
+        )
+    return f.astype(np.int64)
 
 
 def _exact_sums(a):
