@@ -3146,6 +3146,131 @@ def test_copurchase_capped_plan_one_basket_aggregate(spark):
     assert new_jobs < old_jobs
 
 
+
+def _triangle_count_join_formulation(edges, src="src", dst="dst"):
+    """Frozen pre-window `triangle_count`: degrees from one aggregate over
+    the endpoint union, attached by two equi-joins, then the same
+    (deg, id) orientation, pin, wedge join and closing semi-join."""
+    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    deg = (
+        e0.select(F.col("u").alias("node"))
+        .unionAll(e0.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    withd = (
+        e0.join(deg.withColumnRenamed("node", "u"), "u")
+        .withColumnRenamed("deg", "du")
+        .join(deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")), "v")
+    )
+    ku = F.struct(F.col("du").alias("d"), F.col("u").alias("i"))
+    kv = F.struct(F.col("dv").alias("d"), F.col("v").alias("i"))
+    lo_first = ku < kv
+    e = withd.select(
+        F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+        F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("b"),
+        F.when(lo_first, kv).otherwise(ku).alias("kb"),
+    ).localCheckpoint()
+    wedge = (
+        e.join(e.select("a", F.col("b").alias("c"), F.col("kb").alias("kc")), "a")
+        .filter(F.col("kb") < F.col("kc"))
+        .select("a", "b", "c")
+    )
+    tri = wedge.join(
+        e.select(F.col("a").alias("b"), F.col("b").alias("c")), ["b", "c"], "left_semi"
+    )
+    return (
+        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("n_triangles"))
+    )
+
+
+def test_triangle_count_equals_join_formulation(spark):
+    """The degree-window build counts exactly what the frozen
+    degree-aggregate + two-join build counts: a hand case, a star hub
+    fused with a 5-clique, degree ties (a 6-cycle with chords), edges
+    given as src > dst, an edge with a null endpoint (dropped by the
+    joins, filtered by the window form), an empty frame, and a
+    both-orientation edge table filtered to x < y, as
+    `graph_triangles_from_edges` passes it, unpinned and pinned."""
+    from usgs_lidar_spark.operators.graph import triangle_count
+
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    clique = [(a, b) for a in range(10, 15) for b in range(a + 1, 15)]
+    star = [(10, b) for b in range(100, 140)] + [(100, 101), (102, 103)]
+    ring = [(20 + i, 20 + (i + 1) % 6) for i in range(6)]
+    chords = [(20, 22), (22, 24), (24, 20), (21, 23), (23, 25), (25, 21)]
+    cases = {
+        "hand": k4 + [(4, 5), (6, 7)],
+        "hub_clique": clique + star,
+        "ties": ring + chords,
+        "reversed": [(b, a) for a, b in k4 + clique] + [(4, 5)],
+        "null_endpoint": k4 + [(1, None), (None, 2), (None, None), (4, 5)],
+        "empty": [],
+    }
+    for name, edges in cases.items():
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = sorted(map(tuple, triangle_count(df).collect()))
+        want = sorted(map(tuple, _triangle_count_join_formulation(df).collect()))
+        assert got == want, name
+        assert bool(got) == (name != "empty"), name
+
+    both = spark.createDataFrame(
+        [(a, b) for a, b in clique + star] + [(b, a) for a, b in clique + star],
+        "x long, y long",
+    )
+    uniq = both.filter(F.col("x") < F.col("y"))
+    for df in (uniq, uniq.localCheckpoint()):
+        got = sorted(map(tuple, triangle_count(df, "x", "y").collect()))
+        assert got == sorted(
+            map(tuple, _triangle_count_join_formulation(df, "x", "y").collect())
+        )
+        assert dict(got)[10] == 6 + 2 and dict(got)[100] == 1
+
+
+def test_triangle_count_construction_budget(spark):
+    """Constructing `triangle_count` over the capped co-purchase build
+    starts 5 jobs (the eager pin) and makes fewer than 100 py4j calls:
+    the pin and the query after it are one SQL parse each, where a
+    DataFrame call per step made ~1,300 calls and the degree joins'
+    three references to the edge subtree cost the pin a sixth job."""
+    import threading
+
+    from usgs_lidar_spark.operators.graph import copurchase_edges, triangle_count
+
+    df = spark.range(200).select(
+        (F.col("id") % 17).alias("basket"), (F.col("id") % 23).alias("item")
+    )
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    me = threading.get_ident()
+
+    def counted(*args, **kwargs):
+        # py4j frees dead JVM handles from its own finalizer thread;
+        # those deletes are not construction calls.
+        calls[0] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    sc.setJobGroup("triangle-budget", "triangle construction")
+    client.send_command = counted
+    try:
+        tri = triangle_count(copurchase_edges(df, "basket", "item", max_basket=4))
+    finally:
+        client.send_command = send
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("triangle-budget")) == 5
+    assert calls[0] < 100
+    assert sorted(map(tuple, tri.collect())) == sorted(
+        map(tuple, _triangle_count_join_formulation(
+            copurchase_edges(df, "basket", "item", max_basket=4)
+        ).collect())
+    )
+
 def test_tfidf_topk_hand_case(spark):
     """Integer-idf retrieval on a hand corpus: rare-term matches outrank
     common-term matches, scores are exactly tf * (1e9 div df) sums, ties

@@ -411,3 +411,59 @@ def test_voxel_builders_plan_equal(spark):
         assert new.columns == old.columns
         assert _same_result(new, old), kw
         assert sorted(new.collect()) == sorted(old.collect())
+
+
+# ---- co-purchase edge build ---------------------------------------------
+
+
+def _copurchase_capped_composed(df, basket_col, item_col, min_support,
+                                max_basket, seed, keep_support):
+    from usgs_lidar_spark.operators.pipeline import portable_hash_long
+
+    kept = F.slice(
+        F.sort_array(
+            F.collect_set(
+                F.struct(
+                    portable_hash_long(item_col, seed).alias("h"),
+                    F.col(item_col).alias("i"),
+                )
+            )
+        ),
+        1,
+        max_basket,
+    )
+    sets = df.groupBy(basket_col).agg(kept["i"].alias("__kept"))
+    pairs = (
+        sets.select("__kept", F.explode("__kept").alias("src"))
+        .select("src", F.explode("__kept").alias("dst"))
+        .filter(F.col("src") < F.col("dst"))
+    )
+    return (
+        pairs.groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("support"))
+        .filter(F.col("support") >= min_support)
+        .select("src", "dst", *(["support"] if keep_support else []))
+    )
+
+
+def test_copurchase_capped_plan_equal(spark):
+    """The capped `copurchase_edges` parse is plan-equal to the Column
+    form it replaced, so every query over it (`graph_pagerank_parts`,
+    `graph_link_prediction`, `graph_copurchase_capped`) keeps its rows
+    bit for bit."""
+    from usgs_lidar_spark.operators.graph import copurchase_edges
+
+    df = spark.createDataFrame(
+        [(b, i) for b in range(5) for i in range(b, 3 * b + 2)]
+        + [(1, None), (None, 4), (2, 2 + 2**31 - 1)],
+        "`basket id` long, item long",
+    )
+    for min_support, max_basket, seed, keep in [
+        (2, 8, 0, False), (1, 3, 5, True), (1, 2, 1, False), (3, 4, 0, True),
+    ]:
+        args = (df, "basket id", "item", min_support, max_basket, seed, keep)
+        new = copurchase_edges(*args)
+        old = _copurchase_capped_composed(*args)
+        assert new.columns == old.columns
+        assert _same_result(new, old), args[3:]
+        assert sorted(new.collect()) == sorted(old.collect())

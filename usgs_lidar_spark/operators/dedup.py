@@ -312,8 +312,8 @@ def source_overlap_matrix(
     shuffle keyed by shingle collapses each shingle to its SOURCE SET
     (`collect_set` — bounded by min(#sources, max_df), both tiny by
     contract, and partially aggregated map-side), and the ordered
-    source pairs are emitted from each set with an array
-    transform/filter — pure map work. The former plan's (source,
+    source pairs are emitted from each set with two explodes and a
+    filter — pure map work. The former plan's (source,
     shingle) `.distinct()` exchange and the two shingle-keyed
     self-join legs are gone; the per-shingle blowup (sum over shingles
     of sources² <= max_df²) now materializes as <= max_df²/2 struct
@@ -334,8 +334,6 @@ def source_overlap_matrix(
     Returns (src_a, src_b, n_shared, n_a, n_b, jaccard), src_a < src_b,
     only pairs sharing at least one shingle.
     """
-    from usgs_lidar_spark.operators.graph import _ordered_pairs
-
     pairs = char_shingles(
         docs, text_col, id_col, k=k, max_df=max_df, max_df_frac=max_df_frac,
         impl="kernel",
@@ -365,9 +363,13 @@ def source_overlap_matrix(
         .groupBy("__g")
         .agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     )
-    # Ordered pairs from each set, map-side (<= max_df² per shingle).
+    # Ordered pairs from each set, map-side (<= max_df² per shingle):
+    # two explodes and a filter. No lambda: with one, AQE did not reuse
+    # the pair stage of a frame referenced more than once.
     inter = (
-        _ordered_pairs(sets, "__gs", "src_a", "src_b")
+        sets.select("__gs", F.explode("__gs").alias("src_a"))
+        .select("src_a", F.explode("__gs").alias("src_b"))
+        .filter(F.col("src_a") < F.col("src_b"))
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )

@@ -35,10 +35,18 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from usgs_lidar_spark.functions.sqlbuild import qident
+
 
 class ConvergenceWarning(UserWarning):
     """Raised/warned when an iterative operator hits max_iter unconverged —
     its output labels may be only partially propagated."""
+
+
+def _sql_ident(name: str) -> str:
+    """`qident` with braces doubled, for SQL text that goes through the
+    frame-argument formatter of ``spark.sql(text, name=df)``."""
+    return qident(name).replace("{", "{{").replace("}", "}}")
 
 
 def _make_ckpt(checkpoint_mode: str):
@@ -585,20 +593,6 @@ def pagerank_fixed(
     )
 
 
-def _ordered_pairs(df: DataFrame, items: str, a: str, b: str) -> DataFrame:
-    """(a, b) rows with a < b from each row's array column ``items``:
-    two explodes and a filter, all map-side (<= |items|² rows per row,
-    no self-join); rows with a null element drop out. No lambda: with
-    one, AQE did not reuse the pair stage of a frame referenced more
-    than once (three times under `triangle_count`) and re-ran it per
-    reference."""
-    return (
-        df.select(items, F.explode(items).alias(a))
-        .select(a, F.explode(items).alias(b))
-        .filter(F.col(a) < F.col(b))
-    )
-
-
 def copurchase_edges(
     df: DataFrame,
     basket_col: str,
@@ -631,46 +625,34 @@ def copurchase_edges(
     baskets). The capped build is one aggregate per basket (two
     shuffles, no window); its buffer holds ALL of the basket's distinct
     items before the slice, so one basket must fit in a task's memory,
-    where the uncapped self-join can spill."""
-    from usgs_lidar_spark.operators.pipeline import portable_hash_long
+    where the uncapped self-join can spill. Either build is one SQL
+    parse over ``df``."""
+    from usgs_lidar_spark.operators.pipeline import portable_hash_long_sql
 
+    bk, it = _sql_ident(basket_col), _sql_ident(item_col)
     if max_basket is None:
-        li = df.select(
-            F.col(basket_col).alias("__basket"), F.col(item_col).alias("__item")
-        ).distinct()
-        a, b = li.alias("a"), li.alias("b")
-        pairs = a.join(
-            b,
-            (F.col("a.__basket") == F.col("b.__basket"))
-            & (F.col("a.__item") < F.col("b.__item")),
-        ).select(F.col("a.__item").alias("src"), F.col("b.__item").alias("dst"))
+        li = f"(SELECT DISTINCT {bk} AS k, {it} AS i FROM {{df}})"
+        pairs = f"SELECT a.i AS src, b.i AS dst FROM {li} a JOIN {li} b ON a.k = b.k"
     elif max_basket < 2:
         raise ValueError(f"max_basket must be >= 2, got {max_basket}")
     else:
         # The set dedups (basket, item); (hash, item) structs sort nulls
         # first, so a null item takes one of the slots and then drops
-        # out of every pair.
-        kept = F.slice(
-            F.sort_array(
-                F.collect_set(
-                    F.struct(
-                        portable_hash_long(item_col, seed).alias("h"),
-                        F.col(item_col).alias("i"),
-                    )
-                )
-            ),
-            1,
-            max_basket,
-        )
-        pairs = _ordered_pairs(
-            df.groupBy(basket_col).agg(kept["i"].alias("__kept")),
-            "__kept", "src", "dst",
-        )
-    return (
-        pairs.groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= min_support)
-        .select("src", "dst", *(["support"] if keep_support else []))
+        # out of every pair. Pairs come from two explodes and a filter,
+        # no lambda: with one, AQE did not reuse the pair stage of a
+        # frame referenced more than once and re-ran it per reference.
+        h = portable_hash_long_sql(it, seed)
+        pairs = f"""SELECT src, explode(__kept) AS dst FROM (
+            SELECT __kept, explode(__kept) AS src FROM (
+                SELECT {bk}, slice(sort_array(collect_set(
+                    struct({h} AS h, {it} AS i))), 1, {int(max_basket)}).i AS __kept
+                FROM {{df}} GROUP BY {bk}))"""
+    return df.sparkSession.sql(
+        f"""SELECT src, dst{", support" if keep_support else ""} FROM (
+            SELECT src, dst, count(1) AS support FROM ({pairs})
+            WHERE src < dst GROUP BY src, dst)
+        WHERE support >= {int(min_support)}""",
+        df=df,
     )
 
 
@@ -732,63 +714,51 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     O(sqrt(m)) on ANY graph (arboricity bound), so total wedge fan-out
     is ≤ m^1.5 even when a hub's raw degree is huge — vs d(b)^2 per hub
     for id-ordering, the superlinear wall VERDICT r5 measured (24.5 s /
-    796 MB shuffle at 10x on the dense co-purchase graph). The price is
-    one linear degree aggregate + two linear degree-attach equi-joins.
+    796 MB shuffle at 10x on the dense co-purchase graph).
+
+    The price is one degree window: each edge's two endpoint rows
+    (``explode(array(u, v))``) take ``count(1) OVER (PARTITION BY
+    node)``, and one regroup per (u, v) puts both degrees back on the
+    edge, so the pinned plan holds the edge input once. A hub's endpoint
+    rows share one window partition, whose buffer spills past Spark's
+    window spill threshold instead of failing. Edges with a null
+    endpoint drop out before the degrees. They then count toward no
+    node's degree, which changes only the orientation, and any strict
+    total order finds each triangle exactly once. Construction is two
+    SQL parses, the pin and the query after it (a few dozen py4j calls).
     Returns (node, n_triangles) for every node in at least one
     triangle."""
-    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    deg = (
-        e0.select(F.col("u").alias("node"))
-        .unionAll(e0.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    u, v = _sql_ident(src), _sql_ident(dst)
+    spark = edges.sparkSession
     # Lexicographic (deg, id) structs compare directly — no global rank
     # (a global row_number would funnel every node through one task).
-    withd = (
-        e0.join(deg.withColumnRenamed("node", "u"), "u")
-        .withColumnRenamed("deg", "du")
-        .join(
-            deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")),
-            "v",
-        )
-    )
-    ku = F.struct(F.col("du").alias("d"), F.col("u").alias("i"))
-    kv = F.struct(F.col("dv").alias("d"), F.col("v").alias("i"))
-    lo_first = ku < kv
-    oriented = withd.select(
-        F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(lo_first, kv).otherwise(ku).alias("kb"),
-    )
     # The oriented edge list feeds three join legs; checkpoint it once so
-    # the (possibly expensive) edge derivation + degree joins aren't
+    # the (possibly expensive) edge derivation + degree window isn't
     # re-expanded per leg — same lineage contract as pagerank_fixed.
+    e = spark.sql(
+        f"""SELECT IF(ku < kv, u, v) AS a, IF(ku < kv, v, u) AS b,
+                   IF(ku < kv, kv, ku) AS kb
+        FROM (SELECT u, v, struct(max(IF(node = u, deg, NULL)) AS d, u AS i) AS ku,
+                     struct(max(IF(node = v, deg, NULL)) AS d, v AS i) AS kv
+              FROM (SELECT u, v, node, count(1) OVER (PARTITION BY node) AS deg
+                    FROM (SELECT u, v, explode(array(u, v)) AS node
+                          FROM (SELECT {u} AS u, {v} AS v FROM {{edges}}
+                                WHERE {u} IS NOT NULL AND {v} IS NOT NULL)))
+              GROUP BY u, v)""",
+        edges=edges,
+    ).localCheckpoint()
+    # Wedges: each unordered out-pair of a shared low node once; the
+    # closing edge b—c is then oriented exactly (b -> c) because kb ≺ kc.
     # Corners come from ONE explode over the triangle frame, not a 3-way
     # self-union that would triple the wedge/semi subtree in the plan.
-    e = oriented.localCheckpoint()
-    wedge = (
-        e.join(
-            e.select(
-                F.col("a"), F.col("b").alias("c"), F.col("kb").alias("kc")
-            ),
-            "a",
-        )
-        # each unordered out-pair once; the closing edge b—c is then
-        # oriented exactly (b -> c) because kb ≺ kc
-        .filter(F.col("kb") < F.col("kc"))
-        .select("a", "b", "c")
-    )
-    tri = wedge.join(
-        e.select(F.col("a").alias("b"), F.col("b").alias("c")),
-        ["b", "c"],
-        "left_semi",
-    )
-    per_corner = tri.select(
-        F.explode(F.array("a", "b", "c")).alias("node")
-    )
-    return per_corner.groupBy("node").agg(
-        F.count(F.lit(1)).alias("n_triangles")
+    return spark.sql(
+        """SELECT node, count(1) AS n_triangles
+        FROM (SELECT explode(array(w.a, w.b, w.c)) AS node
+              FROM (SELECT x.a, x.b, y.b AS c FROM {e} x JOIN {e} y ON x.a = y.a
+                    WHERE x.kb < y.kb) w
+              LEFT SEMI JOIN {e} z ON w.b = z.a AND w.c = z.b)
+        GROUP BY node""",
+        e=e,
     )
 
 

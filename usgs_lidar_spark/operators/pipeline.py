@@ -42,6 +42,16 @@ def portable_hash_long(id_col: Column | str, seed: int = 0) -> Column:
     return x
 
 
+def portable_hash_long_sql(id_sql: str, seed: int = 0) -> str:
+    """`portable_hash_long` as Spark SQL text over the SQL expression
+    ``id_sql``: the same analyzed tree (sameResult-pinned through
+    `copurchase_edges` in tests/test_sqlbuild_parity.py)."""
+    x = f"pmod(pmod(CAST({id_sql} AS BIGINT), {_LEHMER_M}) + {1 + seed}, {_LEHMER_M})"
+    for _ in range(2):
+        x = f"(({x}) * {_LEHMER_A}) % {_LEHMER_M}"
+    return x
+
+
 def portable_hash_bucket(id_col: Column | str, seed: int = 0) -> Column:
     """Deterministic bucket in [0, N_BUCKETS) from an integer id.
 

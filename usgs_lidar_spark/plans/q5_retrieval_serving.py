@@ -1332,11 +1332,11 @@ def graph_triangles_from_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside triangle_count shuffles either way, so the serving win here
     is exactly the build cost — measured in SCALE.md, "Round 8:
     persisted edge table & index serving" (build median 13.8 s vs serve
-    8.2 s at the sf1 point, interleaved n=3). The localCheckpoint matters: triangle_count references its
-    edge input ~6x (degree agg, two orientation joins, two wedge sides,
-    closing semi-join) and bucketing buys those joins nothing after the
-    degree re-orientation reshuffles anyway — without it the table
-    re-scans per reference (407 MB read from a 21 MB table, measured)."""
+    8.2 s at the sf1 point, interleaved n=3). triangle_count's pin
+    reads its edge input once (one degree window, then the orientation),
+    and the wedge and closing joins read the pin, so the table is scanned
+    once; bucketing buys those joins nothing after the degree
+    re-orientation reshuffles anyway."""
     import os
 
     from usgs_lidar_spark.operators.graph import (
@@ -1369,12 +1369,9 @@ def graph_triangles_from_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             write_edge_table(
                 pairs, tbl, n_buckets=32, path=path, symmetrize=True
             )
-    uniq = (
-        read_edge_table(spark, tbl)
-        .filter(F.col("src") < F.col("dst"))
-        .localCheckpoint()
+    return triangle_count(
+        read_edge_table(spark, tbl).filter(F.col("src") < F.col("dst"))
     )
-    return triangle_count(uniq)
 
 
 @query(
