@@ -843,12 +843,12 @@ def test_simhash_hot_bucket_cap(spark):
 
 def test_multiprobe_recall_superset_of_single_probe(spark):
     """Hamming<=1 probing must retrieve a superset of single-probe's
-    candidate space, so per-query recall vs brute force can only go up."""
+    candidate space, and Hamming<=2 a superset of Hamming<=1's, so the
+    exact neighbors each radius finds can only grow with it."""
     from usgs_lidar_spark.catalog import load_table
     from usgs_lidar_spark.operators.similarity import (
         cosine_topk_bruteforce,
         cosine_topk_lsh,
-        cosine_topk_lsh_multiprobe,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -860,9 +860,12 @@ def test_multiprobe_recall_superset_of_single_probe(spark):
 
     exact = pairs(cosine_topk_bruteforce(emb, q, k=5))
     single = pairs(cosine_topk_lsh(emb, q, k=5, n_bits=8))
-    multi = pairs(cosine_topk_lsh_multiprobe(emb, q, k=5, n_bits=8))
+    multi = pairs(cosine_topk_lsh(emb, q, k=5, n_bits=8, hamming=1))
+    multi2 = pairs(cosine_topk_lsh(emb, q, k=5, n_bits=8, hamming=2))
     assert len(multi & exact) >= len(single & exact)
     assert len(multi) >= len(single)
+    assert multi & exact <= multi2 & exact
+    assert len(multi2) >= len(multi)
 
 
 def test_ivf_assign_no_shuffle_and_correct(spark):
@@ -1386,7 +1389,6 @@ def test_ivf_pq_degrades_to_exhaustive_pq(spark):
     """Probing every cell makes IVF-PQ candidate-complete: its output must
     be IDENTICAL to exhaustive pq_adc_topk (same ADC, same ranks)."""
     from usgs_lidar_spark.operators.similarity import (
-        ivf_pq_topk,
         pq_adc_topk,
         pq_codebooks_from_rows,
     )
@@ -1401,12 +1403,12 @@ def test_ivf_pq_degrades_to_exhaustive_pq(spark):
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    full = ivf_pq_topk(emb, q, cents, cbs, k=5, n_probe=8)
+    full = pq_adc_topk(emb, q, cbs, k=5, centroids=cents, n_probe=8)
     exhaustive = pq_adc_topk(emb, q, cbs, k=5)
     assert full.exceptAll(exhaustive).count() == 0
     assert exhaustive.exceptAll(full).count() == 0
     # n_probe=2 returns a (possibly different) full top-5 per query too.
-    narrowed = ivf_pq_topk(emb, q, cents, cbs, k=5, n_probe=2)
+    narrowed = pq_adc_topk(emb, q, cbs, k=5, centroids=cents, n_probe=2)
     per_q = {r["query_id"]: r["n"] for r in
              narrowed.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert all(n == 5 for n in per_q.values())
@@ -1522,17 +1524,14 @@ def test_multiprobe2_candidates_superset(spark):
     neighbor the 1-flip probe ranks with sim above the 2-flip probe's
     kth sim must still appear — concretely, per query the 2-flip top-k's
     worst sim is >= the 1-flip top-k's worst sim."""
-    from usgs_lidar_spark.operators.similarity import (
-        cosine_topk_lsh_multiprobe,
-        cosine_topk_lsh_multiprobe2,
-    )
+    from usgs_lidar_spark.operators.similarity import cosine_topk_lsh
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    m1 = cosine_topk_lsh_multiprobe(emb, q, k=5)
-    m2 = cosine_topk_lsh_multiprobe2(emb, q, k=5)
+    m1 = cosine_topk_lsh(emb, q, k=5, hamming=1)
+    m2 = cosine_topk_lsh(emb, q, k=5, hamming=2)
     worst1 = {r["query_id"]: r["w"] for r in
               m1.groupBy("query_id").agg(F.min("sim").alias("w")).collect()}
     worst2 = {r["query_id"]: r["w"] for r in
@@ -1954,7 +1953,6 @@ def test_ivf_pq_narrowed_probe_recall_floor(spark):
     overlap >= 40% at sf0.001 so a probe-selection regression (e.g.
     probing the FARTHEST cells) fails loudly."""
     from usgs_lidar_spark.operators.similarity import (
-        ivf_pq_topk,
         pq_adc_topk,
         pq_codebooks_from_rows,
     )
@@ -1970,7 +1968,7 @@ def test_ivf_pq_narrowed_probe_recall_floor(spark):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exhaustive = pq_adc_topk(emb, q, cbs, k=5).select("query_id", "neighbor_id")
-    narrowed = ivf_pq_topk(emb, q, cents, cbs, k=5, n_probe=2).select(
+    narrowed = pq_adc_topk(emb, q, cbs, k=5, centroids=cents, n_probe=2).select(
         "query_id", "neighbor_id"
     )
     n_hit = narrowed.join(exhaustive, ["query_id", "neighbor_id"]).count()
@@ -2457,22 +2455,38 @@ def test_sq8_rerank_recovers_exact_topk(spark):
     assert len(rr & ex) >= len(pure & ex)
 
 
+def test_sq8_rerank_below_k_raises(spark):
+    """A re-rank short list shorter than k would cut every query's result
+    to `rerank` rows; sq8_topk refuses it, with or without centroids."""
+    from usgs_lidar_spark.operators.similarity import sq8_topk
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    q = emb.select(F.col("vec_id").alias("query_id"), "embedding")
+    mins, scales = [0.0, 1.0], [7.0 / 255.0, 0.0]
+    for cents in (None, [(0, [1.0, 0.0]), (1, [0.0, 1.0])]):
+        with pytest.raises(ValueError, match="rerank=2 < k=5"):
+            sq8_topk(emb, q, mins, scales, k=5, rerank=2, centroids=cents)
+        assert sq8_topk(
+            emb, q, mins, scales, k=5, rerank=5, centroids=cents, n_probe=2
+        ).groupBy("query_id").count().filter("count != 5").count() == 0
+
+
 def test_range_search_lsh_subset_of_exact(spark):
     """Bucketed range search can only MISS pairs, never invent them: its
     result set is a subset of exact range search at the same tau, and
     every returned sim is >= tau."""
     from usgs_lidar_spark.catalog import load_table
-    from usgs_lidar_spark.operators.similarity import (
-        cosine_range_search,
-        cosine_range_search_lsh,
-    )
+    from usgs_lidar_spark.operators.similarity import cosine_range_search
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     q = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = cosine_range_search(emb, q, threshold=0.25)
-    lsh = cosine_range_search_lsh(emb, q, threshold=0.25, n_bits=8)
+    lsh = cosine_range_search(emb, q, threshold=0.25, n_bits=8)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     l_ = {(r["query_id"], r["neighbor_id"]) for r in lsh.collect()}
     assert l_ <= e
@@ -2810,12 +2824,14 @@ def test_priority_sample_weight_proportional(spark):
 def test_ivf_sq8_rerank_matches_ivf_exact(spark):
     """With a full-width re-rank, IVF-SQ8 must reproduce plain IVF's
     exact-cosine results over the same probed cells (quantization only
-    reorders the shortlist, and the shortlist covers everything)."""
+    reorders the shortlist, and the shortlist covers everything); probing
+    every cell as well, it must reproduce brute force."""
     from usgs_lidar_spark.catalog import load_table
     from usgs_lidar_spark.operators.similarity import (
-        ivf_sq8_topk,
+        cosine_topk_bruteforce,
         ivf_topk,
         sq8_bounds,
+        sq8_topk,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -2828,11 +2844,19 @@ def test_ivf_sq8_rerank_matches_ivf_exact(spark):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = ivf_topk(emb, q, seeds, k=5, n_probe=2)
-    sq8 = ivf_sq8_topk(
-        emb, q, seeds, mins, scales, k=5, n_probe=2, rerank=10**9
+    sq8 = sq8_topk(
+        emb, q, mins, scales, k=5, rerank=10**9, centroids=seeds, n_probe=2
     )
     assert sorted(map(tuple, exact.collect())) == sorted(
         map(tuple, sq8.collect())
+    )
+    probe_all = sq8_topk(
+        emb, q, mins, scales, k=5, rerank=10**9, centroids=seeds,
+        n_probe=len(seeds),
+    )
+    brute = cosine_topk_bruteforce(emb, q, k=5)
+    assert sorted(map(tuple, brute.collect())) == sorted(
+        map(tuple, probe_all.collect())
     )
 
 
@@ -3326,6 +3350,7 @@ def test_ivf_index_persistence_parity_and_pruning(spark, tmp_path):
     import re
 
     from usgs_lidar_spark.operators.similarity import (
+        cosine_topk_bruteforce,
         ivf_topk,
         ivf_topk_from_index,
         read_ivf_centroids,
@@ -3348,6 +3373,13 @@ def test_ivf_index_persistence_parity_and_pruning(spark, tmp_path):
     disk = ivf_topk_from_index(spark, path, queries, k=5, n_probe=2)
     assert sorted(map(tuple, mem.collect())) == sorted(
         map(tuple, disk.collect())
+    )
+    # probing every cell makes the served search exact
+    disk_all = ivf_topk_from_index(
+        spark, path, queries, k=5, n_probe=len(cents)
+    )
+    assert sorted(map(tuple, disk_all.collect())) == sorted(
+        map(tuple, cosine_topk_bruteforce(emb, queries, k=5).collect())
     )
 
     # pruning: the scan carries a literal PartitionFilters cid IN (...)
@@ -3900,15 +3932,15 @@ def test_bpe_pair_counts_hand_case(spark):
 
 def test_ivf_pq_index_parity_pruning_and_compression(spark, tmp_path):
     """write_ivf_pq_index -> ivf_pq_topk_from_index equals the
-    in-memory ivf_pq_topk row-for-row; the probe scan partition-prunes
+    in-memory IVF-PQ (pq_adc_topk with centroids) row-for-row; the probe scan partition-prunes
     to the probed cells; and AT REST the index stores PQ codes only —
     no vector column survives into the data files (the compressed
     serving contract)."""
     import re
 
     from usgs_lidar_spark.operators.similarity import (
-        ivf_pq_topk,
         ivf_pq_topk_from_index,
+        pq_adc_topk,
         pq_codebooks_from_rows,
         write_ivf_pq_index,
     )
@@ -3931,8 +3963,8 @@ def test_ivf_pq_index_parity_pruning_and_compression(spark, tmp_path):
     )
     want = sorted(
         tuple(r)
-        for r in ivf_pq_topk(
-            emb, queries, cents, cbs, k=5, n_probe=2
+        for r in pq_adc_topk(
+            emb, queries, cbs, k=5, centroids=cents, n_probe=2
         ).collect()
     )
     served = ivf_pq_topk_from_index(spark, path, queries, k=5, n_probe=2)
@@ -3994,6 +4026,52 @@ def test_ivf_pq_index_append_parity(spark, tmp_path):
     b = sorted(tuple(r) for r in ivf_pq_topk_from_index(
         spark, full, queries, k=5, n_probe=3).collect())
     assert a == b and a
+
+
+def test_index_serving_construction_jobs(spark, tmp_path):
+    """Serving from a stored index starts a fixed number of construction
+    jobs: the sidecars are read with their declared schemas (no inference
+    job), so ivf_topk_from_index runs 4 (centroid collect, probed-cell
+    collect as two, index listing) and ivf_pq_topk_from_index 5 (plus the
+    codebook collect)."""
+    from usgs_lidar_spark.operators.similarity import (
+        ivf_pq_topk_from_index,
+        ivf_topk_from_index,
+        pq_codebooks_from_rows,
+        write_ivf_index,
+        write_ivf_pq_index,
+    )
+
+    rows = [
+        (i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)])
+        for i in range(60)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    seeds = [v for _, v in rows[:8]]
+    cents = [(i, v) for i, v in enumerate(seeds)]
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "ivf_pq")
+    write_ivf_index(emb, cents, ivf)
+    write_ivf_pq_index(emb, cents, pq_codebooks_from_rows(seeds, n_sub=4), pq)
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, build):
+        sc.setJobGroup(group, "index serving construction")
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(
+        "ivf-serve", lambda: ivf_topk_from_index(spark, ivf, queries, k=5)
+    ) == 4
+    assert jobs(
+        "ivf-pq-serve", lambda: ivf_pq_topk_from_index(spark, pq, queries, k=5)
+    ) == 5
 
 
 def test_negative_samples_deterministic_and_bounded(spark):

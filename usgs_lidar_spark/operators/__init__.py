@@ -50,12 +50,10 @@ from usgs_lidar_spark.operators.textquality import (  # noqa: F401
 )
 from usgs_lidar_spark.operators.similarity import (  # noqa: F401
     cosine_range_search,
-    cosine_range_search_lsh,
     cosine_topk_bruteforce,
     cosine_topk_lsh,
     embed_moments,
     embed_standardize,
-    ivf_sq8_topk,
     append_to_ivf_index,
     ivf_topk_from_index,
     read_ivf_centroids,

@@ -1,39 +1,228 @@
 """Similarity search over embedding columns (ArrayType(FloatType)).
 
 North-star extension (SURVEY.md §2 "Extension operators"): brute-force
-cosine top-k as the exact baseline; deterministic sign-LSH (single- and
-multi-probe) and IVF (inverted-file, coarse-quantizer cells) as the
-scale paths.
+cosine top-k as the exact baseline; deterministic sign-LSH (Hamming
+radius 0, 1 or 2) and IVF (inverted-file, coarse-quantizer cells) as the
+scale paths; PQ and SQ8 as the compressed-domain tiers.
+
+Every search is one filter-and-refine composition of three stages:
+  * **candidates** — which (query, corpus) pairs are scored: all pairs
+    (`_candidates` with no key), sign-LSH bucket probes
+    (`_lsh_candidates`), or IVF probe cells (`_ivf_probes`, over the
+    corpus in memory or a stored cell-partitioned index via
+    `_probed_cells`). The corpus side joins broadcast
+    (query_id, __qvec, __qnorm) rows and self-pairs are dropped;
+  * **score** — the zero-norm-guarded rounded cosine (`_cosine_sim`,
+    over the full vector or the SQ8 reconstruction), or the PQ ADC
+    lookup-table sum (`_adc_topk`);
+  * **select** — the (score, id) window top-k (`_topk`), the range
+    threshold, or the majority vote (`_majority`, itself a top-1).
 
 Scale design (100 TB of vectors):
-  * brute force is a broadcast of the (small) query set against the corpus
-    — embarrassingly parallel, no shuffle until the per-query top-k
-    (which is a partial TopK per partition + tiny final merge);
-  * the LSH variant buckets both sides by sign-bit hash so each query only
-    scans its bucket — the equi-join on bucket id replaces the cross
-    product; `cosine_topk_lsh_multiprobe` recovers near-boundary recall
-    by probing all Hamming-1 neighbor buckets;
-  * the IVF variant assigns each corpus vector to its nearest coarse
-    centroid with no shuffle of the corpus: small quantizers (k <= 64)
-    unroll into literal expressions, large ones ride a one-row broadcast
-    as DATA so the plan stays O(1) in k (see `_with_centroid_sims`);
-    queries probe their n_probe nearest cells, and the cell equi-join
-    replaces the cross product. `kmeans_train_centroids` improves the
-    centroids with exact Lloyd steps (`kmeans_step_exact`);
+  * the query set is the small, broadcast side — no shuffle until the
+    per-query top-k (a partial TopK per partition + tiny final merge);
+    the LSH bucket and IVF cell equi-joins replace the cross product;
+  * IVF assigns each corpus vector to its nearest coarse centroid with
+    no shuffle of the corpus: small quantizers (k <= 64) unroll into
+    literal expressions, large ones ride a one-row broadcast as DATA so
+    the plan stays O(1) in k (see `_with_centroid_sims`).
+    `kmeans_train_centroids` improves the centroids with exact Lloyd
+    steps (`kmeans_step_exact`);
   * dot products run as zip_with/aggregate higher-order expressions —
-    JVM-side, no Python — keeping every default path oracle-comparable;
-  * `pq_encode`/`pq_adc_topk`/`ivf_pq_topk` add the compressed-domain
-    tier: map-side code assignment, broadcast ADC LUTs, and the IVF-PQ
-    composition that touches full vectors exactly once.
+    JVM-side, no Python — keeping every default path oracle-comparable.
 """
 
 from __future__ import annotations
+
+from itertools import combinations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from usgs_lidar_spark.functions.spread import spread_for_kernel
-from usgs_lidar_spark.functions.vectors import sign_lsh_bucket
+from usgs_lidar_spark.functions.vectors import dot, norm, sign_lsh_bucket
+
+
+# ---------------------------------------------------------------------
+# The three search stages: candidates -> score -> select
+# ---------------------------------------------------------------------
+
+
+def _query_rows(id_col: str, vec_col: str) -> list:
+    """The broadcast query row: (id, __qvec, __qnorm) — each query's norm
+    once, not once per pair."""
+    return [
+        F.col(id_col), F.col(vec_col).alias("__qvec"), norm(vec_col).alias("__qnorm")
+    ]
+
+
+def _candidates(
+    cside: DataFrame,
+    qside: DataFrame,
+    key: str | None,
+    id_col: str,
+    query_id_col: str,
+    cvec: str,
+) -> DataFrame:
+    """Candidate stage: the corpus side, with the norm of its scored
+    vector ``cvec`` as ``__cnorm``, joined to the broadcast query rows —
+    every pair (``key`` None) or an equi-join on a bucket / cell key —
+    with self-pairs dropped. Probe keys are pairwise distinct per query,
+    so a corpus vector meets a query at most once."""
+    cn = cside.withColumn("__cnorm", norm(cvec))
+    q = F.broadcast(qside)
+    joined = cn.crossJoin(q) if key is None else cn.join(q, key)
+    return joined.filter(F.col(query_id_col) != F.col(id_col))
+
+
+def _lsh_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    n_bits: int,
+    hamming: int,
+) -> DataFrame:
+    """Sign-LSH candidates: the corpus keyed by its home bucket, each query
+    probing ``home XOR mask`` for every mask of at most ``hamming`` set
+    bits (1 + n_bits + C(n_bits, 2) probes at radius 2)."""
+    masks = [
+        sum(1 << b for b in bits)
+        for r in range(hamming + 1)
+        for bits in combinations(range(n_bits), r)
+    ]
+    # Explode the LITERAL mask array, then xor the home bucket once per
+    # exploded row — not explode([home^m for m in masks]): that form
+    # inlines one full copy of the n_bits-term bucket expression PER MASK
+    # into the Generate node's codegen (37 copies at Hamming-2), which
+    # overflows janino's method-size limit and silently drops the whole
+    # subtree to interpreted execution (observed as "ERROR CodeGenerator:
+    # Failed to compile" in the r6 replica).
+    qb = queries.select(
+        *_query_rows(query_id_col, vec_col),
+        F.explode(
+            F.array(*[F.lit(m).cast("long") for m in masks])
+        ).alias("__mask"),
+    ).select(
+        F.col(query_id_col),
+        "__qvec",
+        "__qnorm",
+        sign_lsh_bucket("__qvec", n_bits)
+        .bitwiseXOR(F.col("__mask"))
+        .alias("__bucket"),
+    )
+    cb = corpus.withColumn("__bucket", sign_lsh_bucket(vec_col, n_bits))
+    return _candidates(cb, qb, "__bucket", id_col, query_id_col, vec_col)
+
+
+def _ivf_probes(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list[tuple[int, list[float]]],
+    n_probe: int,
+    round_digits: int,
+    method: str = "auto",
+    with_vec: bool = True,
+) -> DataFrame:
+    """IVF candidates, probe side: one row per (row of ``df``, probed cell
+    ``__cid``) for its ``n_probe`` nearest cells — the centroid-sim
+    structs sorted descending (ties to the lower cid), sliced and
+    exploded. Rows carry (id, __qvec, __qnorm), or only the id when
+    ``with_vec`` is False (ADC scoring needs no vector)."""
+    qdf, sims, _tmp = _with_centroid_sims(
+        df, centroids, vec_col, round_digits, method
+    )  # _tmp (if any) is discarded by the narrowing select below
+    probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
+    head = _query_rows(id_col, vec_col) if with_vec else [F.col(id_col)]
+    keep = [id_col, "__qvec", "__qnorm"] if with_vec else [id_col]
+    return qdf.select(*head, F.explode(probes).alias("__p")).select(
+        *keep, (-F.col("__p.negcid")).alias("__cid")
+    )
+
+
+def _probed_cells(spark, path: str, probes: DataFrame) -> DataFrame:
+    """IVF candidates, stored side: the cell-partitioned index at ``path``
+    restricted to the UNION OF PROBED CELLS with a literal isin() —
+    partition pruning then skips every other cell's directory at plan
+    time. The probed-cell set is collected driver-side; it is bounded by
+    n_queries * n_probe (queries are the small side by contract)."""
+    from usgs_lidar_spark.operators.retrieval import _read_with_schema_fallback
+
+    cells = sorted(
+        {int(r["__cid"]) for r in probes.select("__cid").distinct().collect()}
+    )
+    return (
+        _read_with_schema_fallback(spark, path)
+        # `or [-1]`: zero queries -> zero probed cells; isin() needs a
+        # non-empty list, and no partition is cid=-1.
+        .filter(F.col("cid").isin(cells or [-1]))
+        .withColumnRenamed("cid", "__cid")
+    )
+
+
+def _cosine_sim(cvec: str, round_digits: int) -> F.Column:
+    """Score stage: rounded cosine of ``cvec`` against ``__qvec`` over the
+    precomputed ``__cnorm``/``__qnorm``, 0 when either norm is 0 (rounding
+    pins cross-engine comparability)."""
+    raw = F.when(
+        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
+    ).otherwise(dot(cvec, "__qvec") / (F.col("__cnorm") * F.col("__qnorm")))
+    return F.round(raw, round_digits)
+
+
+def _topk(
+    scored: DataFrame, part_col: str, score: F.Column, id_col: str, k: int
+) -> DataFrame:
+    """Select stage: per-``part_col`` window top-k on (``score``, id ASC) —
+    the id breaks ties, so the k boundary is deterministic across
+    engines. Adds a BIGINT ``rank``."""
+    w = Window.partitionBy(part_col).orderBy(score, F.col(id_col).asc())
+    return scored.withColumn(
+        "rank", F.row_number().over(w).cast("long")
+    ).filter(F.col("rank") <= k)
+
+
+def _cosine_topk(
+    cands: DataFrame,
+    cvec: str,
+    id_col: str,
+    query_id_col: str,
+    k: int,
+    round_digits: int,
+    keep: list | None = None,
+) -> DataFrame:
+    """Score + select: rounded cosine as ``sim``, (sim DESC, id ASC)
+    top-k per query, projected to ``keep`` — by default the search
+    output (query_id, neighbor_id, sim, rank)."""
+    scored = cands.withColumn("sim", _cosine_sim(cvec, round_digits))
+    top = _topk(scored, query_id_col, F.col("sim").desc(), id_col, k)
+    return top.select(
+        *(keep or [query_id_col, F.col(id_col).alias("neighbor_id"), "sim", "rank"])
+    )
+
+
+def _majority(neighbors: DataFrame, part_col: str, label_col: str) -> DataFrame:
+    """Select stage, majority vote: each neighbor row votes once for its
+    ``label_col``; the winner per ``part_col`` is the (votes DESC, label
+    ASC) top-1 — integer votes and total-order ties, so it hash-matches
+    any engine. Carries n_votes, the winning label's MAX rounded sim
+    (top_sim — order-independent, unlike a mean) and n_considered (all
+    votes of the row)."""
+    votes = neighbors.groupBy(part_col, label_col).agg(
+        F.count(F.lit(1)).alias("n_votes"),
+        F.max("sim").alias("top_sim"),
+    )
+    votes = votes.withColumn(
+        "n_considered", F.sum("n_votes").over(Window.partitionBy(part_col))
+    )
+    return _topk(votes, part_col, F.col("n_votes").desc(), label_col, 1)
+
+
+# ---------------------------------------------------------------------
+# Search entry points: compositions of the stages
+# ---------------------------------------------------------------------
 
 
 def cosine_topk_bruteforce(
@@ -48,95 +237,9 @@ def cosine_topk_bruteforce(
     """Exact top-k by cosine: broadcast queries x corpus, per-query window
     top-k. Ranking uses (rounded cosine DESC, corpus id ASC) so ties at
     the k boundary are deterministic across engines."""
-    # Norms precomputed per side (once per vector, not once per pair) —
-    # the arithmetic is identical to inline cosine (same expressions over
-    # the same doubles), so oracle parity is unaffected while the HOF work
-    # per pair drops to the dot product alone.
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
-    cn = corpus.withColumn("__cnorm", norm(vec_col))
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-    )
-    joined = cn.crossJoin(F.broadcast(q)).filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(dot(vec_col, "__qvec") / (F.col("__cnorm") * F.col("__qnorm")))
-    sim = F.round(raw, round_digits)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        joined.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, F.col(id_col).alias("neighbor_id"), "sim", "rank")
-    )
-
-
-def _lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    flip_masks: list[int],
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    k: int,
-    n_bits: int,
-    round_digits: int,
-) -> DataFrame:
-    """Shared sign-LSH top-k kernel: corpus keyed by its home bucket, each
-    query probing ``home XOR mask`` for every mask in ``flip_masks``
-    (pairwise-distinct probes => a corpus vector meets a query at most
-    once), exact rounded cosine within the probed buckets, per-query
-    window top-k with the module's (sim DESC, id ASC) tie contract. The
-    three public variants differ ONLY in the mask list."""
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
-    cb = corpus.withColumn("__bucket", sign_lsh_bucket(vec_col, n_bits)).withColumn(
-        "__cnorm", norm(vec_col)
-    )
-    # Explode the LITERAL mask array, then xor the home bucket once per
-    # exploded row — not explode([home^m for m in masks]): that form
-    # inlines one full copy of the n_bits-term bucket expression PER MASK
-    # into the Generate node's codegen (37 copies at Hamming-2), which
-    # overflows janino's method-size limit and silently drops the whole
-    # subtree to interpreted execution (observed as "ERROR CodeGenerator:
-    # Failed to compile" in the r6 replica).
-    qb = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-        F.explode(
-            F.array(*[F.lit(m).cast("long") for m in flip_masks])
-        ).alias("__mask"),
-    ).select(
-        F.col(query_id_col),
-        "__qvec",
-        "__qnorm",
-        sign_lsh_bucket("__qvec", n_bits)
-        .bitwiseXOR(F.col("__mask"))
-        .alias("__bucket"),
-    )
-    joined = cb.join(F.broadcast(qb), "__bucket").filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(dot(vec_col, "__qvec") / (F.col("__cnorm") * F.col("__qnorm")))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        joined.withColumn("sim", F.round(raw, round_digits))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, F.col(id_col).alias("neighbor_id"), "sim", "rank")
-    )
+    q = queries.select(*_query_rows(query_id_col, vec_col))
+    cands = _candidates(corpus, q, None, id_col, query_id_col, vec_col)
+    return _cosine_topk(cands, vec_col, id_col, query_id_col, k, round_digits)
 
 
 def cosine_topk_lsh(
@@ -148,47 +251,23 @@ def cosine_topk_lsh(
     k: int = 5,
     n_bits: int = 8,
     round_digits: int = 4,
+    hamming: int = 0,
 ) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's sign-LSH
-    bucket (axis-aligned hyperplanes — deterministic, no seed), then exact
-    cosine within the bucket. The bucket equi-join replaces the cross
-    product; at 2^n_bits buckets each probe scans ~1/2^n_bits of the
-    corpus."""
-    return _lsh_topk(
-        corpus, queries, [0], id_col, vec_col, query_id_col, k, n_bits,
-        round_digits,
-    )
-
-
-def cosine_topk_lsh_multiprobe(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 5,
-    n_bits: int = 8,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Multi-probe sign-LSH ANN: each query probes its own bucket PLUS
-    every 1-bit-flip neighbor bucket (all buckets within Hamming
-    distance 1 — the recall fix for near-boundary vectors that
-    single-probe ``cosine_topk_lsh`` trades away).
+    """Approximate top-k: candidates restricted to the sign-LSH buckets
+    within Hamming distance ``hamming`` of the query's own bucket
+    (axis-aligned hyperplanes — deterministic, no seed), then exact
+    cosine within them. The bucket equi-join replaces the cross product.
 
     Cost model at scale: the corpus side is untouched (one bucket per
-    vector, same equi-join); only the query side multiplies by
-    (n_bits + 1) probe rows, so each query scans ~(n_bits+1)/2^n_bits of
-    the corpus — at n_bits=8 that is ~3.5% instead of single-probe's
-    ~0.4%, for Hamming-1-complete recall. Probe buckets are pairwise
-    distinct, so a corpus vector meets a query at most once — no
-    dedup step. Wider probing (Hamming 2) is the same rewrite with
-    flip-pair probes.
-    """
-    masks = [0] + [1 << j for j in range(n_bits)]
-    return _lsh_topk(
-        corpus, queries, masks, id_col, vec_col, query_id_col, k, n_bits,
-        round_digits,
+    vector); only the query side multiplies, by 1 probe row at radius 0,
+    n_bits + 1 at radius 1 and 1 + n_bits + C(n_bits, 2) at radius 2 —
+    at n_bits=8 each query scans ~0.4%, ~3.5% or ~14% of the corpus.
+    Each radius retrieves a superset of the smaller one's candidates:
+    the recall fix for near-boundary vectors."""
+    cands = _lsh_candidates(
+        corpus, queries, id_col, vec_col, query_id_col, n_bits, hamming
     )
+    return _cosine_topk(cands, vec_col, id_col, query_id_col, k, round_digits)
 
 
 def _py_norm(vec: list[float]) -> float:
@@ -342,8 +421,6 @@ def _with_centroid_sims(
         return df, _centroid_sims(vec_col, centroids, round_digits), None
     if method != "broadcast":
         raise ValueError(f"unknown centroid-sims method: {method!r}")
-
-    from usgs_lidar_spark.functions.vectors import dot, norm
 
     spark = df.sparkSession
     tmp = "__cents"
@@ -820,8 +897,6 @@ def ivf_assign_two_level(
     downstream consumer (`semdedup_flags`, `semdedup_append_flags`,
     `ivf_append`) accepts the DataFrame form through `ivf_assign`'s
     dispatch."""
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
     if coarse is None:
         coarse = derive_coarse_quantizer(centroids_df, cid_col, cvec_col)
     n_probe = max(1, min(int(n_probe_coarse), len(coarse)))
@@ -944,7 +1019,7 @@ def semdedup_flags(
     (`sign_lsh_bucket`, ``sub_bits`` sign bits — the same seedless,
     oracle-reproducible hash every LSH path here uses), and candidate
     pairs within a hot cell are restricted to buckets within HAMMING
-    DISTANCE <= 1 — the multiprobe rewrite of `_lsh_topk`: the b side
+    DISTANCE <= 1 — the `_lsh_candidates` rewrite at radius 1: the b side
     keeps its home bucket, the a side explodes sub_bits+1
     pairwise-distinct probe masks (home, home^bit_j), so each pair
     still meets at most once and the per-hot-cell cost drops from
@@ -987,8 +1062,6 @@ def semdedup_flags(
     mirrored EXACTLY by the SQL oracle of `dedup_semdedup_repcollapse`,
     keeping the relaxed decision hash-stable cross-engine.
     """
-    from usgs_lidar_spark.functions.vectors import dot, norm, sign_lsh_bucket
-
     # Per-row norm is computed ONCE here and carried through the
     # self-join: the pairwise cosine then costs one dot fold per pair
     # instead of three (dot + both norms re-derived per pair) — a ~3x
@@ -1042,7 +1115,7 @@ def semdedup_flags(
             ]
         )
         # a side: explode the literal mask array once, xor once (the
-        # _lsh_topk codegen-size rule) — non-hot rows explode a
+        # _lsh_candidates codegen-size rule) — non-hot rows explode a
         # single zero mask, and -1 ^ 0 == -1 keeps their key intact.
         a = (
             assigned.withColumn(
@@ -1179,8 +1252,6 @@ def semdedup_append_flags(
     default ``max_cell_size=None`` is the exact path, where batch-wise
     == one-shot unconditionally.
     """
-    from usgs_lidar_spark.functions.vectors import dot, norm, sign_lsh_bucket
-
     def _sel(df: DataFrame) -> DataFrame:
         cols = [
             F.col(id_col).alias("__id"),
@@ -1548,8 +1619,6 @@ def semantic_contamination(
     default column shapes. ``"expr"`` forces the packed-expression
     plan (the only strategy for a distributed quantizer or a
     non-broadcastable bench)."""
-    from usgs_lidar_spark.functions.vectors import dot, norm, sign_lsh_bucket
-
     if impl not in ("auto", "expr"):
         raise ValueError(f"unknown semantic_contamination impl: {impl!r}")
     if (
@@ -2050,49 +2119,32 @@ def ivf_topk(
     round_digits: int = 4,
     method: str = "auto",
 ) -> DataFrame:
-    """IVF ANN top-k: corpus vectors live in their nearest-centroid cell;
-    each query probes its `n_probe` nearest cells and ranks exact cosine
-    within them. The cell equi-join replaces the cross product — each
-    query touches ~n_probe/k of the corpus. Deterministic end to end:
-    cell assignment and probe order break ties on centroid id, the final
-    rank on (rounded sim DESC, corpus id ASC). ``method`` picks the
-    quantizer strategy on both sides (see `_with_centroid_sims`): at real
-    quantizer sizes the broadcast path keeps the plan O(1) in k."""
-    from usgs_lidar_spark.functions.vectors import dot, norm
+    """IVF ANN top-k: each query ranks exact cosine within its `n_probe`
+    nearest cells, touching ~n_probe/k of the corpus; probing every cell
+    equals `cosine_topk_bruteforce`. Cell assignment and probe order break
+    ties on centroid id. ``method`` picks the quantizer strategy on both
+    sides (see `_with_centroid_sims`)."""
+    cells = ivf_assign(corpus, centroids, vec_col, round_digits, method)
+    qb = _ivf_probes(
+        queries, query_id_col, vec_col, centroids, n_probe, round_digits,
+        method,
+    )
+    cands = _candidates(cells, qb, "__cid", id_col, query_id_col, vec_col)
+    return _cosine_topk(cands, vec_col, id_col, query_id_col, k, round_digits)
 
-    cb = ivf_assign(corpus, centroids, vec_col, round_digits, method).withColumn(
-        "__cnorm", norm(vec_col)
-    )
-    # Query side: sort the centroid-sim structs descending, take n_probe,
-    # explode into one probe row per cell. Probe cells are pairwise
-    # distinct, so a corpus vector meets a query at most once.
-    qdf, sims, _qtmp = _with_centroid_sims(
-        queries, centroids, vec_col, round_digits, method
-    )  # _qtmp (if any) is discarded by the narrowing select below
-    probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
-    qb = qdf.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-        F.explode(probes).alias("__p"),
-    ).select(
-        query_id_col, "__qvec", "__qnorm", (-F.col("__p.negcid")).alias("__cid")
-    )
-    joined = cb.join(F.broadcast(qb), "__cid").filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(dot(vec_col, "__qvec") / (F.col("__cnorm") * F.col("__qnorm")))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        joined.withColumn("sim", F.round(raw, round_digits))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, F.col(id_col).alias("neighbor_id"), "sim", "rank")
-    )
+
+#: Sidecar schemas of the stored indexes, shared by writer and reader so
+#: a read declares its schema and starts no inference job.
+_CENTROIDS_SCHEMA = "cid bigint, cvec array<double>"
+_CODEBOOKS_SCHEMA = "j int, code int, cvec array<double>"
+
+
+def _write_centroids(spark, centroids, path: str) -> None:
+    """The coarse quantizer as the index's `_centroids` sidecar."""
+    spark.createDataFrame(
+        [(int(c), [float(x) for x in v]) for c, v in centroids],
+        _CENTROIDS_SCHEMA,
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids")
 
 
 def write_ivf_index(
@@ -2121,10 +2173,7 @@ def write_ivf_index(
     # schema sidecar: an EMPTY corpus writes no cell files; readers
     # reconstruct the empty frame from this (empty-index bootstrap).
     _write_schema_sidecar(cells, path)
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in centroids],
-        "cid bigint, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids")
+    _write_centroids(spark, centroids, path)
 
 
 def append_to_ivf_index(
@@ -2152,10 +2201,13 @@ def append_to_ivf_index(
 
 def read_ivf_centroids(spark, path: str) -> list[tuple[int, list[float]]]:
     """The quantizer sidecar back as the driver-side centroid list
-    (k rows — kilobytes by contract), sorted by cid."""
+    (k rows — kilobytes by contract), sorted by cid. One job: the
+    declared schema skips inference."""
     return sorted(
         (int(r["cid"]), list(r["cvec"]))
-        for r in spark.read.parquet(f"{path}/_centroids").collect()
+        for r in spark.read.schema(_CENTROIDS_SCHEMA)
+        .parquet(f"{path}/_centroids")
+        .collect()
     )
 
 
@@ -2170,57 +2222,18 @@ def ivf_topk_from_index(
     n_probe: int = 2,
     round_digits: int = 4,
 ) -> DataFrame:
-    """`ivf_topk` against a `write_ivf_index` dataset: identical ranking
-    contract (parity test-pinned), but the corpus side is the stored
-    cell-partitioned layout restricted to the UNION OF PROBED CELLS with
-    a literal isin() — Spark's partition pruning then skips every other
-    cell's directory at plan time (asserted via inputFiles in the test).
-    The probed-cell set is collected driver-side; it is bounded by
-    n_queries * n_probe, and the query side is small by the module's
-    contract (queries broadcast against the corpus)."""
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
+    """`ivf_topk` served from a `write_ivf_index` dataset pruned to the
+    probed cells' directories (`_probed_cells`); same rows (test-pinned).
+    Construction runs four jobs: the `_centroids` sidecar collect, the
+    probed-cell collect (its distinct runs as two) and the index listing
+    (the read's parquet-footer schema job)."""
     centroids = read_ivf_centroids(spark, path)
-    qdf, sims, _qtmp = _with_centroid_sims(queries, centroids, vec_col, round_digits)
-    probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
-    qb = qdf.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-        F.explode(probes).alias("__p"),
-    ).select(
-        query_id_col, "__qvec", "__qnorm", (-F.col("__p.negcid")).alias("__cid")
+    qb = _ivf_probes(
+        queries, query_id_col, vec_col, centroids, n_probe, round_digits
     )
-    from usgs_lidar_spark.operators.retrieval import (
-        _read_with_schema_fallback,
-    )
-
-    cells = sorted(
-        {int(r["__cid"]) for r in qb.select("__cid").distinct().collect()}
-    )
-    cb = (
-        _read_with_schema_fallback(spark, path)
-        # `or [-1]`: zero queries -> zero probed cells; isin() needs a
-        # non-empty list, and no partition is cid=-1.
-        .filter(F.col("cid").isin(cells or [-1]))
-        .withColumnRenamed("cid", "__cid")
-        .withColumn("__cnorm", norm(vec_col))
-    )
-    joined = cb.join(F.broadcast(qb), "__cid").filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(dot(vec_col, "__qvec") / (F.col("__cnorm") * F.col("__qnorm")))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        joined.withColumn("sim", F.round(raw, round_digits))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, F.col(id_col).alias("neighbor_id"), "sim", "rank")
-    )
+    cells = _probed_cells(spark, path, qb)
+    cands = _candidates(cells, qb, "__cid", id_col, query_id_col, vec_col)
+    return _cosine_topk(cands, vec_col, id_col, query_id_col, k, round_digits)
 
 
 def recall_at_k(
@@ -2374,21 +2387,45 @@ def _pq_lut(
     )
 
 
-def _adc_rank(scored: DataFrame, query_id_col: str, k: int) -> DataFrame:
-    """Final ADC ranking: (adc_scaled ASC, neighbor_id ASC) window top-k,
-    descaling the fixed-point sum into adc_dist."""
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_scaled").asc(), F.col("neighbor_id").asc()
+def _adc_topk(
+    codes: DataFrame,
+    qcells: DataFrame | None,
+    lut: DataFrame,
+    id_col: str,
+    query_id_col: str,
+    k: int,
+) -> DataFrame:
+    """Candidates + score + select over PQ codes: each row's ``pq_codes``
+    explode to (neighbor_id, [__cid,] j, code) rows that meet the
+    broadcast LUT for every pair, or, given IVF probe rows ``qcells``,
+    for the pairs whose cell a query probes. The ADC distance is the
+    partial-aggregated scaled-BIGINT sum per (query, neighbor) —
+    partition-order-independent, oracle-exact; top-k on (adc ASC,
+    neighbor_id ASC), descaled into adc_dist."""
+    codes = codes.select(
+        F.col(id_col).alias("neighbor_id"),
+        *([] if qcells is None else ["__cid"]),
+        F.posexplode("pq_codes").alias("j", "code"),
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            (F.col("adc_scaled") / float(_ADC_SCALE)).alias("adc_dist"),
-            F.col("rank").cast("long").alias("rank"),
+    self_pair = F.col("neighbor_id") != F.col(query_id_col)
+    if qcells is None:
+        pairs = codes.join(F.broadcast(lut), ["j", "code"]).filter(self_pair)
+    else:
+        pairs = (
+            codes.join(F.broadcast(qcells), "__cid")
+            .filter(self_pair)
+            .join(F.broadcast(lut), [query_id_col, "j", "code"])
         )
+    scored = pairs.groupBy(query_id_col, "neighbor_id").agg(
+        F.sum("d_scaled").alias("adc_scaled")
+    )
+    return _topk(
+        scored, query_id_col, F.col("adc_scaled").asc(), "neighbor_id", k
+    ).select(
+        query_id_col,
+        "neighbor_id",
+        (F.col("adc_scaled") / float(_ADC_SCALE)).alias("adc_dist"),
+        "rank",
     )
 
 
@@ -2400,114 +2437,30 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     k: int = 5,
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: per-query lookup tables
-    (query-slice -> each code's squared distance) replace all full-vector
-    arithmetic on the corpus side.
-
-    Plan: encode corpus (map-side), posexplode codes to (id, j, code);
-    LUT = queries x codebook entries (tiny: nq * n_sub * n_codes rows,
-    broadcast); equi-join on (j, code); partial-aggregated sum keyed by
-    (query, id); window top-k. The corpus-side shuffle carries code ids
-    and scaled-long partial sums only — never vectors. Distances sum as
-    scaled BIGINTs (each term carries 4 decimals) so the total is
-    partition-order-independent and oracle-exact.
-    """
-    lut = _pq_lut(queries, codebooks, query_id_col, vec_col)
-    codes = pq_encode(corpus, codebooks, vec_col=vec_col)
-    exploded = codes.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.posexplode("pq_codes").alias("j", "code"),
-    )
-    scored = (
-        exploded.join(F.broadcast(lut), ["j", "code"])
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
-        .groupBy(query_id_col, "neighbor_id")
-        .agg(F.sum("d_scaled").alias("adc_scaled"))
-    )
-    return _adc_rank(scored, query_id_col, k)
-
-
-def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[list[tuple[int, list[float]]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 5,
+    centroids: list[tuple[int, list[float]]] | None = None,
     n_probe: int = 2,
     round_digits: int = 4,
 ) -> DataFrame:
-    """IVF-PQ: the canonical billion-scale ANN composition — the coarse
-    quantizer restricts each query to ~n_probe/n_cells of the corpus, and
-    ranking inside the probed cells runs in the COMPRESSED domain
-    (asymmetric distance over PQ codes), so full vectors are touched
-    exactly once, at encode time.
+    """Asymmetric-distance top-k over PQ codes: per-query lookup tables
+    (query-slice -> each code's squared distance; nq * n_sub * n_codes
+    rows, broadcast) replace all full-vector arithmetic on the corpus
+    side, whose shuffle carries code ids and scaled-long partial sums
+    only — never vectors.
 
-    Corpus side is entirely map-side (cell assignment + code argmin in
-    the scan stage); query cells and LUTs broadcast; the only shuffle
-    carries (query, neighbor, scaled-long partial sums). With n_probe =
-    n_cells this degrades gracefully to exhaustive pq_adc_topk (pinned by
-    test)."""
-    enc = pq_encode(
-        ivf_assign(corpus, centroids, vec_col, round_digits),
-        codebooks,
-        vec_col=vec_col,
-    )
-    exploded = enc.select(
-        F.col(id_col).alias("neighbor_id"),
-        "__cid",
-        F.posexplode("pq_codes").alias("j", "code"),
-    )
-    qdf, sims, _qtmp = _with_centroid_sims(queries, centroids, vec_col, round_digits)
-    probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
-    qcells = qdf.select(
-        F.col(query_id_col), F.explode(probes).alias("__p")
-    ).select(query_id_col, (-F.col("__p.negcid")).alias("__cid"))
+    With ``centroids`` this is IVF-PQ, the canonical billion-scale ANN
+    composition: each query scores only its ``n_probe`` nearest cells,
+    so full vectors are touched exactly once, at encode time. Probing
+    every cell equals the exhaustive search (pinned by test)."""
+    qcells = None
+    if centroids is not None:
+        corpus = ivf_assign(corpus, centroids, vec_col, round_digits)
+        qcells = _ivf_probes(
+            queries, query_id_col, vec_col, centroids, n_probe, round_digits,
+            with_vec=False,
+        )
+    codes = pq_encode(corpus, codebooks, vec_col=vec_col)
     lut = _pq_lut(queries, codebooks, query_id_col, vec_col)
-    scored = (
-        exploded.join(F.broadcast(qcells), "__cid")
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
-        .join(F.broadcast(lut), [query_id_col, "j", "code"])
-        .groupBy(query_id_col, "neighbor_id")
-        .agg(F.sum("d_scaled").alias("adc_scaled"))
-    )
-    return _adc_rank(scored, query_id_col, k)
-
-
-def cosine_topk_lsh_multiprobe2(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 5,
-    n_bits: int = 8,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Hamming-2 multi-probe sign-LSH ANN: probe the home bucket, every
-    1-bit flip, and every 2-bit flip — the next rung of the recall ladder
-    promised in cosine_topk_lsh_multiprobe's docstring.
-
-    Probe count is 1 + n_bits + C(n_bits,2) (37 at n_bits=8), so each
-    query scans ~37/256 of the corpus; the corpus side is still one
-    bucket per vector with the same equi-join, and probes remain pairwise
-    distinct so no dedup step is needed."""
-    masks = (
-        [0]
-        + [1 << j for j in range(n_bits)]
-        + [
-            (1 << i) | (1 << j)
-            for i in range(n_bits)
-            for j in range(i + 1, n_bits)
-        ]
-    )
-    return _lsh_topk(
-        corpus, queries, masks, id_col, vec_col, query_id_col, k, n_bits,
-        round_digits,
-    )
+    return _adc_topk(codes, qcells, lut, id_col, query_id_col, k)
 
 
 def cosine_range_search(
@@ -2518,84 +2471,27 @@ def cosine_range_search(
     query_id_col: str = "query_id",
     threshold: float = 0.3,
     round_digits: int = 4,
+    n_bits: int | None = None,
 ) -> DataFrame:
-    """Exact range search: every (query, corpus) pair with rounded cosine
-    >= threshold. The retrieval dual of top-k — "all semantic duplicates
-    above tau", the shape a dedup or retrieval-augmentation pipeline asks
-    when k is unknowable in advance.
+    """Range search: every (query, corpus) pair with rounded cosine
+    >= threshold — "all semantic duplicates above tau", the retrieval
+    dual of top-k for when k is unknowable. No window stage: the corpus
+    never shuffles and each partition emits only its over-threshold
+    pairs, so the output bounds what moves.
 
-    Scale contract (same as cosine_topk_bruteforce): the QUERY side is
-    small and broadcast; the corpus never shuffles — each partition
-    emits only its over-threshold pairs, so the output (not the
-    corpus) bounds what moves. There is no window stage at all: range
-    search is embarrassingly parallel, strictly cheaper than top-k.
-    """
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
-    cn = corpus.withColumn("__cnorm", norm(vec_col))
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-    )
-    joined = cn.crossJoin(F.broadcast(q)).filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(dot(vec_col, "__qvec") / (F.col("__cnorm") * F.col("__qnorm")))
+    ``n_bits`` None scores every pair (exact). With ``n_bits`` the
+    candidates are the sign-LSH buckets within Hamming distance 1 of the
+    query's (`cosine_topk_lsh` at ``hamming=1``): the miss set is exactly
+    the over-threshold pairs whose buckets differ in >= 2 sign bits."""
+    if n_bits is None:
+        q = queries.select(*_query_rows(query_id_col, vec_col))
+        cands = _candidates(corpus, q, None, id_col, query_id_col, vec_col)
+    else:
+        cands = _lsh_candidates(
+            corpus, queries, id_col, vec_col, query_id_col, n_bits, 1
+        )
     return (
-        joined.withColumn("sim", F.round(raw, round_digits))
-        .filter(F.col("sim") >= threshold)
-        .select(query_id_col, F.col(id_col).alias("neighbor_id"), "sim")
-    )
-
-
-def cosine_range_search_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    threshold: float = 0.3,
-    n_bits: int = 8,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Approximate range search: candidates from the multi-probe sign-LSH
-    bucket join (home bucket + every Hamming-1 neighbor, the same probe
-    set as cosine_topk_lsh_multiprobe), exact rounded cosine and the
-    threshold filter within the probed buckets only.
-
-    At scale each query touches ~(n_bits+1)/2^n_bits of the corpus
-    instead of all of it; the miss set is exactly the over-threshold
-    pairs whose buckets differ in >= 2 sign bits (recall measurable
-    against cosine_range_search on a sample). Probe buckets are
-    pairwise distinct so no pair is emitted twice — no dedup stage.
-    """
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
-    cb = corpus.withColumn(
-        "__bucket", sign_lsh_bucket(vec_col, n_bits)
-    ).withColumn("__cnorm", norm(vec_col))
-    home = sign_lsh_bucket(vec_col, n_bits)
-    masks = [0] + [1 << j for j in range(n_bits)]
-    probes = F.array(
-        *[home.bitwiseXOR(F.lit(m).cast("long")) for m in masks]
-    )
-    qb = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        F.explode(probes).alias("__bucket"),
-        norm(vec_col).alias("__qnorm"),
-    )
-    joined = cb.join(F.broadcast(qb), "__bucket").filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(dot(vec_col, "__qvec") / (F.col("__cnorm") * F.col("__qnorm")))
-    return (
-        joined.withColumn("sim", F.round(raw, round_digits))
+        cands.withColumn("sim", _cosine_sim(vec_col, round_digits))
         .filter(F.col("sim") >= threshold)
         .select(query_id_col, F.col(id_col).alias("neighbor_id"), "sim")
     )
@@ -2698,56 +2594,43 @@ def sq8_topk(
     k: int = 5,
     rerank: int = 0,
     round_digits: int = 4,
+    centroids: list[tuple[int, list[float]]] | None = None,
+    n_probe: int = 2,
 ) -> DataFrame:
     """Top-k by cosine over SQ8-RECONSTRUCTED corpus vectors (asymmetric:
-    queries stay full-precision), optional exact re-rank of the top
-    ``rerank`` candidates.
+    queries stay full-precision); encode + reconstruct are map-side
+    expressions over the corpus scan. With rerank=R (0 or >= k), the
+    R-row short list per query joins back to full vectors by id and the
+    final order uses exact cosine: recall lost to quantization comes
+    back while full vectors are touched only for the short list.
 
-    Plan shape: encode + reconstruct are map-side expressions over the
-    corpus partition (at rest only the byte codes need storing — the
-    recon norm is derivable once at encode time); the broadcast query set
-    makes candidate scoring shuffle-free; the only shuffle is the
-    per-query window top-k over scored rows. With rerank=R, the R-row
-    short list per query joins back to full vectors by id — nq*R rows,
-    broadcast — and the final order uses exact cosine; recall lost to
-    quantization is recovered while full vectors are touched only for
-    the short list (the SQ8 memory story survives).
-    """
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
-    recon = sq8_encode(corpus, mins, scales, vec_col).withColumn(
+    With ``centroids`` this is IVF-SQ8: each query scores only its
+    ``n_probe`` nearest cells (the `ivf_topk` candidates) — at rest the
+    index is cells + 1 byte/dim codes."""
+    if 0 < rerank < k:
+        raise ValueError(
+            f"sq8_topk: rerank={rerank} < k={k} would return only {rerank} "
+            "rows per query; pass rerank=0 or rerank >= k"
+        )
+    if centroids is None:
+        cells, key = corpus, None
+        qside = queries.select(*_query_rows(query_id_col, vec_col))
+    else:
+        cells, key = ivf_assign(corpus, centroids, vec_col, round_digits), "__cid"
+        qside = _ivf_probes(
+            queries, query_id_col, vec_col, centroids, n_probe, round_digits
+        )
+    recon = sq8_encode(cells, mins, scales, vec_col).withColumn(
         "__recon", _sq8_recon_expr("sq8_codes", mins, scales)
     )
-    cn = recon.withColumn("__cnorm", norm("__recon"))
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-    )
-    joined = cn.crossJoin(F.broadcast(q)).filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(
-        dot("__recon", "__qvec") / (F.col("__cnorm") * F.col("__qnorm"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    scored = (
-        joined.withColumn("sim", F.round(raw, round_digits))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-    )
+    cands = _candidates(recon, qside, key, id_col, query_id_col, "__recon")
     if not rerank:
-        return scored.filter(F.col("rank") <= k).select(
-            query_id_col, F.col(id_col).alias("neighbor_id"), "sim", "rank"
+        return _cosine_topk(
+            cands, "__recon", id_col, query_id_col, k, round_digits
         )
-    shortlist = scored.filter(F.col("rank") <= rerank).select(
-        query_id_col,
-        F.col(id_col).alias("neighbor_id"),
-        F.col("__qvec"),
-        F.col("__qnorm"),
+    shortlist = _cosine_topk(
+        cands, "__recon", id_col, query_id_col, rerank, round_digits,
+        [query_id_col, F.col(id_col).alias("neighbor_id"), "__qvec", "__qnorm"],
     )
     full = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -2755,19 +2638,8 @@ def sq8_topk(
         norm(vec_col).alias("__cnorm"),
     )
     exact = shortlist.join(full, "neighbor_id")
-    raw2 = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(
-        dot("__cvec", "__qvec") / (F.col("__cnorm") * F.col("__qnorm"))
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("sim", F.round(raw2, round_digits))
-        .withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
+    return _cosine_topk(
+        exact, "__cvec", "neighbor_id", query_id_col, k, round_digits
     )
 
 
@@ -2812,97 +2684,6 @@ def sq8_clip_metrics(
             "clip_rate",
             (F.col("n_below") + F.col("n_above")).cast("double") / F.col("n").cast("double"),
         )
-    )
-
-
-def ivf_sq8_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    mins: list[float],
-    scales: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 5,
-    n_probe: int = 2,
-    round_digits: int = 4,
-    rerank: int = 0,
-) -> DataFrame:
-    """IVF-SQ8: coarse-cell restriction (each query probes its n_probe
-    nearest cells — the ivf_topk rewrite of the cross product) with
-    SQ8-compressed scoring inside the probed cells (cosine over
-    bucket-midpoint reconstructions — the sq8_topk kernel). Completes
-    the compression matrix next to ivf_pq_topk: at rest the index is
-    cells + 1 byte/dim codes; full vectors are touched only by the
-    optional exact re-rank short list (nq * rerank rows).
-
-    Everything stays map-side until the per-query top-k window: cell
-    assignment and SQ8 encode/reconstruct ride the corpus scan, probe
-    rows broadcast. Deterministic under any partitioning (same tie
-    contracts as both parents)."""
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
-    cb = ivf_assign(corpus, centroids, vec_col, round_digits)
-    cb = (
-        sq8_encode(cb, mins, scales, vec_col)
-        .withColumn("__recon", _sq8_recon_expr("sq8_codes", mins, scales))
-        .withColumn("__cnorm", norm("__recon"))
-    )
-    qdf, sims, _qtmp = _with_centroid_sims(queries, centroids, vec_col, round_digits)
-    probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
-    qb = qdf.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        norm(vec_col).alias("__qnorm"),
-        F.explode(probes).alias("__p"),
-    ).select(
-        query_id_col, "__qvec", "__qnorm", (-F.col("__p.negcid")).alias("__cid")
-    )
-    joined = cb.join(F.broadcast(qb), "__cid").filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(
-        dot("__recon", "__qvec") / (F.col("__cnorm") * F.col("__qnorm"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    scored = (
-        joined.withColumn("sim", F.round(raw, round_digits))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-    )
-    if not rerank:
-        return scored.filter(F.col("rank") <= k).select(
-            query_id_col, F.col(id_col).alias("neighbor_id"), "sim", "rank"
-        )
-    shortlist = scored.filter(F.col("rank") <= rerank).select(
-        query_id_col,
-        F.col(id_col).alias("neighbor_id"),
-        "__qvec",
-        "__qnorm",
-    )
-    full = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(vec_col).alias("__cnorm"),
-    )
-    exact = shortlist.join(full, "neighbor_id")
-    raw2 = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__qnorm") == 0), F.lit(0.0)
-    ).otherwise(
-        dot("__cvec", "__qvec") / (F.col("__cnorm") * F.col("__qnorm"))
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("sim", F.round(raw2, round_digits))
-        .withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "sim", "rank")
     )
 
 
@@ -3010,26 +2791,26 @@ def write_ivf_pq_index(
     )
     cells.write.mode("overwrite").partitionBy("cid").parquet(path)
     _write_schema_sidecar(cells, path)
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in centroids],
-        "cid bigint, cvec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids")
+    _write_centroids(spark, centroids, path)
     spark.createDataFrame(
         [
             (j, int(c), [float(x) for x in v])
             for j, cb in enumerate(codebooks)
             for c, v in cb
         ],
-        "j int, code int, cvec array<double>",
+        _CODEBOOKS_SCHEMA,
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_codebooks")
 
 
 def read_pq_codebooks(spark, path: str) -> list[list[tuple[int, list[float]]]]:
     """The `_codebooks` sidecar back as pq_encode's list-of-subspace
-    structure (n_sub * n_codes rows — kilobytes by contract)."""
+    structure (n_sub * n_codes rows — kilobytes by contract). One job:
+    the declared schema skips inference."""
     rows = sorted(
         (int(r["j"]), int(r["code"]), list(r["cvec"]))
-        for r in spark.read.parquet(f"{path}/_codebooks").collect()
+        for r in spark.read.schema(_CODEBOOKS_SCHEMA)
+        .parquet(f"{path}/_codebooks")
+        .collect()
     )
     n_sub = max(j for j, _, _ in rows) + 1
     return [
@@ -3048,47 +2829,23 @@ def ivf_pq_topk_from_index(
     n_probe: int = 2,
     round_digits: int = 4,
 ) -> DataFrame:
-    """`ivf_pq_topk` served from a `write_ivf_pq_index` dataset: the
-    probe prunes to its cells' partition directories AND the pruned
-    scan reads PQ codes only — no corpus vector is ever read or
-    re-encoded at serve time. Identical ranking contract to the
-    in-memory composition (same centroids/codebooks => same codes =>
-    same ADC sums; parity test-pinned). The LUT is rebuilt per query
-    batch from the codebook sidecar — kilobytes of driver math, the
-    standard ADC serving cost."""
-    from usgs_lidar_spark.operators.retrieval import (
-        _read_with_schema_fallback,
-    )
-
+    """IVF-PQ (`pq_adc_topk` with centroids) served from a
+    `write_ivf_pq_index` dataset: the probe prunes to its cells'
+    partition directories (`_probed_cells`) and the pruned scan reads PQ
+    codes only — no corpus vector is read at serve time. Same rows as
+    the in-memory composition (test-pinned). Construction runs five
+    jobs: the `_centroids` and `_codebooks` sidecar collects, the
+    probed-cell collect (its distinct runs as two) and the index
+    listing (the read's parquet-footer schema job)."""
     centroids = read_ivf_centroids(spark, path)
     codebooks = read_pq_codebooks(spark, path)
-    qdf, sims, _qtmp = _with_centroid_sims(queries, centroids, vec_col, round_digits)
-    probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
-    qcells = qdf.select(
-        F.col(query_id_col), F.explode(probes).alias("__p")
-    ).select(query_id_col, (-F.col("__p.negcid")).alias("__cid"))
-    cells = sorted(
-        {int(r["__cid"]) for r in qcells.select("__cid").distinct().collect()}
+    qcells = _ivf_probes(
+        queries, query_id_col, vec_col, centroids, n_probe, round_digits,
+        with_vec=False,
     )
-    exploded = (
-        _read_with_schema_fallback(spark, path)
-        .filter(F.col("cid").isin(cells or [-1]))
-        .withColumnRenamed("cid", "__cid")
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            "__cid",
-            F.posexplode("pq_codes").alias("j", "code"),
-        )
-    )
+    codes = _probed_cells(spark, path, qcells)
     lut = _pq_lut(queries, codebooks, query_id_col, vec_col)
-    scored = (
-        exploded.join(F.broadcast(qcells), "__cid")
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
-        .join(F.broadcast(lut), [query_id_col, "j", "code"])
-        .groupBy(query_id_col, "neighbor_id")
-        .agg(F.sum("d_scaled").alias("adc_scaled"))
-    )
-    return _adc_rank(scored, query_id_col, k)
+    return _adc_topk(codes, qcells, lut, id_col, query_id_col, k)
 
 
 def append_to_ivf_pq_index(
@@ -3132,41 +2889,21 @@ def knn_classify(
 ) -> DataFrame:
     """k-NN majority-vote classification over exact cosine neighbors —
     the standard embedding-quality probe (does the representation
-    cluster by label?) run as a query over the corpus itself.
-
-    Neighbors come from `cosine_topk_bruteforce` (broadcast queries,
-    per-query window top-k, self excluded); each neighbor contributes
-    one vote for its label and the prediction is the (votes DESC,
-    label ASC) winner — deterministic ties, integer votes, so the
-    result hash-matches any engine. Scale shape: the vote join attaches
-    labels to nq*k neighbor rows (never the corpus), the vote aggregate
-    and argmax window are nq*|labels|-bounded. Returns
-    (query_id_col, pred_label, n_votes)."""
+    cluster by label?) run as a query over the corpus itself: the
+    `cosine_topk_bruteforce` neighbors (self excluded) vote by
+    `_majority`. The label join touches nq*k neighbor rows, never the
+    corpus. Returns (query_id_col, pred_label, n_votes)."""
     nb = cosine_topk_bruteforce(
         corpus, queries, id_col, vec_col, query_id_col, k, round_digits
     )
-    votes = (
-        nb.join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(label_col).alias("__nl"),
-            ),
-            "neighbor_id",
-        )
-        .groupBy(query_id_col, "__nl")
-        .agg(F.count(F.lit(1)).alias("__votes"))
+    labels = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(label_col).alias("__nl")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__votes").desc(), F.col("__nl").asc()
-    )
-    return (
-        votes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            query_id_col,
-            F.col("__nl").alias("pred_label"),
-            F.col("__votes").cast("long").alias("n_votes"),
-        )
+    votes = _majority(nb.join(labels, "neighbor_id"), query_id_col, "__nl")
+    return votes.select(
+        query_id_col,
+        F.col("__nl").alias("pred_label"),
+        "n_votes",
     )
 
 
@@ -3407,54 +3144,29 @@ def hard_negative_mining(
     round_digits: int = 4,
 ) -> DataFrame:
     """Contrastive-training HARD-NEGATIVE mining: for each anchor, the
-    top-k most-similar corpus vectors with a DIFFERENT label — the
-    pairs that sit closest to the decision boundary, which is what
-    embedding-model training actually wants batched against each anchor
-    (random negatives are trivially separable; hard negatives carry the
-    gradient). Same plan shape and determinism contract as
-    `cosine_topk_bruteforce` (broadcast anchors x one corpus scan —
-    map-side, no all-pairs shuffle; ranking on (rounded sim DESC, id
-    ASC)), plus the label-mismatch predicate and both labels in the
-    output for audit. Self-pairs are excluded by id; rows with a NULL
-    label on either side are excluded (an unlabeled vector can't be
-    certified a negative — the strict-verify stance). At corpus scale
-    the anchor set is the bounded side (a training batch, not the
-    corpus); for anchor sets too large to broadcast, mine per
+    top-k most-similar corpus vectors with a DIFFERENT label — the pairs
+    closest to the decision boundary, which carry the gradient (random
+    negatives are trivially separable). `cosine_topk_bruteforce` with
+    anchors as the broadcast queries, plus the label-mismatch predicate
+    and both labels in the output for audit. Rows with a NULL label on
+    either side are excluded (an unlabeled vector can't be certified a
+    negative). For anchor sets too large to broadcast, mine per
     IVF-probed cell instead (`ivf_topk` with the same predicate)."""
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
-    cn = corpus.select(
+    negs = corpus.select(
         F.col(id_col).alias("neg_id"),
-        F.col(vec_col).alias("__cvec"),
+        F.col(vec_col),
         F.col(label_col).alias("neg_label"),
-        norm(vec_col).alias("__cnorm"),
     ).filter(F.col("neg_label").isNotNull())
     a = anchors.select(
-        F.col(anchor_id_col),
-        F.col(vec_col).alias("__avec"),
+        *_query_rows(anchor_id_col, vec_col),
         F.col(label_col).alias("anchor_label"),
-        norm(vec_col).alias("__anorm"),
     ).filter(F.col("anchor_label").isNotNull())
-    joined = cn.crossJoin(F.broadcast(a)).filter(
-        (F.col("neg_id") != F.col(anchor_id_col))
-        & (F.col("neg_label") != F.col("anchor_label"))
-    )
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__anorm") == 0), F.lit(0.0)
-    ).otherwise(
-        dot("__cvec", "__avec") / (F.col("__cnorm") * F.col("__anorm"))
-    )
-    w = Window.partitionBy(anchor_id_col).orderBy(
-        F.col("sim").desc(), F.col("neg_id").asc()
-    )
-    return (
-        joined.withColumn("sim", F.round(raw, round_digits))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(
-            anchor_id_col, "anchor_label", "neg_id", "neg_label",
-            "sim", "rank",
-        )
+    cands = _candidates(
+        negs, a, None, "neg_id", anchor_id_col, vec_col
+    ).filter(F.col("neg_label") != F.col("anchor_label"))
+    return _cosine_topk(
+        cands, vec_col, "neg_id", anchor_id_col, k, round_digits,
+        [anchor_id_col, "anchor_label", "neg_id", "neg_label", "sim", "rank"],
     )
 
 
@@ -3670,7 +3382,6 @@ def knn_label_vote(
     bit (pinned by
     `test_knn_label_vote_arrow_expr_parity`). ``"expr"`` keeps the
     pure-JVM expression form."""
-    from usgs_lidar_spark.functions.vectors import norm
 
     s = seeds.filter(F.col(label_col).isNotNull())
     if impl == "arrow":
@@ -3809,28 +3520,19 @@ def knn_label_vote_ivf(
     round_digits: int = 4,
     min_frac: float | None = None,
 ) -> DataFrame:
-    """`knn_label_vote`'s documented fallback, made concrete: the kNN
-    majority-vote label gate for seed sets past the one-broadcast-array
-    budget. Seeds live in their nearest-centroid cell (`ivf_assign` —
-    map-side, no seed shuffle beyond the one cell-keyed exchange);
-    each corpus row probes its ``n_probe`` nearest cells and votes over
-    the top-k most-similar seeds WITHIN them — the `ivf_topk` plan
-    with the sides' roles swapped (there the query side is bounded and
-    broadcast; here the corpus is the unbounded probe side, so the
-    cell join is a plain equi-join both sides shuffle by cell, the
-    corpus n_probe times). The per-corpus-row top-k runs as a window
-    with a WindowGroupLimit partial pass, so the id-keyed exchange
-    carries O(corpus x k) (id, label, sim) tuples — the honest cost of
-    the unbounded-seed regime; vectors cross the cell join only.
+    """`knn_label_vote` for seed sets past the one-broadcast-array
+    budget: seeds live in their nearest-centroid cell, and each corpus
+    row votes (`_majority`) over the top-k most-similar seeds within its
+    ``n_probe`` nearest cells — the `ivf_topk` plan with the sides'
+    roles swapped, so the cell join is a plain equi-join both sides
+    shuffle by cell. The per-row top-k runs with a WindowGroupLimit
+    partial pass: the id-keyed exchange carries O(corpus x k) (id,
+    label, sim) tuples; vectors cross the cell join only.
 
     Same vote semantics, tie-breaks, output schema, and ``min_frac``
-    gate as `knn_label_vote`, with one approximation by design:
-    neighbors outside the probed cells are invisible (n_considered
-    counts probed seeds only), the standard IVF recall trade —
-    exactly-equal results whenever every true top-k seed lands in a
-    probed cell."""
-    from usgs_lidar_spark.functions.vectors import dot, norm
-
+    gate as `knn_label_vote`, except that seeds outside the probed
+    cells are invisible (n_considered counts probed seeds only) — equal
+    results whenever every true top-k seed lands in a probed cell."""
     sb = ivf_assign(
         seeds.filter(F.col(label_col).isNotNull()),
         centroids, vec_col, round_digits,
@@ -3839,57 +3541,25 @@ def knn_label_vote_ivf(
         F.col(id_col).alias("__sid"),
         F.col(label_col).alias("__slabel"),
         F.col(vec_col).alias("__svec"),
-        norm(vec_col).alias("__snorm"),
-    )
-    cdf, sims, _tmp = _with_centroid_sims(
-        corpus, centroids, vec_col, round_digits, "auto"
-    )
-    probes = F.slice(F.sort_array(sims, asc=False), 1, n_probe)
-    cq = cdf.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__cvec"),
         norm(vec_col).alias("__cnorm"),
-        F.explode(probes).alias("__p"),
-    ).select(
-        id_col, "__cvec", "__cnorm", (-F.col("__p.negcid")).alias("__cid")
     )
+    # The corpus rows are the probing side here, and unbounded: a plain
+    # cell equi-join, not `_candidates`' broadcast of the query rows.
+    cq = _ivf_probes(corpus, id_col, vec_col, centroids, n_probe, round_digits)
     joined = cq.join(sb, "__cid").filter(F.col(id_col) != F.col("__sid"))
-    raw = F.when(
-        (F.col("__cnorm") == 0) | (F.col("__snorm") == 0), F.lit(0.0)
-    ).otherwise(
-        dot("__cvec", "__svec") / (F.col("__cnorm") * F.col("__snorm"))
+    topk = _cosine_topk(
+        joined, "__svec", "__sid", id_col, k, round_digits,
+        [id_col, "__slabel", "sim"],
     )
-    w_top = Window.partitionBy(id_col).orderBy(
-        F.col("sim").desc(), F.col("__sid").asc()
-    )
-    topk = (
-        joined.withColumn("sim", F.round(raw, round_digits))
-        .withColumn("__rk", F.row_number().over(w_top))
-        .filter(F.col("__rk") <= k)
-        .select(id_col, "__slabel", "sim")
-    )
-    votes = topk.groupBy(id_col, "__slabel").agg(
-        F.count(F.lit(1)).alias("n_votes"),
-        F.max("sim").alias("top_sim"),
-    )
-    w_tot = Window.partitionBy(id_col)
-    w_maj = Window.partitionBy(id_col).orderBy(
-        F.col("n_votes").desc(), F.col("__slabel").asc()
-    )
-    out = (
-        votes.withColumn("n_considered", F.sum("n_votes").over(w_tot))
-        .withColumn("__mrk", F.row_number().over(w_maj))
-        .filter(F.col("__mrk") == 1)
-        .select(
-            id_col,
-            F.col("__slabel").alias("pred_label"),
-            "n_votes",
-            "n_considered",
-            (
-                F.col("n_votes").cast("double") / F.col("n_considered")
-            ).alias("vote_frac"),
-            "top_sim",
-        )
+    out = _majority(topk, id_col, "__slabel").select(
+        id_col,
+        F.col("__slabel").alias("pred_label"),
+        "n_votes",
+        "n_considered",
+        (F.col("n_votes").cast("double") / F.col("n_considered")).alias(
+            "vote_frac"
+        ),
+        "top_sim",
     )
     if min_frac is not None:
         out = out.filter(F.col("vote_frac") >= F.lit(min_frac))

@@ -259,15 +259,15 @@ def sim_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe ANN: each query probes its sign-LSH bucket plus all
     1-bit-flip neighbors (Hamming<=1 complete). The oracle joins on
     bit_count(xor(bucket_a, bucket_b)) <= 1 — exactly the probe set."""
-    from usgs_lidar_spark.operators.similarity import cosine_topk_lsh_multiprobe
+    from usgs_lidar_spark.operators.similarity import cosine_topk_lsh
 
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return cosine_topk_lsh_multiprobe(
+    return cosine_topk_lsh(
         emb, queries_df, id_col="vec_id", vec_col="embedding",
-        query_id_col="query_id", k=5, n_bits=8,
+        query_id_col="query_id", k=5, n_bits=8, hamming=1,
     )
 
 
@@ -687,7 +687,7 @@ def sim_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact in binary, so recall is hash-safe."""
     from usgs_lidar_spark.operators.similarity import (
         cosine_topk_bruteforce,
-        cosine_topk_lsh_multiprobe,
+        cosine_topk_lsh,
         ivf_topk,
         recall_at_k,
     )
@@ -700,9 +700,9 @@ def sim_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, queries_df, id_col="vec_id", vec_col="embedding",
         query_id_col="query_id", k=5,
     )
-    mp = cosine_topk_lsh_multiprobe(
+    mp = cosine_topk_lsh(
         emb, queries_df, id_col="vec_id", vec_col="embedding",
-        query_id_col="query_id", k=5, n_bits=8,
+        query_id_col="query_id", k=5, n_bits=8, hamming=1,
     )
     # `or` placeholder: on an EMPTY corpus there are no seeds; a 1-dim
     # zero centroid lets the plan still build (nothing executes over an
@@ -1325,7 +1325,7 @@ def sim_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance, same codebooks as sim_pq_adc_topk). Full vectors are read
     exactly once, at encode time; the canonical billion-scale layout."""
     from usgs_lidar_spark.operators.similarity import (
-        ivf_pq_topk,
+        pq_adc_topk,
         pq_codebooks_from_rows,
     )
 
@@ -1340,10 +1340,10 @@ def sim_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivf_pq_topk(
-        emb, queries_df, cents, pq_codebooks_from_rows(seeds, n_sub=4),
+    return pq_adc_topk(
+        emb, queries_df, pq_codebooks_from_rows(seeds, n_sub=4),
         id_col="vec_id", vec_col="embedding", query_id_col="query_id",
-        k=5, n_probe=2,
+        k=5, centroids=cents, n_probe=2,
     )
 
 
@@ -1903,15 +1903,15 @@ def sim_topk_lsh_multiprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ladder (home + 1-bit + 2-bit flip buckets = 37/256 of the corpus per
     query). The oracle joins on bit_count(xor) <= 2 — exactly the probe
     set."""
-    from usgs_lidar_spark.operators.similarity import cosine_topk_lsh_multiprobe2
+    from usgs_lidar_spark.operators.similarity import cosine_topk_lsh
 
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return cosine_topk_lsh_multiprobe2(
+    return cosine_topk_lsh(
         emb, queries_df, id_col="vec_id", vec_col="embedding",
-        query_id_col="query_id", k=5, n_bits=8,
+        query_id_col="query_id", k=5, n_bits=8, hamming=2,
     )
 
 

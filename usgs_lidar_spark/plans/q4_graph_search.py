@@ -101,13 +101,13 @@ def sim_range_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale. Oracle replays the identical probe set via
     bit_count(xor()) <= 1, so this pins the bucketed path exactly (its
     recall vs sim_range_search is visible as the row-count delta)."""
-    from usgs_lidar_spark.operators.similarity import cosine_range_search_lsh
+    from usgs_lidar_spark.operators.similarity import cosine_range_search
 
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return cosine_range_search_lsh(
+    return cosine_range_search(
         emb, queries_df, id_col="vec_id", vec_col="embedding",
         query_id_col="query_id", threshold=0.30, n_bits=8,
     )
@@ -919,7 +919,7 @@ def sim_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     the byte-code sibling of sim_topk_ivf_pq. Oracle replays cell
     assignment, probe selection, quantization, and the rounded-cosine
     ranking end to end."""
-    from usgs_lidar_spark.operators.similarity import ivf_sq8_topk, sq8_bounds
+    from usgs_lidar_spark.operators.similarity import sq8_bounds, sq8_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     seeds = [
@@ -930,9 +930,9 @@ def sim_topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivf_sq8_topk(
-        emb, queries_df, seeds, mins, scales, id_col="vec_id",
-        vec_col="embedding", query_id_col="query_id", k=5, n_probe=2,
+    return sq8_topk(
+        emb, queries_df, mins, scales, id_col="vec_id", vec_col="embedding",
+        query_id_col="query_id", k=5, centroids=seeds, n_probe=2,
     )
 
 
